@@ -1,5 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, size}
+import scala.collection.immutable.ListMap
+import scala.reflect.runtime.universe.TypeTag
+
+import graft.engine.LHJson
+import graft.operators.Similarity
+import graft.util.Sessions
 
 object Bench {
 
@@ -10,42 +17,19 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Measurement-knob guard: these env vars change GATED query
-    // semantics (round counts) for BenchOne/Verify sweep experiments;
+    // Measurement-knob guard: these decade-scale levers change how
+    // GATED queries run (GC between rounds, compressed cached blocks);
     // a full Bench with one still exported would time the altered
-    // plans against frozen floors measured at the gate anchors and
-    // report a bogus regression with nothing in the artifact saying
-    // why. Fail fast instead — sweeps belong in BenchOne.
-    val knobs = Seq("SPARK_GRAFT_BPE_ROUNDS", "SPARK_GRAFT_LPA_ROUNDS",
-      "SPARK_GRAFT_ROUND_GC", "SPARK_GRAFT_RDD_COMPRESS")
+    // plans against frozen floors measured without them and report a
+    // bogus regression with nothing in the artifact saying why.
+    val knobs = Seq("SPARK_GRAFT_ROUND_GC", "SPARK_GRAFT_RDD_COMPRESS")
       .filter(sys.env.contains)
     require(knobs.isEmpty,
       s"refusing full Bench with measurement knob(s) set: " +
-        s"${knobs.mkString(", ")} — unset them (sweeps use BenchOne)")
+        s"${knobs.mkString(", ")} — unset them (decade runs time " +
+        "single keys with SPARK_GRAFT_BENCH_ONLY)")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Partitions scale with DATA, cores with the box (see BenchOne /
-    // SCALING.md round-5 triage); default ties them for the driver's
-    // sf0.1 run, scale-replica runs override.
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The default codegen class cache (100 entries, static conf)
-      // thrashes under a 91-query bench: the suite generates several
-      // hundred distinct codegen units, so by the time a rep re-runs a
-      // query its compiled classes were evicted and the rep re-pays
-      // 50-200 ms of Janino compilation — fixed overhead that lands on
-      // sub-second queries as 1.3-1.7× "regressions" (measured,
-      // BASELINE.md round-12 triage). A long-lived server would hold
-      // its working set compiled; size the cache like one.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     // Untimed warmup: run EVERY query once on the smallest SF. The
     // first execution of each plan family pays JIT/classloading/codegen
     // compilation (measured: m6 cold 10.3 s vs 4.0 s warm), and warming
@@ -60,7 +44,7 @@ object Bench {
     // Optional subset (comma-separated names, or name! to EXCLUDE):
     // applies to warmup AND timing — the bisect knob for isolating
     // cross-query JVM interference inside the full-bench context.
-    val only: Map[String, (SparkSession, String) => org.apache.spark.sql.DataFrame] =
+    val only: Map[String, (SparkSession, String) => DataFrame] =
       sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
         case None => SparkEntry.queries
         case Some(spec) =>
@@ -139,7 +123,7 @@ object Bench {
     val samples = scala.collection.mutable.Map[String, List[Double]]()
       .withDefaultValue(Nil)
     val repErrs = scala.collection.mutable.Map[String, String]()
-    def runRep(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
+    def runRep(name: String, fn: (SparkSession, String) => DataFrame): Unit = {
       // Gate-run measurement honesty (round-17): a key with a
       // registered pre-rep reset must re-pay its memoized work every
       // timed rep (e.g. text_bpe_train's merge memo exists so encode
@@ -169,20 +153,10 @@ object Bench {
         val err = repErrs.get(name)
         (name, if (ok.nonEmpty && err.isEmpty) ok.min else -1.0, err)
       }
-    def jsonStr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
     val results = timed.collect { case (k, v, None) => k -> v }
     val errors = timed.collect { case (k, _, Some(e)) => k -> e }
-    val errorsJson = errors
-      .map { case (k, e) => s"\"" + k + "\":" + jsonStr(e) }
-      .mkString("{", ",", "}")
-    val erroredJson = errors.map(_._1).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val errorsJson = LHJson.render(ListMap.from(errors))
+    val erroredJson = LHJson.render(errors.map(_._1).sorted)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
@@ -197,8 +171,7 @@ object Bench {
     val vsFrozen = ratios
       .map { case (k, r) => s"\"" + k + "\":" + f"$r%.2f" }
       .mkString("{", ",", "}")
-    val over2x = ratios.filter(_._2 > 2.0).map(_._1).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val over2x = LHJson.render(ratios.filter(_._2 > 2.0).map(_._1).sorted)
     // Aggregate ratio over the INTERSECTION with the frozen table on
     // BOTH sides — queries added since the freeze are excluded from the
     // numerator too (they'd otherwise inflate the aggregate), and
@@ -210,9 +183,8 @@ object Bench {
     val totalRatio =
       if (frozenTotal > 0) f"${frozenMatched.map(_._2).sum / frozenTotal}%.3f"
       else "null"
-    val unfrozen = results.map(_._1)
-      .filterNot(FrozenBaseline.sec.contains).sorted
-      .map("\"" + _ + "\"").mkString("[", ",", "]")
+    val unfrozen = LHJson.render(results.map(_._1)
+      .filterNot(FrozenBaseline.sec.contains).sorted)
     // Approximate-path quality, tracked per round alongside speed.
     // Two recalls, because they answer different questions:
     //  - corpus: fraction of brute-force (exact) top-k pairs the LSH
@@ -224,16 +196,18 @@ object Bench {
     //    true near-duplicates (cos > 0.999), the same construction as
     //    the recall spec — the number that matters for near-dup search.
     // All collects are <= queries x k rows, bounded at any corpus size.
-    def pairsOf(name: String) =
-      try Some(only(name)(spark, sfDir)
-        .select("query_id", "neighbor_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet)
-      catch { case _: Throwable => None }
-    val exactPairs = pairsOf("ann_brute_force_topk")
-    def corpusRecall(name: String): Double =
-      (for { exact <- exactPairs; approx <- pairsOf(name) }
+    def pairSet(df: DataFrame): Set[(Long, Long)] =
+      df.select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    def pairs(df: => DataFrame): Option[Set[(Long, Long)]] =
+      try Some(pairSet(df)) catch { case _: Throwable => None }
+    val exactPairs = pairs(only("ann_brute_force_topk")(spark, sfDir))
+    def recallVsExact(approx: Option[Set[(Long, Long)]]): Double =
+      (for { exact <- exactPairs; a <- approx }
         yield if (exact.isEmpty) 1.0
-          else (exact & approx).size.toDouble / exact.size).getOrElse(-1.0)
+          else (exact & a).size.toDouble / exact.size).getOrElse(-1.0)
+    def corpusRecall(name: String): Double =
+      recallVsExact(pairs(only(name)(spark, sfDir)))
     val recallCorpus = corpusRecall("ann_lsh_topk")
     val recallIvfCorpus = corpusRecall("ann_ivf_topk")
     // IVF recall/cost CURVE: corpus recall vs brute force and wall time
@@ -244,38 +218,44 @@ object Bench {
     val ivfCurve = if (!only.contains("ann_ivf_topk")) "{}"
     else Seq(1, 2, 4).map { np =>
       val t0 = System.nanoTime()
-      val pairs =
-        try Some(graft.operators.Similarity.ivfTopKAt(spark, sfDir, np)
-          .select("query_id", "neighbor_id").collect()
-          .map(r => (r.getLong(0), r.getLong(1))).toSet)
-        catch { case _: Throwable => None }
+      val found = pairs(Similarity.ivfTopKAt(spark, sfDir, np))
       val sec = (System.nanoTime() - t0) / 1e9
-      val rec = (for { exact <- exactPairs; approx <- pairs }
-        yield if (exact.isEmpty) 1.0
-          else (exact & approx).size.toDouble / exact.size).getOrElse(-1.0)
-      s""""nprobe_$np":{"recall":$rec,"sec":$sec}"""
+      s""""nprobe_$np":{"recall":${recallVsExact(found)},"sec":$sec}"""
     }.mkString("{", ",", "}")
-    // skipped under a BENCH_ONLY bisect that excludes the LSH family —
-    // same no-out-of-subset-work rule as the IVF curve
-    val recallPlanted = if (!only.contains("ann_lsh_topk")) -1.0 else try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-      // collect ONLY the 10 query vectors (bounded at any corpus size)
-      val qvecs = corpus.filter(col("vec_id") < 10)
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
-      val dim = qvecs.head._2.length
-      val rnd = new scala.util.Random(42)
-      val twins = qvecs.map { case (id, v) =>
-        (1000000L + id, v.map(_ + rnd.nextGaussian() * 0.01))
-      }
-      val emb = corpus.union(twins.toSeq.toDF("vec_id", "v"))
-      val top1 = graft.operators.Similarity.lshTopKOn(emb, dim).collect()
-        .filter(_.getLong(1) == 1L).map(r => r.getLong(0) -> r.getLong(2)).toMap
-      qvecs.map(_._1).count(id =>
-        top1.get(id).contains(1000000L + id)).toDouble / qvecs.length
-    } catch { case _: Throwable => -1.0 }
+    // Planted-twin retrieval: each of the 10 query vectors (vec_id < 10)
+    // gets a twin 1,000,000 + id, perturbed by N(0, 0.01) noise drawn
+    // from `seed`, appended to the corpus (cos > 0.999); recall is the
+    // share of queries whose `search` pairs hold their twin. `vec` is
+    // the vector column as the method reads it, `perturb` adds the
+    // noise in that element type. -1 when a BENCH_ONLY bisect excludes
+    // `key` (same no-out-of-subset-work rule as the IVF curve) or on
+    // failure. Only the 10 query vectors are collected, so it is
+    // bounded at any corpus size.
+    def plantedTwinRecall[V: TypeTag](key: String, seed: Int, vec: Column)(
+        perturb: (V, scala.util.Random) => V)(
+        search: DataFrame => DataFrame): Double =
+      if (!only.contains(key)) -1.0 else try {
+        import spark.implicits._
+        val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          .select(col("vec_id"), vec)
+        val qvecs = corpus.filter(col("vec_id") < 10)
+          .as[(Long, V)].collect().sortBy(_._1)
+        val rnd = new scala.util.Random(seed)
+        val twins = qvecs.map { case (id, v) => (1000000L + id, perturb(v, rnd)) }
+        val found = pairSet(search(corpus.union(
+          twins.toSeq.toDF(corpus.columns.toSeq: _*))))
+        qvecs.count { case (id, _) => found.contains((id, 1000000L + id)) }
+          .toDouble / qvecs.length
+      } catch { case _: Throwable => -1.0 }
+    def floatNoise(v: Array[Float], rnd: scala.util.Random): Array[Float] =
+      v.map(x => x + rnd.nextGaussian().toFloat * 0.01f)
+    // LSH: top-1 only (rank 1 is unique per query)
+    val recallPlanted = plantedTwinRecall[Array[Double]]("ann_lsh_topk", 42,
+      col("embedding").cast("array<double>").as("v"))(
+      (v, rnd) => v.map(_ + rnd.nextGaussian() * 0.01)) { emb =>
+      val dim = emb.select(size(col("v"))).first().getInt(0)
+      Similarity.lshTopKOn(emb, dim).filter(col("rank") === 1)
+    }
     // PQ quality, reported with the same two-row structure as LSH:
     // planted-twin retrieval (the headline) + random-corpus overlap
     // (above the bucketed noise floor because ADC ranks globally, but
@@ -285,45 +265,11 @@ object Bench {
     // quantization), so its random-corpus overlap is a noise-floor
     // row; the headline is the planted-twin retrieval below
     val recallIvfPqCorpus = corpusRecall("ann_ivfpq_topk")
-    val recallIvfPqPlanted =
-      if (!only.contains("ann_ivfpq_topk")) -1.0 else try {
-        import spark.implicits._
-        import org.apache.spark.sql.functions._
-        val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
-          .select(col("vec_id"), col("embedding"))
-        val qvecs = corpus.filter(col("vec_id") < 10)
-          .as[(Long, Array[Float])].collect().sortBy(_._1)
-        val rnd = new scala.util.Random(44)
-        val twins = qvecs.map { case (id, v) =>
-          (1000000L + id, v.map(x => x + rnd.nextGaussian().toFloat * 0.01f))
-        }
-        val emb = corpus.union(twins.toSeq.toDF("vec_id", "embedding"))
-        val tops = graft.operators.Similarity.ivfpqTopKOn(emb).collect()
-          .map(r => r.getLong(0) -> r.getLong(2))
-          .groupBy(_._1).map { case (q, ns) => q -> ns.map(_._2).toSet }
-        qvecs.map(_._1).count(id =>
-          tops.getOrElse(id, Set.empty[Long]).contains(1000000L + id))
-          .toDouble / qvecs.length
-      } catch { case _: Throwable => -1.0 }
-    val recallPqPlanted = if (!only.contains("ann_pq_topk")) -1.0 else try {
-      import spark.implicits._
-      import org.apache.spark.sql.functions._
-      val corpus = spark.read.parquet(s"$sfDir/embeddings.parquet")
-        .select(col("vec_id"), col("embedding"))
-      val qvecs = corpus.filter(col("vec_id") < 10)
-        .as[(Long, Array[Float])].collect().sortBy(_._1)
-      val rnd = new scala.util.Random(43)
-      val twins = qvecs.map { case (id, v) =>
-        (1000000L + id, v.map(x => x + rnd.nextGaussian().toFloat * 0.01f))
-      }
-      val emb = corpus.union(twins.toSeq.toDF("vec_id", "embedding"))
-      val tops = graft.operators.Similarity.pqTopKOn(emb).collect()
-        .map(r => r.getLong(0) -> r.getLong(2))
-        .groupBy(_._1).map { case (q, ns) => q -> ns.map(_._2).toSet }
-      qvecs.map(_._1).count(id =>
-        tops.getOrElse(id, Set.empty[Long]).contains(1000000L + id))
-        .toDouble / qvecs.length
-    } catch { case _: Throwable => -1.0 }
+    val recallIvfPqPlanted = plantedTwinRecall[Array[Float]](
+      "ann_ivfpq_topk", 44, col("embedding"))(floatNoise)(
+      Similarity.ivfpqTopKOn)
+    val recallPqPlanted = plantedTwinRecall[Array[Float]](
+      "ann_pq_topk", 43, col("embedding"))(floatNoise)(Similarity.pqTopKOn)
     // Streaming startup/steady split (from the last timed rep of each
     // streaming query): firstBatchSec is checkpoint + state-store init
     // + streaming-plan compile — paid once per query LIFETIME, so ~0 on

@@ -2,8 +2,10 @@ package graft
 
 import scala.util.chaining._
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
+
+import graft.util.Sessions
 
 /** Scale-replica generator for benchmark scaling curves: writes a K×
   * copy of an input SF directory by replicating tables with shifted
@@ -72,15 +74,7 @@ object BenchScale {
     // membership, audited at 10× in SCALING.md round-17.)
     val nodeShift = sys.env.get("SPARK_GRAFT_KEY_SHIFT").contains("nodes")
     def ns(i: Int): Long = if (nodeShift) i * 10000000L else 0L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     import spark.implicits._
 
     if (only("orders")) {
@@ -187,7 +181,7 @@ object BenchScale {
       .select($"doc_id", $"text", $"lang", $"source", $"n_chars")
     (0 until k).map { i =>
       docs.as[(Long, String, String, String, Long)].map {
-        case (id, text, lang, source, n) =>
+        case (id, text, lang, source, _) =>
           val tagged = vocabX match {
             case Some(sN) =>
               text.split(' ').zipWithIndex.map { case (w, p) =>

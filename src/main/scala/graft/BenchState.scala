@@ -4,13 +4,13 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.ListMap
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine._
 import graft.engine.SpecBuilders._
 import graft.streaming.{Scheduler, SchedulerOut}
+import graft.util.Sessions
 
 /** State-VOLUME benchmark for the scheduler fold (VERDICT r14 item 6):
   * RocksDbStateSpec proves the RocksDB provider works; this main
@@ -52,15 +52,7 @@ object BenchState {
     val nRuns = args(0).toInt
     val provider = args(1)
     val batchSize = if (args.length > 2) args(2).toInt else 100000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.create()
     if (provider == "rocksdb") spark.conf.set(PROVIDER_CONF, ROCKSDB)
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -7,6 +7,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine.LHJson
 import graft.streaming.{GraftApi, MetadataStore, Scheduler}
+import graft.util.Sessions
 
 /** `lhctl`-shaped command-line client over [[graft.streaming.GraftApi]]
   * — the reference's CLI verb surface
@@ -114,7 +115,7 @@ object Ctl {
     * SURVEY §3.1). Blocks until `timeoutMs` (tests) or forever. */
   private def serve(spark: SparkSession, root: String,
       store: MetadataStore, timeoutMs: Option[Long],
-      withWorker: Boolean = false): String = {
+      withWorker: Boolean): String = {
     // stopServe is reset by the CALLER (repl, before spawning this
     // thread) — resetting here raced with repl `exit`: an exit issued
     // before serve() entered would have its stop flag clobbered back
@@ -228,15 +229,7 @@ object Ctl {
 
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Ctl <rootDir> <verb> [args...]")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     try {
       if (args(1) == "repl") repl(spark, args(0))
       else println(exec(spark, args(0), args.toSeq.drop(1)))

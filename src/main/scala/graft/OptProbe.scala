@@ -1,35 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+
+import graft.util.Sessions
 
 /** Optimization probe (round 19): time a query and attribute its wall
   * to STAGES — per completed stage, the wall between submission and
   * completion, summed executor task time, task count, and the stage
   * name (which names the operators at the shuffle boundary). This is
   * the no-UI stand-in for the Stages tab the optimization guide (§1.1,
-  * §7.1) starts from.
+  * §7.1) starts from. Each key's `explain("formatted")` plan (pushed
+  * filters, pruned schemas, broadcast joins, whole-stage codegen
+  * spans) is printed before its stage table.
   *
   * Usage: runMain graft.OptProbe <sfDir> <query> [query ...]
   * Env: SPARK_GRAFT_CPUS / SPARK_GRAFT_SHUFFLE_PARTITIONS as Bench.
-  * Each query runs twice: an untimed warmup on sf0.001 (plan/codegen
-  * warm, like Bench) and one timed run at sfDir with stage capture.
+  * Each query runs untimed three times (sf0.001 then twice at sfDir:
+  * plan/codegen and JIT warm, like Bench) and once timed at sfDir with
+  * stage capture; every run first applies the key's
+  * [[SparkEntry.benchPreRep]] reset, as Bench's timed reps do.
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.create()
     val stages = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, Long, Long, Int)]
     // per-task run times and shuffle-read bytes per stage (r20, guide
@@ -63,20 +57,19 @@ object OptProbe {
     }
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
+      val preRep = SparkEntry.benchPreRep.getOrElse(n, () => ())
       // warm the plan AND the JIT: tiny-SF warmup compiles codegen
       // classes but leaves hot loops un-C2'd; two untimed reps at the
       // probe SF bring the timed rep to Bench's min-of-N steady state
       (Seq("/root/testdata/sf0.001", sfDir, sfDir)).foreach { d =>
-        graft.operators.TextAnalysis.clearBpeMemo()
-        graft.operators.TextAnalysis.clearClsMemo()
-        graft.operators.TextAnalysis.clearUniMemo()
+        preRep()
         try BenchExec.materialize(fn(spark, d))
         catch { case e: Throwable =>
           System.err.println(s"[probe] warmup $n: ${e.getMessage}") }
       }
-      graft.operators.TextAnalysis.clearBpeMemo()
-      graft.operators.TextAnalysis.clearClsMemo()
-      graft.operators.TextAnalysis.clearUniMemo()
+      println(s"\n========== $n plan ==========")
+      fn(spark, sfDir).explain("formatted")
+      preRep()
       spark.sparkContext.addSparkListener(listener)
       stages.synchronized(stages.clear())
       taskTimes.synchronized(taskTimes.clear())

@@ -1,29 +1,44 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
+
+import graft.engine.LHJson
+import graft.util.Sessions
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. The last
+  * stdout line is one JSON object ([[summaryLine]]) the driver parses. */
 object Verify {
+
+  /** manifest.json: per key `{"ok":true}` or `{"ok":false,"err":…}`, in
+    * manifest order. Rendered by [[LHJson]], so a quote, tab or other
+    * control char in an error message cannot break the driver's
+    * json.load and silently zero the round's correctness. */
+  def manifestJson(manifest: Seq[(String, Option[String])]): String =
+    LHJson.render(ListMap.from(manifest.map {
+      case (k, None) => k -> ListMap("ok" -> true)
+      case (k, Some(e)) => k -> ListMap("ok" -> false, "err" -> e)
+    }))
+
+  /** The one-line verdict: key count, errored keys, manifest path. */
+  def summaryLine(
+      manifest: Seq[(String, Option[String])], manifestPath: String): String =
+    LHJson.render(ListMap(
+      "metric" -> "verify",
+      "queries" -> manifest.size,
+      "errored" -> manifest.collect { case (k, Some(_)) => k },
+      "manifest" -> manifestPath))
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     // optional 3rd arg: comma-separated query names (iteration aid —
     // the driver always runs the full set)
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(',').map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // partitions scale with DATA, cores with the box (the BenchOne
-    // rule) — replica-dir dumps for at-scale oracle replays need the
-    // override; the driver's gate run leaves both at defaults
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // replica-dir dumps for at-scale oracle replays raise
+    // SPARK_GRAFT_SHUFFLE_PARTITIONS; the driver's gate run leaves the
+    // defaults
+    val spark = Sessions.create()
     new java.io.File(outDir).mkdirs()
     // Self-owned manifest (round-10 post-mortem): one {ok|err} row PER
     // QUERY, including load-time failures, written even when a table
@@ -44,29 +59,11 @@ object Verify {
             .replaceAll("\\s+", " ").take(300))
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val manifestJson = manifest.map {
-      case (k, None) => s"${q(k)}: {${q("ok")}: true}"
-      case (k, Some(e)) => s"${q(k)}: {${q("ok")}: false, ${q("err")}: ${q(e)}}"
-    }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/manifest.json"), manifestJson)
-    val nErr = manifest.count(_._2.isDefined)
-    println(s"[verify] ${manifest.size} queries, $nErr errored " +
-      s"(manifest: $outDir/manifest.json)")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      LHJson.render(SparkEntry.oracleSql))
+    val manifestPath = Paths.get(s"$outDir/manifest.json")
+    Files.writeString(manifestPath, manifestJson(manifest))
+    println(summaryLine(manifest, manifestPath.toAbsolutePath.toString))
     spark.stop()
   }
 }

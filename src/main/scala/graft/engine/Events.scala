@@ -163,7 +163,7 @@ object EventCodec {
 
   def decodeRunRequest(json: String): WFRunRequest = {
     val o = m(stringToObj(json) match {
-      case s: String => ListMap.empty[String, Any]
+      case _: String => ListMap.empty[String, Any]
       case other => other
     })
     WFRunRequest(

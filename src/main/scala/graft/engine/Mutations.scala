@@ -230,7 +230,7 @@ object Mutations {
               "(null element in haystack)")
         x.equals(needle)
       }
-    case m: ListMap[_, _] =>
+    case _: ListMap[_, _] =>
       // Java `Collection` cast of a Map fails in the reference; maps are
       // not valid haystacks there either.
       throw new VarSubError(

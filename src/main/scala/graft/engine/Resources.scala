@@ -44,7 +44,6 @@ case class ExternalEventDef(
   * emits the SDK's exact order so exported documents are
   * indistinguishable from lhctl's. */
 object ResourceCodec {
-  import LHJson._
 
   private def obj(v: Any, what: String): ListMap[String, Any] = v match {
     case mm: ListMap[_, _] => mm.asInstanceOf[ListMap[String, Any]]

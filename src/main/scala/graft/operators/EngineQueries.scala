@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import scala.collection.immutable.ListMap
 
 import graft.engine._
-import graft.engine.Simulator.{ExternalInput, Fail, NoResponse, Ok, StopResume}
+import graft.engine.Simulator.{ExternalInput, Fail, Ok, StopResume}
 import graft.sources.Tables
 
 /** Engine-parity queries: each drives the REAL workflow engine
@@ -235,10 +235,6 @@ object EngineQueries {
 
   /** R1 + E3-E8 + E12: mutation arithmetic, int truncation + IEEE float
     * ops — hash-checked against plain SQL arithmetic. */
-  /** The mutation-chain spec, exposed so [[graft.BenchConcurrent]]
-    * can fold the serving-state table from the same workload. */
-  private[graft] def benchMutationSpec = mutationSpec
-
   def mutationChain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val spec = mutationSpec

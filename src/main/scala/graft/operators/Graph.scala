@@ -600,15 +600,6 @@ object Graph {
     * picking it. */
   val LPA_ROUNDS = 3
 
-  /** Measurement knob mirroring [[TextAnalysis.bpeRounds]]: lets
-    * BenchOne sweep the modularity-vs-round-count curve (the evidence
-    * that [[LPA_ROUNDS]] is an operating point, not a convention —
-    * BASELINE.md round-17) without touching gate semantics. Never set
-    * by the driver; the oracle always unrolls [[LPA_ROUNDS]]. */
-  private[graft] def lpaRounds: Int =
-    sys.env.get("SPARK_GRAFT_LPA_ROUNDS").map(_.toInt)
-      .getOrElse(LPA_ROUNDS)
-
   /** Label-propagation communities over the undirected customer—
     * supplier purchase graph — the cheap community detector (Raghavan
     * et al. 2007) that needs no modularity objective: each round every
@@ -649,7 +640,7 @@ object Graph {
       : (DataFrame, DataFrame) = {
     val (half, edges, labels0) = lpaGraph(s, dir)
     var labels = labels0
-    (1 to lpaRounds).foreach { _ =>
+    (1 to LPA_ROUNDS).foreach { _ =>
       labels = lpaVote(edges, labels)
         .localCheckpoint() // read twice next round (join + self-vote)
     }

@@ -35,7 +35,6 @@ object Similarity {
   // corpus vs 1/256) AND higher recall — multi-probe is how you shrink
   // buckets without giving up neighbors that straddle a plane.
   private val LSH_BITS = 16
-  private val PROBE_HAMMING = 2
 
   import graft.functions.VectorOps.dot
 
@@ -218,7 +217,7 @@ object Similarity {
     val sketched = emb.withColumn("bucket", sketchBits.reduce(_ + _))
 
     // multi-probe: the query fans out to every bucket within
-    // PROBE_HAMMING bit-flips of its own; the corpus side joins on its
+    // 2 bit-flips of its own; the corpus side joins on its
     // single bucket key, so corpus shuffle volume stays O(N)
     val probeExprs =
       Seq($"bucket") ++
@@ -1938,7 +1937,7 @@ object Similarity {
     // sequential-fold projections, and the bucket sketch bit-exactly
     // (OracleSql machinery), then applies the multi-probe relation as
     // its semantic equivalent — Hamming(query bucket, corpus bucket)
-    // ≤ PROBE_HAMMING — and reranks. Same answer as the Spark plan's
+    // ≤ 2 — and reranks. Same answer as the Spark plan's
     // probe-fan-out join, independently computed.
     "ann_lsh_topk" -> {
       val comp = OracleSql.mix64("CAST(p * 4096 + d AS HUGEINT)")

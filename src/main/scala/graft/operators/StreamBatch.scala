@@ -487,7 +487,6 @@ object StreamBatch {
   def streamingLeftOuterJoin(s: SparkSession, dir: String): DataFrame =
       withStatePartitions(s, dir) {
     import s.implicits._
-    import scala.jdk.CollectionConverters._
     import graft.sources.Tables
     Tables.ensureNanosFlag(s)
     val rawSchema = s.read.parquet(s"$dir/events.parquet").schema

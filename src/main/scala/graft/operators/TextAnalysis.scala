@@ -371,7 +371,7 @@ object TextAnalysis {
     import s.implicits._
     import graft.functions.GraftFunctions
     // the tokenized relation feeds SIX differently-pruned consumers
-    // (PlanAudit: 6 scans) and is deliberately NOT checkpointed: the
+    // (6 scans in its plan) and is deliberately NOT checkpointed: the
     // corpus-sized ws-array materialization measured SLOWER at 1×
     // (1.34 vs 1.24 s) AND at the 100× decade (26.1 vs 24.7 s) than
     // six cheap narrow scans + splits — the perplexity_bigram
@@ -635,14 +635,8 @@ object TextAnalysis {
   /** Merge rounds for [[bpeTrain]] — the driver-gate anchor (the
     * oracle replays this many unrolled rounds; see r15's MATERIALIZED
     * CTE note in BASELINE.md). The trainer itself is round-count
-    * agnostic ([[bpeMerges]]); BpeTrainSpec witnesses K=128 and
-    * `SPARK_GRAFT_BPE_ROUNDS` lets BenchOne measure high-K decades
-    * without touching the gate semantics (never set by the driver). */
+    * agnostic ([[bpeMerges]]); BpeTrainSpec witnesses K=128. */
   val BPE_TRAIN_ROUNDS = 12
-
-  private[graft] def bpeRounds: Int =
-    sys.env.get("SPARK_GRAFT_BPE_ROUNDS").map(_.toInt)
-      .getOrElse(BPE_TRAIN_ROUNDS)
 
   /** BPE tokenizer TRAINING — the iterated merge loop that
     * [[bpePairStats]] is one round of, and the canonical LLM-pipeline
@@ -690,7 +684,7 @@ object TextAnalysis {
     * matches both engines' binary collation on any alphabet. */
   def bpeTrain(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    bpeMerges(s, dir, bpeRounds)
+    bpeMerges(s, dir, BPE_TRAIN_ROUNDS)
       .toDF("merge_round", "pa", "pb", "merged", "n")
       .orderBy($"merge_round")
   }
@@ -753,8 +747,9 @@ object TextAnalysis {
   private val mergeMemo = scala.collection.concurrent.TrieMap
     .empty[(String, Int), Vector[(Long, String, String, String, Long)]]
 
-  /** For benchmark repeats (BenchOne): drop memoized merge tables so a
-    * repeated `text_bpe_train` measurement re-pays training. */
+  /** For benchmark repeats ([[benchPreRep]]): drop memoized merge
+    * tables so a repeated `text_bpe_train` measurement re-pays
+    * training. */
   def clearBpeMemo(): Unit = mergeMemo.clear()
 
   /** The BPE merge-training loop itself, INCREMENTAL pair counting
@@ -919,7 +914,7 @@ object TextAnalysis {
     // pays NOTHING here (r15 verdict #1) — and a user with a persisted
     // merge table skips training entirely via [[bpeEncodeTable]]
     bpeEncodeWith(s, dir,
-      bpeMerges(s, dir, bpeRounds).map(m => (m._2, m._3)))
+      bpeMerges(s, dir, BPE_TRAIN_ROUNDS).map(m => (m._2, m._3)))
 
   /** Production composition path: encode with an ALREADY-TRAINED merge
     * table (the [[bpeTrain]] output schema — merge_round, pa, pb) read
@@ -1340,8 +1335,8 @@ object TextAnalysis {
 
   /** Per-dir memo of the trained weight table — the BPE-merge-memo
     * pattern: the gate run trains once and both classifier keys read
-    * it; BenchOne clears it per rep so isolated floors re-pay
-    * training. */
+    * it; [[benchPreRep]] clears it per timed rep so the train row
+    * re-pays training. */
   private val clsMemo =
     new java.util.concurrent.ConcurrentHashMap[String, Array[Long]]()
   def clearClsMemo(): Unit = clsMemo.clear()

@@ -34,7 +34,8 @@ import graft.streaming.bus.GraftBus
   * of O(snapshot history) — measured at 1000 runs × 51 snapshots:
   * ~11× route-to-route (367 ms vs 4,023 ms p50 `GET /WFRun`), and
   * near-FLAT in history where the bus path grows ~6.5× per decade
-  * (serve bench in [[graft.StreamBench]], BASELINE.md). A 24/7
+  * (BASELINE.md serve rows; the bus-transport serve bench that took
+  * them is in git history). A 24/7
   * deployment serves from the compacted store; the bus path is the
   * zero-infra variant for short-lived jobs and tests.
   */

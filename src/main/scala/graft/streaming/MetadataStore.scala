@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec,
-  SpecValidationError, TaskDef, WFSpec}
+import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec, TaskDef,
+  WFSpec}
 
 /** Metadata-resource store (SURVEY.md §2.5 Q1/Q4/Q6/Q8 + §2.1 S4):
   * CRUD for WFSpec / TaskDef / ExternalEventDef documents.
@@ -108,7 +108,7 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
   // Driver-side read-through compaction cache — the reference serves
   // every metadata lookup from its LOCAL Kafka Streams store
   // (microseconds, GETable.java:124-140); a Spark job per GET /{Type}
-  // request (~130 ms measured, StreamBench serve rows) would make
+  // request (~130 ms measured, BASELINE.md serve rows) would make
   // metadata the latency floor of every route that resolves a spec.
   // Metadata is intrinsically tiny (resource DEFINITIONS, not run
   // state), so the whole compacted view fits beside the API server.

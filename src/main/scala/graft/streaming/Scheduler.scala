@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import scala.collection.immutable.ListMap
+import scala.annotation.unused
 
 import graft.engine._
 
@@ -94,7 +94,7 @@ object Scheduler {
     * timestamp — Spark does not guarantee intra-group order across
     * source partitions (SURVEY.md §7.4-6). */
   def stateFn(specs: Map[String, WFSpec])(
-      wfRunId: String,
+      @unused wfRunId: String, // the group key; each event carries it too
       eventsIter: Iterator[WFEvent],
       groupState: GroupState[SchedulerState]): Iterator[SchedulerOut] = {
 

@@ -2,23 +2,20 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Sessions
+
 /** One shared SparkSession for the whole forked test JVM. Suites must
-  * NOT stop it — `SparkSession.builder().getOrCreate()` returns the
-  * same session to every suite, so a per-suite `stop()` in `afterAll`
+  * NOT stop it — the builder's `getOrCreate()` returns the same
+  * session to every suite, so a per-suite `stop()` in `afterAll`
   * kills whichever suites run later (observed as order-dependent
-  * flakiness). The JVM exit tears it down.
+  * flakiness). The JVM exit tears it down. Fixed at local[4] with 4
+  * shuffle partitions, whatever SPARK_GRAFT_CPUS says, so partition-
+  * sensitive assertions see the same layout on every host.
   */
 object TestSpark {
   lazy val session: SparkSession = {
     val wh = java.nio.file.Files.createTempDirectory("graft-test-wh").toString
-    SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    Sessions.create(cpus = 4, shufflePartitions = 4,
+      extra = Map("spark.sql.warehouse.dir" -> wh))
   }
 }

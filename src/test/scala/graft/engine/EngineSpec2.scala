@@ -429,7 +429,7 @@ class EngineSpec2 extends AnyFunSuite {
         edges = Nil))
     // Worker responds after 3s — well past the 1s timeout.
     val (s, _) = Harness.run(spec,
-      tasks = (n, _, _) => Ok("too late", duration = 3000))
+      tasks = (_, _, _) => Ok("too late", duration = 3000))
     assert(s.status == Status.HALTED)
     val tr = mainThread(s).taskRuns(0)
     assert(tr.status == Status.HALTED)

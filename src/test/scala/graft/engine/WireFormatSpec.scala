@@ -30,7 +30,8 @@ class WireFormatSpec extends AnyFunSuite {
   // the three example workflows' task functions
   // (examples/workflows/*.py), played by the simulated worker
   private def exampleTasks(
-      name: String, stdin: ListMap[String, Any], idx: Int): TaskBehavior =
+      name: String, stdin: ListMap[String, Any],
+      @annotation.unused idx: Int): TaskBehavior =
     name match {
       case "basic_wf-ask_for_name" => Ok("Hey what's your name?")
       case "basic_wf-greet" | "interrupts-hello_there" =>

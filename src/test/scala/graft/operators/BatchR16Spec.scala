@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Round-16 batch: [[Graph.labelCommunities]] (LPA frequency vote),
   * [[Similarity.hardNegatives]] (contrastive negative mining),

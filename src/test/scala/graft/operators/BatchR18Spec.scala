@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.functions._
 
 /** Round-18 batch: [[Graph.lpaAdaptive]] — modularity-gated LPA round
   * selection (r17 verdict #2). Pins the patience-[[Graph.LPA_PATIENCE]]
@@ -12,7 +11,6 @@ import org.apache.spark.sql.functions._
 class BatchR18Spec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.session
-  private val sf = "/root/testdata/sf0.001"
 
   /** Plain-Scala replay of the quantized modularity rollup (the
     * BatchR17Spec formula, shared semantics). */

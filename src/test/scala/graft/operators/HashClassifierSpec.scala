@@ -113,7 +113,6 @@ class HashClassifierSpec extends AnyFunSuite {
   }
 
   test("scores and routing match a plain-Scala replay on the corpus") {
-    import spark.implicits._
     TextAnalysis.clearClsMemo()
     val got = TextAnalysis.hashClassifier(spark, dir).collect()
       .map(r => r.getLong(0) ->

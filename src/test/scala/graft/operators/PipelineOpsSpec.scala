@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Checks for the round-5 training-mix operators: PII scrub,
@@ -80,7 +79,6 @@ class PipelineOpsSpec extends AnyFunSuite {
   }
 
   test("pack_sequences: contiguous per-source streams cut at the budget") {
-    import spark.implicits._
     val rows = Curation.packSequences(spark, dir).collect()
       .map(r => (r.getString(1), r.getLong(0), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5)))

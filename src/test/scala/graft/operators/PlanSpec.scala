@@ -81,7 +81,6 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("Q2 variable search is columnar: no JSON decode, pruned scan") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     // snapshot-shaped parquet table as the streaming sink writes it
     val tmp = java.nio.file.Files

@@ -38,7 +38,6 @@ class QualitySpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_dq2").toString
     def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       df.coalesce(1).write.parquet(s"$dir/$name.parquet")
-    val t0 = new Timestamp(1700000000000L)
     // lineitem: 4 rows; orderkey 99 and partkey 77 are orphans
     w("lineitem", Seq(
       (1L, 1L, 1L), (1L, 2L, 1L), (2L, 77L, 2L), (99L, 1L, 2L))

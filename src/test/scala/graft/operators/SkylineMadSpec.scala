@@ -66,7 +66,6 @@ class SkylineMadSpec extends AnyFunSuite {
   }
 
   test("MAD on testdata: robust to a planted outlier, unlike the mean") {
-    import spark.implicits._
     val base = Relational.q60MadRobust(spark, sf).head()
     // MAD bounds: 0 ≤ mad ≤ max deviation, and for this mid-heavy
     // distribution the median sits inside the value range

@@ -51,7 +51,7 @@ class SnapshotSplitPcaSpec extends AnyFunSuite {
         if (k % Maintenance.SNAP_V1_MOD == 0) "U1" else st
       }.map { case (old, rows) =>
         (old, "U2") -> (rows.length.toLong,
-          rows.map(r => if (old == "U1") 150L else 250L).sum)
+          rows.map(_ => if (old == "U1") 150L else 250L).sum)
       }
     assert(diff == expect)
     // mass check vs the two reads: total changed == count of mod-5 keys
@@ -90,7 +90,6 @@ class SnapshotSplitPcaSpec extends AnyFunSuite {
   }
 
   test("split assignment: partition-layout invariant, percent-banded") {
-    import spark.implicits._
     val a = Curation.splitAssign(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(3)))
     // re-run after shuffling the input layout through a repartition of

@@ -133,7 +133,6 @@ class UnigramSpec extends AnyFunSuite {
   }
 
   test("encode matches the replay and its invariants hold") {
-    import spark.implicits._
     val rows = corpusRows
     val (vocab, _) = replayTrain(rows)
     val cost = vocab.map { case (p, v) => p -> v._2 }

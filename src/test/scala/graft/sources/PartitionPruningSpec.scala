@@ -36,8 +36,6 @@ class PartitionPruningSpec extends AnyFunSuite {
     assert(rows.forall(_.getAs[java.sql.Date]("day").toString == "2024-01-02"))
 
     // and the partition count actually limits files scanned
-    val allFiles = pruned.queryExecution.executedPlan.collectLeaves()
-      .map(_.toString).mkString
     val full = spark.read.parquet(out).filter($"value" > 0)
     val fullCount = full.count()
     val prunedCount = rows.length

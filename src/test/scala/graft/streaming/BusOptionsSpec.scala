@@ -19,7 +19,6 @@ import graft.streaming.bus.GraftBus
 class BusOptionsSpec extends AnyFunSuite {
 
   private lazy val spark = graft.TestSpark.session
-  private def now() = System.currentTimeMillis()
 
   private def drainOnce(
       root: String, extra: Map[String, String]): Seq[(String, String)] = {
