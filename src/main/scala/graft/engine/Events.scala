@@ -91,6 +91,8 @@ object EventCodec {
     case mm: ListMap[_, _] => mm.asInstanceOf[ListMap[String, Any]]
     case other => throw new VarSubError(s"Expected JSON object, got $other")
   }
+  private def obj(mm: ListMap[String, Any], k: String): Option[ListMap[String, Any]] =
+    mm.get(k).collect { case o: ListMap[_, _] => m(o) }
   private def str(mm: ListMap[String, Any], k: String): Option[String] =
     mm.get(k) match { case Some(s: String) => Some(s); case _ => None }
   private def int(mm: ListMap[String, Any], k: String, dflt: Int = 0): Int =
@@ -167,10 +169,7 @@ object EventCodec {
       case other => other
     })
     WFRunRequest(
-      variables = o.get("variables") match {
-        case Some(v: ListMap[_, _]) => v.asInstanceOf[ListMap[String, Any]]
-        case _ => ListMap.empty
-      },
+      variables = obj(o, "variables").getOrElse(ListMap.empty),
       wfSpecId = str(o, "wfSpecId").getOrElse(""),
       wfRunId = str(o, "wfRunId"))
   }
@@ -181,119 +180,35 @@ object EventCodec {
       "wfSpecId" -> r.wfSpecId,
       "wfRunId" -> r.wfRunId.orNull))
 
-  // TaskRunEvent is the fold's hottest wire type (2 per task round
-  // trip); it is codec'd with Jackson's streaming API instead of the
-  // generic tree → ListMap path (~3× less work and far less garbage,
-  // which is what gates parallel fold throughput).
-  private val jsonFactory = new com.fasterxml.jackson.core.JsonFactory()
-
   def decodeTaskRunEvent(json: String): TaskRunEvent = {
-    import com.fasterxml.jackson.core.JsonToken._
-    val p = jsonFactory.createParser(json)
-    try {
-      var threadId = 0; var pos = 0; var ts = 0L; var ver = -1
-      var started: Option[TaskRunStartedPayload] = None
-      var ended: Option[TaskRunEndedPayload] = None
-      if (p.nextToken() != START_OBJECT)
-        throw new VarSubError("TaskRunEvent: expected object")
-      while (p.nextToken() != END_OBJECT) {
-        val field = p.currentName()
-        p.nextToken()
-        field match {
-          case "threadId" => threadId = p.getIntValue
-          case "taskRunPosition" => pos = p.getIntValue
-          case "timestamp" =>
-            // SDK wire carries ISO-8601 here (pydantic datetime);
-            // the Java engine's Jackson carries epoch millis
-            ts = if (p.currentToken() == VALUE_STRING) isoToMillis(p.getText)
-                 else p.getLongValue
-          case "taskDefVersionNumber" => ver = p.getIntValue
-          case "startedEvent" if p.currentToken() == START_OBJECT =>
-            var workerId = ""; var stdin: Option[String] = None
-            while (p.nextToken() != END_OBJECT) {
-              val f2 = p.currentName(); p.nextToken()
-              f2 match {
-                case "workerId" if p.currentToken() == VALUE_STRING =>
-                  workerId = p.getText
-                case "stdin" if p.currentToken() == VALUE_STRING =>
-                  stdin = Some(p.getText)
-                case _ => p.skipChildren()
-              }
-            }
-            started = Some(TaskRunStartedPayload(workerId, stdin))
-          case "endedEvent" if p.currentToken() == START_OBJECT =>
-            var stdout: Option[String] = None; var stderr: Option[String] = None
-            var success = false; var rc = 0; var sawResult = false
-            while (p.nextToken() != END_OBJECT) {
-              val f2 = p.currentName(); p.nextToken()
-              if (f2 == "result" && p.currentToken() == START_OBJECT) {
-                sawResult = true
-                while (p.nextToken() != END_OBJECT) {
-                  val f3 = p.currentName(); p.nextToken()
-                  f3 match {
-                    case "stdout" if p.currentToken() == VALUE_STRING =>
-                      stdout = Some(p.getText)
-                    case "stderr" if p.currentToken() == VALUE_STRING =>
-                      stderr = Some(p.getText)
-                    case "success" =>
-                      success = p.currentToken() == VALUE_TRUE
-                    case "returncode" => rc = p.getIntValue
-                    case _ => p.skipChildren()
-                  }
-                }
-              } else p.skipChildren()
-            }
-            if (!sawResult) throw new VarSubError("endedEvent missing result")
-            ended = Some(TaskRunEndedPayload(
-              TaskRunResult(stdout, stderr, success, rc)))
-          case _ => p.skipChildren()
-        }
-      }
-      TaskRunEvent(threadId, pos, ts, ver, started, ended)
-    } finally p.close()
+    val o = m(parse(json))
+    TaskRunEvent(
+      threadId = int(o, "threadId"),
+      taskRunPosition = int(o, "taskRunPosition"),
+      timestamp = timestamp(o, "timestamp"),
+      taskDefVersionNumber = int(o, "taskDefVersionNumber", -1),
+      startedEvent = obj(o, "startedEvent").map(s =>
+        TaskRunStartedPayload(str(s, "workerId").getOrElse(""), str(s, "stdin"))),
+      endedEvent = obj(o, "endedEvent").map { e =>
+        val r = obj(e, "result").getOrElse(
+          throw new VarSubError("endedEvent missing result"))
+        TaskRunEndedPayload(TaskRunResult(str(r, "stdout"), str(r, "stderr"),
+          r.get("success").contains(true), int(r, "returncode")))
+      })
   }
 
-  def encodeTaskRunEvent(e: TaskRunEvent): String = {
-    val w = new java.io.StringWriter(160)
-    val g = jsonFactory.createGenerator(w)
-    g.writeStartObject()
-    g.writeNumberField("threadId", e.threadId)
-    g.writeNumberField("taskRunPosition", e.taskRunPosition)
-    g.writeNumberField("timestamp", e.timestamp)
-    g.writeNumberField("taskDefVersionNumber", e.taskDefVersionNumber)
-    e.startedEvent match {
-      case Some(s) =>
-        g.writeObjectFieldStart("startedEvent")
-        g.writeStringField("workerId", s.workerId)
-        s.stdin match {
-          case Some(v) => g.writeStringField("stdin", v)
-          case None => g.writeNullField("stdin")
-        }
-        g.writeEndObject()
-      case None => g.writeNullField("startedEvent")
-    }
-    e.endedEvent match {
-      case Some(en) =>
-        g.writeObjectFieldStart("endedEvent")
-        g.writeObjectFieldStart("result")
-        en.result.stdout match {
-          case Some(v) => g.writeStringField("stdout", v)
-          case None => g.writeNullField("stdout")
-        }
-        en.result.stderr match {
-          case Some(v) => g.writeStringField("stderr", v)
-          case None => g.writeNullField("stderr")
-        }
-        g.writeBooleanField("success", en.result.success)
-        g.writeNumberField("returncode", en.result.returncode)
-        g.writeEndObject()
-        g.writeEndObject()
-      case None => g.writeNullField("endedEvent")
-    }
-    g.writeEndObject()
-    g.close()
-    w.toString
-  }
+  def encodeTaskRunEvent(e: TaskRunEvent): String =
+    render(ListMap(
+      "threadId" -> e.threadId, "taskRunPosition" -> e.taskRunPosition,
+      "timestamp" -> e.timestamp,
+      "taskDefVersionNumber" -> e.taskDefVersionNumber,
+      "startedEvent" -> e.startedEvent.map(s => ListMap(
+        "workerId" -> s.workerId, "stdin" -> s.stdin.orNull)).orNull,
+      "endedEvent" -> e.endedEvent.map(en => ListMap("result" -> ListMap(
+        "stdout" -> en.result.stdout.orNull,
+        "stderr" -> en.result.stderr.orNull,
+        "success" -> en.result.success,
+        "returncode" -> en.result.returncode))).orNull))
 
   def decodeExternalEvent(json: String): ExternalEventPayload = {
     val o = m(parse(json))
@@ -349,10 +264,8 @@ object EventCodec {
       wfSpecName = str(o, "wfSpecName").getOrElse(""),
       threadId = int(o, "threadId"),
       taskRunPosition = int(o, "taskRunPosition"),
-      variableSubstitutions = o.get("variableSubstitutions") match {
-        case Some(v: ListMap[_, _]) => v.asInstanceOf[ListMap[String, Any]]
-        case _ => ListMap.empty
-      },
+      variableSubstitutions =
+        obj(o, "variableSubstitutions").getOrElse(ListMap.empty),
       kafkaTopic = str(o, "kafkaTopic").getOrElse(""))
   }
 }

@@ -1,9 +1,7 @@
 package graft.engine
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode, JsonNodeFactory}
+import com.fasterxml.jackson.core.{JsonFactory, JsonGenerator, JsonParser, JsonToken}
 import scala.collection.immutable.ListMap
-import scala.jdk.CollectionConverters._
 
 /** Error raised by variable substitution / mutation / comparison — the
   * engine's equivalent of the reference's `VarSubOrzDash`
@@ -15,23 +13,64 @@ final class VarSubError(msg: String, cause: Throwable = null)
 
 /** Dynamically-typed JSON values, the engine's runtime representation of
   * workflow variables (reference: BaseSchema JSON + `Object`-typed
-  * variables, see SURVEY.md §1.3).
+  * variables, see SURVEY.md §1.3), and the engine's only JSON codec.
   *
-  * Encoding: `null | Boolean | Int | Long | Double | String |
+  * Value model: `null | Boolean | Int | Long | Double | String |
   * Vector[Any] | ListMap[String, Any]` — immutable, insertion-ordered
   * objects. Integer JSON numbers that fit in 32 bits decode to `Int`
-  * (mirroring Jackson's Integer), bigger ones to `Long`; decimals to
-  * `Double`.
+  * (mirroring Jackson's Integer), up to 64 bits to `Long`, bigger ones
+  * and decimals to `Double`. A duplicate key keeps its first position
+  * and its last value.
+  *
+  * Both directions stream: [[parse]] reads Jackson parser tokens
+  * straight into the value model and [[render]] walks a value straight
+  * into a Jackson generator, with no `JsonNode` tree between value and
+  * text. Parsing reads the first JSON value of the text and ignores
+  * what follows it; empty or blank text parses to null.
   *
   * IMPORTANT: engine code must compare values with `.equals`, never
   * Scala `==` on `Any` — Scala's cooperative numeric equality would make
   * `1 == 1.0` true where the reference (Java `Object.equals`) says false.
   */
 object LHJson {
-  private val mapper = new ObjectMapper()
+  private val factory = new JsonFactory()
 
   /** Parse a JSON document; throws on invalid input. */
-  def parse(s: String): Any = fromNode(mapper.readTree(s))
+  def parse(s: String): Any = {
+    val p = factory.createParser(s)
+    try read(p, p.nextToken())
+    finally p.close()
+  }
+
+  private def read(p: JsonParser, t: JsonToken): Any = t match {
+    case JsonToken.START_OBJECT =>
+      val b = ListMap.newBuilder[String, Any]
+      var k = p.nextFieldName()
+      while (k != null) {
+        b += k -> read(p, p.nextToken())
+        k = p.nextFieldName()
+      }
+      b.result()
+    case JsonToken.START_ARRAY =>
+      val b = Vector.newBuilder[Any]
+      var e = p.nextToken()
+      while (e != JsonToken.END_ARRAY) {
+        b += read(p, e)
+        e = p.nextToken()
+      }
+      b.result()
+    case JsonToken.VALUE_STRING => p.getText
+    case JsonToken.VALUE_NUMBER_INT => p.getNumberType match {
+      case JsonParser.NumberType.INT => p.getIntValue
+      case JsonParser.NumberType.LONG => p.getLongValue
+      case _ => p.getDoubleValue
+    }
+    case JsonToken.VALUE_NUMBER_FLOAT => p.getDoubleValue
+    case JsonToken.VALUE_TRUE => true
+    case JsonToken.VALUE_FALSE => false
+    case JsonToken.VALUE_NULL | null => null
+    case other => throw new VarSubError(s"Unsupported JSON token: $other")
+  }
 
   /** Reference `LHUtil.stringToObj` (LHUtil.java:167-177): parse if
     * possible, else return the raw string. */
@@ -39,45 +78,38 @@ object LHJson {
     try parse(s)
     catch { case _: Exception => s }
 
-  def fromNode(n: JsonNode): Any = {
-    if (n == null || n.isNull || n.isMissingNode) null
-    else if (n.isBoolean) n.booleanValue()
-    else if (n.isInt) n.intValue()
-    else if (n.isLong) n.longValue()
-    else if (n.isNumber) n.doubleValue()
-    else if (n.isTextual) n.textValue()
-    else if (n.isArray) n.elements().asScala.map(fromNode).toVector
-    else if (n.isObject) {
-      var out = ListMap.empty[String, Any]
-      n.properties().asScala.foreach { e =>
-        out = out.updated(e.getKey, fromNode(e.getValue))
-      }
-      out
-    } else throw new VarSubError(s"Unsupported JSON node: $n")
+  /** Strict JSON rendering (maps AND lists become JSON; map keys are
+    * rendered with `String.valueOf`, a `Float` as its `Double`). */
+  def render(v: Any): String = {
+    val w = new java.io.StringWriter()
+    val g = factory.createGenerator(w)
+    try write(g, v)
+    finally g.close()
+    w.toString
   }
 
-  def toNode(v: Any): JsonNode = v match {
-    case null => JsonNodeFactory.instance.nullNode()
-    case b: Boolean => JsonNodeFactory.instance.booleanNode(b)
-    case i: Int => JsonNodeFactory.instance.numberNode(i)
-    case l: Long => JsonNodeFactory.instance.numberNode(l)
-    case d: Double => JsonNodeFactory.instance.numberNode(d)
-    case f: Float => JsonNodeFactory.instance.numberNode(f.toDouble)
-    case s: String => JsonNodeFactory.instance.textNode(s)
+  private def write(g: JsonGenerator, v: Any): Unit = v match {
+    case null => g.writeNull()
+    case b: Boolean => g.writeBoolean(b)
+    case i: Int => g.writeNumber(i)
+    case l: Long => g.writeNumber(l)
+    case d: Double => g.writeNumber(d)
+    case f: Float => g.writeNumber(f.toDouble)
+    case s: String => g.writeString(s)
     case xs: Seq[_] =>
-      val arr = new ArrayNode(JsonNodeFactory.instance)
-      xs.foreach(x => arr.add(toNode(x)))
-      arr
+      g.writeStartArray()
+      xs.foreach(write(g, _))
+      g.writeEndArray()
     case m: scala.collection.Map[_, _] =>
-      val obj = new ObjectNode(JsonNodeFactory.instance)
-      m.foreach { case (k, x) => obj.set[JsonNode](String.valueOf(k), toNode(x)) }
-      obj
+      g.writeStartObject()
+      m.foreach { case (k, x) =>
+        g.writeFieldName(String.valueOf(k))
+        write(g, x)
+      }
+      g.writeEndObject()
     case other =>
       throw new IllegalArgumentException(s"Cannot render: ${other.getClass}")
   }
-
-  /** Strict JSON rendering (maps AND lists become JSON). */
-  def render(v: Any): String = mapper.writeValueAsString(toNode(v))
 
   /** Reference `LHUtil.objToString` (LHUtil.java:197-211): maps render
     * as JSON, scalars via `toString` (so a String stays unquoted). We

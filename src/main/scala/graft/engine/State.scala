@@ -247,8 +247,10 @@ object StateCodec {
   private def isoOrNull(t: Option[Long]): Any =
     t.map(isoUtc).orNull
 
-  /** Field order: WFRunSchema (wf_run_schema.py:130-146). */
-  private def sdkRunTree(s: WFRunState, spec: WFSpec): ListMap[String, Any] =
+  /** The [[encodeSdk]] document as a value, for callers that embed it
+    * in a larger document. Field order: WFRunSchema
+    * (wf_run_schema.py:130-146). */
+  def sdkRunTree(s: WFRunState, spec: WFSpec): ListMap[String, Any] =
     ListMap(
       "created" -> isoOrNull(s.startTime),
       "objectId" -> s.objectId,

@@ -253,7 +253,7 @@ object Maintenance {
     }.map(_.getString(0))
     lastSkipStats.put((s, dir), (zones.length, cand.length))
     val pruned =
-      if (cand.isEmpty) laid.filter(lit(false)) else s.read.parquet(cand: _*)
+      if (cand.isEmpty) laid.filter(lit(false)) else s.read.parquet(cand.toIndexedSeq: _*)
     pruned
       .filter($"o_orderdate" >= lit("1996-03-01").cast("timestamp") &&
         $"o_orderdate" < lit("1996-05-01").cast("timestamp"))
@@ -398,7 +398,7 @@ object Maintenance {
       n: Long): DataFrame = {
     import s.implicits._
     val b = EQUIHEIGHT_BUCKETS.toLong
-    sorted.zipWithIndex
+    sorted.zipWithIndex()
       .map { case ((v, _), i) => (i * b / n, v) } // exact integer ranks
       .toDF("bucket", "v")
       .groupBy($"bucket")

@@ -1134,7 +1134,7 @@ object Similarity {
   def abttProject(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val (v, _) = pcaVector(s, dir)
-    val vlit = array(v.map(lit): _*)
+    val vlit = array(v.toIndexedSeq.map(lit): _*)
     Tables(s, dir, "embeddings")
       .select($"vec_id",
         $"embedding".cast("array<double>").as("x"))

@@ -163,7 +163,7 @@ class GraftApi(
         // answer like the bus path: NOT_FOUND / empty, never a crash
         if (c.readFootprint.isEmpty) {
           import spark.implicits._
-          Seq.empty[(String, String)].toDF("wfRunId", "json")
+          Seq.empty[(String, String, String)].toDF("wfRunId", "json", "wfSpecName")
         } else {
           val base = c.read(spark)
           key.fold(base)(k => base.filter(col("wfRunId") === k))
@@ -177,11 +177,9 @@ class GraftApi(
     latestFrame(Some(wfRunId))
 
   /** Collects at most one row: (snapshot json, spec name). The spec
-    * name comes from whichever column the frame carries without a
-    * JSON decode — the state topic name (`wfRunState__<specName>`) on
-    * the bus path, the scheduler's `wfSpecName` column on a
-    * scheduler-written compacted store — falling back to the decoded
-    * snapshot. */
+    * name comes from a column, never from a JSON decode: the state
+    * topic name (`wfRunState__<specName>`) on the bus path, the
+    * `wfSpecName` column every compacted-store file carries otherwise. */
   private def latestSnapshot(wfRunId: String): Option[(String, String)] = {
     // cache fast path: a Hit IS the store's latest snapshot (the cache
     // re-validates against the store's published file set on every
@@ -193,19 +191,13 @@ class GraftApi(
       }
     }
     val frame = latestFrame(Some(wfRunId))
-    val cols = frame.columns.toSet
-    if (cols.contains("topic"))
+    if (compacted.isEmpty)
       frame.select("json", "topic").collect().headOption.map(r =>
         (r.getString(0),
           r.getString(1).stripPrefix(Scheduler.STATE_TOPIC_PREFIX)))
-    else if (cols.contains("wfSpecName"))
+    else
       frame.select("json", "wfSpecName").collect().headOption.map(r =>
         (r.getString(0), r.getString(1)))
-    else
-      frame.select("json").collect().headOption.map { r =>
-        val json = r.getString(0)
-        (json, StateCodec.decode(json).wfSpecName)
-      }
   }
 
   /** Resolve a deployed WFSpec by name via the metadata store's point
@@ -223,7 +215,7 @@ class GraftApi(
         val st = StateCodec.decode(json)
         specByName(specName) match {
           case Some(spec) => response(RpcStatus.OK, Some(id),
-            LHJson.parse(StateCodec.encodeSdk(st, spec)))
+            StateCodec.sdkRunTree(st, spec))
           case None => response(RpcStatus.INTERNAL_ERROR, Some(id),
             message = Some(s"spec $specName not deployed"))
         }

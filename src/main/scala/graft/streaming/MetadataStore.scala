@@ -23,6 +23,7 @@ import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec, TaskDef,
   */
 class MetadataStore(spark: SparkSession, rootDir: String) {
   import spark.implicits._
+  import MetadataStore.MetaRow
 
   private val path = s"$rootDir/metadata_log"
   // The compaction cache's staleness probe walks the log with
@@ -100,10 +101,6 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
       .filter($"rn" === 1 && !$"deleted")
       .drop("rn", "deleted")
   }
-
-  /** One compacted metadata record: latest per (kind, id). */
-  final case class MetaRow(
-      kind: String, id: String, name: String, json: String, seq: Long)
 
   // Driver-side read-through compaction cache — the reference serves
   // every metadata lookup from its LOCAL Kafka Streams store
@@ -197,4 +194,10 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
       val sp = SpecCodec.decode(r.json)
       sp.name -> sp
     }.toMap
+}
+
+object MetadataStore {
+  /** One compacted metadata record: latest per (kind, id). */
+  final case class MetaRow(
+      kind: String, id: String, name: String, json: String, seq: Long)
 }

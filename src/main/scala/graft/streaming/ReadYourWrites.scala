@@ -1,10 +1,8 @@
 package graft.streaming
 
-import scala.collection.immutable.ListMap
-
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryProgress}
 
-import graft.engine.LHJson
+import graft.streaming.bus.BusDataSource
 
 /** Read-your-writes barrier for the streaming run-state surface —
   * parity with the reference API's offset bookkeeping
@@ -54,7 +52,8 @@ object ReadYourWrites {
       sourceIdx: Int,
       timeoutMs: Long): Unit =
     poll(query, timeoutMs, s"$topic-$partition@$offset") { p =>
-      endOffset(p, sourceIdx).flatMap(parseTopicOffsets)
+      endOffset(p, sourceIdx)
+        .flatMap(j => scala.util.Try(BusDataSource.parseOffsets(j)).toOption)
         .flatMap(_.get(topic)).flatMap(_.get(partition))
         .exists(_ > offset)
     }
@@ -88,24 +87,4 @@ object ReadYourWrites {
   private def parseLong(json: String): Option[Long] =
     try Some(json.trim.toLong)
     catch { case _: NumberFormatException => None }
-
-  /** Kafka-shaped `{"topic":{"partition":nextOffset}}` maps. */
-  private def parseTopicOffsets(
-      json: String): Option[Map[String, Map[Int, Long]]] =
-    try LHJson.parse(json) match {
-      case m: ListMap[_, _] =>
-        Some(m.asInstanceOf[ListMap[String, Any]].collect {
-          case (t, ps: ListMap[_, _]) =>
-            t -> ps.asInstanceOf[ListMap[String, Any]].flatMap {
-              case (p, o) =>
-                val off = o match {
-                  case i: Int => i.toLong
-                  case l: Long => l
-                  case other => other.toString.toLong
-                }
-                p.toIntOption.map(_ -> off)
-            }.toMap
-        }.toMap)
-      case _ => None
-    } catch { case _: Exception => None }
 }

@@ -34,13 +34,15 @@ object SchedulerOut {
   val SNAPSHOT = "snapshot"
 }
 
-/** Streaming state value: the WFRun aggregate plus its pending timers,
-  * JSON-encoded (the reference keeps these in two RocksDB stores —
+/** Streaming state value: the WFRun aggregate plus its pending timers
+  * (the reference keeps these in two RocksDB stores —
   * SchedulerTopology.java:130-146; per-key state subsumes the timer
   * store because timers only ever target their own wfRunId,
-  * WFRunTimer.java:5-11). */
+  * WFRunTimer.java:5-11). `wfRunJson` is the `json` of the last
+  * snapshot row the key emitted ("" before the run exists), so each
+  * state is encoded once; timers stay typed. */
 case class SchedulerState(
-    wfRunJson: String, timersJson: String, emitSeq: Long,
+    wfRunJson: String, timers: Seq[WFRunTimer], emitSeq: Long,
     // bounded window of recently-processed event digests — the
     // consumer-side dedupe that stands in for the reference worker's
     // exactly-once Kafka txns (SURVEY §7.4-4): a redelivered event is
@@ -100,16 +102,14 @@ object Scheduler {
 
     val out = Vector.newBuilder[SchedulerOut]
 
-    var state: Option[WFRunState] = groupState.getOption
-      .filter(_.wfRunJson.nonEmpty).map(s => StateCodec.decode(s.wfRunJson))
-    var timers: Vector[WFRunTimer] = groupState.getOption
-      .map(s => decodeTimers(s.timersJson)).getOrElse(Vector.empty)
-    var emitSeq: Long = groupState.getOption.map(_.emitSeq).getOrElse(0L)
-    var recent: Vector[Long] = groupState.getOption
-      .map(_.recentEventHashes.toVector).getOrElse(Vector.empty)
-    var specName: String = state.map(_.wfSpecName).getOrElse("")
-
-    def specFor(name: String): Option[WFSpec] = specs.get(name)
+    val prev = groupState.getOption
+    // the incoming json is persisted unchanged when nothing is folded
+    var stateJson = prev.fold("")(_.wfRunJson)
+    var state = Option.when(stateJson.nonEmpty)(StateCodec.decode(stateJson))
+    var timers = prev.fold(Vector.empty[WFRunTimer])(_.timers.toVector)
+    var emitSeq = prev.fold(0L)(_.emitSeq)
+    var recent = prev.fold(Vector.empty[Long])(_.recentEventHashes.toVector)
+    var specName = state.fold("")(_.wfSpecName)
 
     def emit(r: StepResult): Unit = {
       r.toSchedule.foreach { tsr =>
@@ -123,13 +123,13 @@ object Scheduler {
         state = Some(st)
         specName = st.wfSpecName
         emitSeq += 1
+        stateJson = StateCodec.encode(st)
         out += SchedulerOut(SchedulerOut.SNAPSHOT, st.objectId, st.wfSpecName,
-          "", -1, -1, st.status, StateCodec.encode(st), emitSeq,
-          st.aliasMap)
+          "", -1, -1, st.status, stateJson, emitSeq, st.aliasMap)
       }
     }
 
-    def fireMatured(now: Long): Unit = specFor(specName) match {
+    def fireMatured(now: Long): Unit = specs.get(specName) match {
       case None => () // spec not deployed right now: KEEP the timers so
                       // a redeploy can still fire them later
       case Some(spec) =>
@@ -167,7 +167,7 @@ object Scheduler {
         } else {
           recent = (recent :+ digest).takeRight(DEDUPE_WINDOW)
           fireMatured(ev.timestamp)
-          specFor(if (ev.wfSpecName.nonEmpty) ev.wfSpecName else specName) match {
+          specs.get(if (ev.wfSpecName.nonEmpty) ev.wfSpecName else specName) match {
             case Some(spec) => emit(Engine.processEvent(spec, state, ev))
             case None => () // unknown spec: drop, mirroring unknown-run drops
           }
@@ -175,10 +175,11 @@ object Scheduler {
       }
     }
 
-    // persist + re-arm the timeout to the earliest pending timer (R3)
-    groupState.update(SchedulerState(
-      state.map(StateCodec.encode).getOrElse(""), encodeTimers(timers),
-      emitSeq, recent))
+    // persist + re-arm the timeout to the earliest pending timer (R3).
+    // The engine mutates the state only inside a step, and every step
+    // on an existing run emits a snapshot, so `stateJson` already holds
+    // the final state's encoding.
+    groupState.update(SchedulerState(stateJson, timers, emitSeq, recent))
     if (timers.nonEmpty) {
       val next = timers.map(_.maturationTimestamp).min
       val delay = math.max(1L, next - System.currentTimeMillis())
@@ -186,17 +187,6 @@ object Scheduler {
     }
     out.result().iterator
   }
-
-  private def encodeTimers(ts: Vector[WFRunTimer]): String =
-    LHJson.render(ts.map(t => LHJson.parse(EventCodec.encodeTimer(t))))
-
-  private def decodeTimers(json: String): Vector[WFRunTimer] =
-    if (json.isEmpty) Vector.empty
-    else LHJson.parse(json) match {
-      case xs: Vector[_] =>
-        xs.map(x => EventCodec.decodeTimer(LHJson.render(x)))
-      case _ => Vector.empty
-    }
 
   // ===== Transport wiring (S1, S2, S3) =====
   // The connector is resolved BY NAME at runtime through Spark's

@@ -49,8 +49,6 @@ final class ServingCache(
 
   import ServingCache._
 
-  private final case class Entry(seq: Long, json: String, specName: String)
-
   private val entries = new ConcurrentHashMap[String, Entry]()
   // files whose rows are already merged into `entries`; pruned to the
   // live footprint on refresh so it stays bounded by the file count
@@ -106,37 +104,20 @@ final class ServingCache(
     }
   }
 
-  /** Read the latest snapshot per run from exactly `files`, resolving
-    * the spec name the same way the distributed route does (scheduler
-    * `wfSpecName` column, else the state-topic name, else the decoded
-    * snapshot) so cached responses stay byte-identical. */
+  /** Read the latest snapshot per run from exactly `files`, with the
+    * spec name from the `wfSpecName` column every store file carries
+    * (the same column the distributed route reads), so cached responses
+    * stay byte-identical. */
   private def collectRuns(spark: SparkSession, files: Seq[String])
       : Seq[(String, Long, String, String)] = {
-    import org.apache.spark.sql.functions.{col, lit}
     import spark.implicits._
-    val df = spark.read.parquet(files: _*)
-    val cols = df.columns.toSet
-    val fromTopic = !cols.contains("wfSpecName") && cols.contains("topic")
-    val specCol =
-      if (cols.contains("wfSpecName")) col("wfSpecName")
-      else if (fromTopic) col("topic")
-      else lit(null).cast("string")
     // latest-per-run within the new files; merge() resolves across
     // files already cached
     StateTable
-      .latest(df.select(col("wfRunId"), col("seq"), col("json"),
-        specCol.as("specSrc")), keepSeq = true)
-      .as[(String, Long, String, Option[String])]
+      .latest(spark.read.parquet(files: _*)
+        .select("wfRunId", "seq", "json", "wfSpecName"), keepSeq = true)
+      .as[(String, Long, String, String)]
       .collect().toSeq
-      .map { case (id, seq, json, specSrc) =>
-        val spec = specSrc match {
-          case Some(s) if fromTopic =>
-            s.stripPrefix(Scheduler.STATE_TOPIC_PREFIX)
-          case Some(s) => s
-          case None => graft.engine.StateCodec.decode(json).wfSpecName
-        }
-        (id, seq, json, spec)
-      }
   }
 }
 
@@ -145,6 +126,8 @@ object ServingCache {
     * hundreds of MB of driver heap — the point where a deployment
     * should shard serving instead of growing one cache. */
   val DefaultMaxEntries: Int = 100000
+
+  private final case class Entry(seq: Long, json: String, specName: String)
 
   sealed trait Result
   final case class Hit(json: String, specName: String) extends Result

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.scalatest.funsuite.AnyFunSuite
-import scala.collection.immutable.ListMap
 import scala.util.Random
 import Harness._
 import Mutations.{Op => M}
@@ -26,51 +25,6 @@ class EngineFuzzSpec extends AnyFunSuite {
     parsed.foreach(n => require(n >= 1,
       s"SPARK_GRAFT_FUZZ_SCALE must be >= 1, got: $n"))
     parsed.getOrElse(1)
-  }
-
-  private def randomSpec(rnd: Random): WFSpec = {
-    val nNodes = 1 + rnd.nextInt(6)
-    val types = Vector(NodeType.TASK, NodeType.TASK, NodeType.NOP,
-      NodeType.SLEEP, NodeType.THROW_EXCEPTION, NodeType.EXTERNAL_EVENT)
-    val nodes = (0 until nNodes).map { i =>
-      val t = types(rnd.nextInt(types.length))
-      val base = Node(name = s"n$i", nodeType = t)
-      val node = t match {
-        case NodeType.TASK => base.copy(
-          taskDefName = Some("echo_task"),
-          numRetries = rnd.nextInt(3),
-          timeoutSeconds =
-            if (rnd.nextBoolean()) Some(lit(1 + rnd.nextInt(3))) else None,
-          variables = ListMap("thing" -> lit(s"v$i")),
-          variableMutations =
-            if (rnd.nextBoolean())
-              ListMap("counter" -> mut(M.ADD, literal = 1))
-            else ListMap.empty)
-        case NodeType.SLEEP => base.copy(timeoutSeconds = Some(lit(1)))
-        case NodeType.THROW_EXCEPTION => base.copy(
-          exceptionToThrow = Some("fuzz-exc"))
-        case NodeType.EXTERNAL_EVENT => base.copy(
-          externalEventDefName = Some("fuzz-event"),
-          timeoutSeconds = Some(lit(2)))
-        case _ => base
-      }
-      node
-    }
-    // random forward-only edges keep the graph acyclic; node 0 stays the
-    // unique entrypoint by always chaining i-1 -> i
-    val chain = (1 until nNodes).map(i => edge(s"n${i - 1}", s"n$i"))
-    val extra = (0 until rnd.nextInt(3)).flatMap { _ =>
-      val a = rnd.nextInt(nNodes); val b = rnd.nextInt(nNodes)
-      if (a < b) {
-        val c = if (rnd.nextBoolean())
-          cond(varRef("counter"), "LESS_THAN", lit(rnd.nextInt(5))) else null
-        Some(edge(s"n$a", s"n$b", c))
-      } else None
-    }
-    wfSpec(s"fuzz", "main",
-      thread("main",
-        Map("counter" -> WFRunVariableDef(VarType.INT, defaultValue = 0)),
-        nodes = nodes, edges = chain ++ extra))
   }
 
   test("random multi-thread workflows (spawn/wait/locks) stay consistent (100 seeds)") {
@@ -202,7 +156,7 @@ class EngineFuzzSpec extends AnyFunSuite {
     for (seed <- 0 until 200 * fuzzScale) {
       val rnd = new Random(seed)
       val spec =
-        try randomSpec(rnd)
+        try FuzzWorkflows.randomSpec(rnd)
         catch { case _: SpecValidationError => null } // invalid shape: fine
       if (spec != null) {
         val sendEvent = rnd.nextBoolean()
