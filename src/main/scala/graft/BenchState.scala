@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.engine._
 import graft.engine.SpecBuilders._
 import graft.streaming.{Scheduler, SchedulerOut}
-import graft.util.Sessions
+import graft.util.{Dirs, Sessions}
 
 /** State-VOLUME benchmark for the scheduler fold (VERDICT r14 item 6):
   * RocksDbStateSpec proves the RocksDB provider works; this main
@@ -57,8 +57,7 @@ object BenchState {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val checkpoint = java.nio.file.Files
-      .createTempDirectory(s"graft-statebench-$provider").toString
+    val checkpoint = Dirs.scratch(s"graft-statebench-$provider").toString
     val input = MemoryStream[WFEvent]
     val snapCount = new AtomicLong()
     val completed = new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -141,13 +140,17 @@ object BenchState {
       f""""n_runs":$nRuns,"fold_sec":$foldSec%.1f,""" +
       f""""fold_runs_per_sec":${nRuns / foldSec}%.0f,""" +
       f""""restore_plus_probe_sec":$restoreSec%.1f,""" +
-      f""""probes":${probes.length},"probe_failures":$bad}""")
+      f""""probes":${probes.length},"probe_failures":$bad,""" +
+      s""""checkpoint":${LHJson.render(checkpoint)}}""")
     Console.out.flush()
     // halt, don't stop(): RocksDB's native teardown intermittently
     // SIGABRTs the JVM during SparkContext shutdown (exit 134 AFTER
     // all work completed and the result line printed). This is a
-    // bench main over temp dirs — skipping teardown loses nothing,
-    // and the exit code stays truthful for RocksDbVolumeSpec.
+    // bench main over scratch dirs — skipping teardown loses nothing,
+    // and the exit code stays truthful for RocksDbVolumeSpec. halt
+    // runs no shutdown hook either, so the scratch root (the
+    // checkpoint is in it) is deleted here.
+    Dirs.deleteScratch()
     Runtime.getRuntime.halt(if (bad > 0) 1 else 0)
   }
 }

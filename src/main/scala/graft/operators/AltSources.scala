@@ -1,10 +1,10 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Tables
+import graft.util.Dirs
 
 /** Non-parquet sources and schema evolution — the ingestion-side
   * surface a lakehouse engine needs beyond its primary columnar
@@ -28,42 +28,31 @@ import graft.sources.Tables
   */
 object AltSources {
 
-  private val prepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val roots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
-  private def ensure(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!prepared.contains(key)) synchronized {
-      if (!prepared.contains(key)) {
-        val root = Files.createTempDirectory("graft-altsrc").toString
-        val ev = Tables(s, dir, "events")
-        // schema evolution: generation 1 predates the `value` column
-        ev.filter(col("event_id") % 2 === 0)
-          .select("event_id", "user_id", "event_type")
-          .write.mode("overwrite").parquet(s"$root/evo/gen=1")
-        ev.filter(col("event_id") % 2 === 1)
-          .select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite").parquet(s"$root/evo/gen=2")
-        // JSONL + CSV fixtures (simple columns; ts stays out — format
-        // round-trips of timestamps are a rendering quagmire that
-        // belongs to the writer config, not this demonstration)
-        ev.select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite").json(s"$root/events_json")
-        ev.select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite")
-          .option("header", "true").csv(s"$root/events_csv")
-        // ORC: Spark's second native columnar format — same explicit-
-        // schema read discipline; predicate pushdown works like parquet
-        ev.select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite").orc(s"$root/events_orc")
-        roots.put(key, root)
-        prepared.add(key)
-      }
+  private def ensure(s: SparkSession, dir: String): String =
+    Dirs.derived(s, dir, "altsrc") {
+      val root = Dirs.scratch("graft-altsrc").toString
+      val ev = Tables(s, dir, "events")
+      // schema evolution: generation 1 predates the `value` column
+      ev.filter(col("event_id") % 2 === 0)
+        .select("event_id", "user_id", "event_type")
+        .write.mode("overwrite").parquet(s"$root/evo/gen=1")
+      ev.filter(col("event_id") % 2 === 1)
+        .select("event_id", "user_id", "event_type", "value")
+        .write.mode("overwrite").parquet(s"$root/evo/gen=2")
+      // JSONL + CSV fixtures (simple columns; ts stays out — format
+      // round-trips of timestamps are a rendering quagmire that
+      // belongs to the writer config, not this demonstration)
+      ev.select("event_id", "user_id", "event_type", "value")
+        .write.mode("overwrite").json(s"$root/events_json")
+      ev.select("event_id", "user_id", "event_type", "value")
+        .write.mode("overwrite")
+        .option("header", "true").csv(s"$root/events_csv")
+      // ORC: Spark's second native columnar format — same explicit-
+      // schema read discipline; predicate pushdown works like parquet
+      ev.select("event_id", "user_id", "event_type", "value")
+        .write.mode("overwrite").orc(s"$root/events_orc")
+      root
     }
-    roots.get(key)
-  }
 
   private val flatSchema = StructType(Seq(
     StructField("event_id", LongType),

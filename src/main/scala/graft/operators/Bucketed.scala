@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.util.Dirs
 
 /** Bucketed co-located fact-fact join — the 100 TB join shape where
   * the shuffle is paid ONCE at write time and every subsequent join on
@@ -31,38 +31,30 @@ object Bucketed {
 
   // one bucketed copy per (session, source dir); table names carry the
   // dir tag so two SFs in one session can't serve each other's data
-  private val prepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-
   private def tag(dir: String): String =
     java.lang.Integer.toHexString(dir.hashCode)
 
   def ordersTable(dir: String): String = s"graft_orders_b_${tag(dir)}"
   def lineitemTable(dir: String): String = s"graft_lineitem_b_${tag(dir)}"
 
-  private def ensure(s: SparkSession, dir: String): Unit = {
-    val key = (s, dir)
-    if (!prepared.contains(key)) synchronized {
-      if (!prepared.contains(key)) {
-        val wh = Files.createTempDirectory("graft-bucketed").toString
-        Tables(s, dir, "orders")
-          .select("o_orderkey", "o_orderpriority")
-          .repartition(BUCKETS, col("o_orderkey"))
-          .write.mode("overwrite")
-          .option("path", s"$wh/orders_b")
-          .bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(ordersTable(dir))
-        Tables(s, dir, "lineitem")
-          .select("l_orderkey", "l_extendedprice", "l_discount")
-          .repartition(BUCKETS, col("l_orderkey"))
-          .write.mode("overwrite")
-          .option("path", s"$wh/lineitem_b")
-          .bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(lineitemTable(dir))
-        prepared.add(key)
-      }
+  private def ensure(s: SparkSession, dir: String): Unit =
+    Dirs.derived(s, dir, "bucketed") {
+      val wh = Dirs.scratch("graft-bucketed").toString
+      Tables(s, dir, "orders")
+        .select("o_orderkey", "o_orderpriority")
+        .repartition(BUCKETS, col("o_orderkey"))
+        .write.mode("overwrite")
+        .option("path", s"$wh/orders_b")
+        .bucketBy(BUCKETS, "o_orderkey").sortBy("o_orderkey")
+        .saveAsTable(ordersTable(dir))
+      Tables(s, dir, "lineitem")
+        .select("l_orderkey", "l_extendedprice", "l_discount")
+        .repartition(BUCKETS, col("l_orderkey"))
+        .write.mode("overwrite")
+        .option("path", s"$wh/lineitem_b")
+        .bucketBy(BUCKETS, "l_orderkey").sortBy("l_orderkey")
+        .saveAsTable(lineitemTable(dir))
     }
-  }
 
   /** Revenue by order priority over the bucketed join. */
   def q27BucketedJoin(s: SparkSession, dir: String): DataFrame = {

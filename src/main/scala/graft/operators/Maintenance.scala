@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.util.Dirs
 
 /** Table-maintenance surface — the jobs a lakehouse deployment runs
   * between queries, expressed as first-class oracle-checked operators.
@@ -22,42 +22,10 @@ import graft.sources.Tables
   */
 object Maintenance {
 
-  /** All temp roots this JVM created, torn down by one shutdown hook —
-    * repeated sessions over the same dir previously leaked a
-    * temp-dir copy of the fixture per (session, dir) key. */
-  private val tempRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  java.lang.Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    tempRoots.forEach { r =>
-      try {
-        val p = java.nio.file.Paths.get(r)
-        if (Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(f => try Files.deleteIfExists(f) catch {
-              case _: java.io.IOException => ()
-            })
-        }
-      } catch { case _: Exception => () }
-    }
-  }))
-
-  private def newTempRoot(prefix: String): String = {
-    val root = Files.createTempDirectory(prefix).toString
-    tempRoots.add(root)
-    root
-  }
-
   /** Rows per compacted output file (the size target, expressed in
     * rows because the fixture rows are fixed-width-ish; a byte target
     * is the production knob). */
   val COMPACT_ROWS_PER_FILE = 4096L
-
-  private val prepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val roots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
 
   /** Writes the fragmented input (one file per `user_id` hash slice —
     * the shape a key-partitioned streaming sink leaves behind), then
@@ -67,30 +35,24 @@ object Maintenance {
     * silently make coalesce(target > 64) a no-op once rows exceed
     * 64 × COMPACT_ROWS_PER_FILE, and MaintenanceSpec's exact
     * file-count assertion would fail. */
-  private[operators] def ensure(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!prepared.contains(key)) synchronized {
-      if (!prepared.contains(key)) {
-        val root = newTempRoot("graft-maint")
-        val ev = Tables(s, dir, "events")
-          .select("event_id", "user_id", "event_type", "value")
-        val n = ev.count()
-        val target =
-          ((n + COMPACT_ROWS_PER_FILE - 1) / COMPACT_ROWS_PER_FILE).toInt
-        ev.repartition(math.max(64, 2 * target), col("user_id"))
-          .write.mode("overwrite").parquet(s"$root/fragmented")
-        val frag = s.read.parquet(s"$root/fragmented")
-        // coalesce, not repartition: compaction must not pay a shuffle —
-        // it only concatenates co-located input splits into fewer,
-        // larger files
-        frag.coalesce(target)
-          .write.mode("overwrite").parquet(s"$root/compacted")
-        roots.put(key, root)
-        prepared.add(key)
-      }
+  private[operators] def ensure(s: SparkSession, dir: String): String =
+    Dirs.derived(s, dir, "maint") {
+      val root = Dirs.scratch("graft-maint").toString
+      val ev = Tables(s, dir, "events")
+        .select("event_id", "user_id", "event_type", "value")
+      val n = ev.count()
+      val target =
+        ((n + COMPACT_ROWS_PER_FILE - 1) / COMPACT_ROWS_PER_FILE).toInt
+      ev.repartition(math.max(64, 2 * target), col("user_id"))
+        .write.mode("overwrite").parquet(s"$root/fragmented")
+      val frag = s.read.parquet(s"$root/fragmented")
+      // coalesce, not repartition: compaction must not pay a shuffle —
+      // it only concatenates co-located input splits into fewer,
+      // larger files
+      frag.coalesce(target)
+        .write.mode("overwrite").parquet(s"$root/compacted")
+      root
     }
-    roots.get(key)
-  }
 
   /** Content preservation proof: identical row count and full-column
     * checksum before and after compaction. */
@@ -113,11 +75,6 @@ object Maintenance {
   /** Output files for the z-ordered rewrite. */
   val ZORDER_FILES = 16
 
-  private val zorderPrepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val zorderRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** The OPTIMIZE half of the z-order story ([[zorderCluster]] is the
     * stats half): REWRITE orders into ZORDER_FILES files range-
     * partitioned and sorted by the Morton code, so every output
@@ -130,45 +87,39 @@ object Maintenance {
     * bounds); CONTENT preservation is the oracle-checked half, same
     * contract as [[compactFiles]]. */
   private[operators] def ensureZorderWrite(
-      s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!zorderPrepared.contains(key)) synchronized {
-      if (!zorderPrepared.contains(key)) {
-        val root = newTempRoot("graft-zorder")
-        val mask = (1L << ZORDER_BITS) - 1
-        val src = Tables(s, dir, "orders")
-        val dayCol = datediff(col("o_orderdate").cast("date"),
-          lit(java.sql.Date.valueOf("1995-01-01"))).cast("long")
-        // Bounds pass (the ANALYZE half of the OPTIMIZE loop, same
-        // two-step shape as maint_histogram_analyzed): raw dimensions
-        // have wildly different ranges (custkey grows with SF, the
-        // date span doesn't), and interleaving UNSCALED values lets
-        // the wider dimension's high bits dominate the code — the
-        // narrow dimension then never clusters (measured: per-file
-        // custkey spread ≈ the full domain before scaling). Min-max
-        // scale each dim to the full ZORDER_BITS width in exact
-        // integer arithmetic first.
-        val b = src.agg(
-          min(col("o_custkey")), max(col("o_custkey")),
-          min(dayCol), max(dayCol)).head() // bounded: one 4-col row
-        val (minX, maxX) = (b.getLong(0), b.getLong(1))
-        val (minY, maxY) = (b.getLong(2), b.getLong(3))
-        def scaled(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
-          ((c - lit(lo)) * lit(mask)) / lit(math.max(1L, hi - lo))
-        val withZ = src.withColumn("zval", zInterleave(
-          scaled(col("o_custkey"), minX, maxX).cast("long"),
-          scaled(dayCol, minY, maxY).cast("long")))
-        withZ
-          .repartitionByRange(ZORDER_FILES, col("zval"))
-          .sortWithinPartitions(col("zval"))
-          .drop("zval")
-          .write.mode("overwrite").parquet(s"$root/zordered")
-        zorderRoots.put(key, root)
-        zorderPrepared.add(key)
-      }
+      s: SparkSession, dir: String): String =
+    Dirs.derived(s, dir, "zorder") {
+      val root = Dirs.scratch("graft-zorder").toString
+      val mask = (1L << ZORDER_BITS) - 1
+      val src = Tables(s, dir, "orders")
+      val dayCol = datediff(col("o_orderdate").cast("date"),
+        lit(java.sql.Date.valueOf("1995-01-01"))).cast("long")
+      // Bounds pass (the ANALYZE half of the OPTIMIZE loop, same
+      // two-step shape as maint_histogram_analyzed): raw dimensions
+      // have wildly different ranges (custkey grows with SF, the
+      // date span doesn't), and interleaving UNSCALED values lets
+      // the wider dimension's high bits dominate the code — the
+      // narrow dimension then never clusters (measured: per-file
+      // custkey spread ≈ the full domain before scaling). Min-max
+      // scale each dim to the full ZORDER_BITS width in exact
+      // integer arithmetic first.
+      val b = src.agg(
+        min(col("o_custkey")), max(col("o_custkey")),
+        min(dayCol), max(dayCol)).head() // bounded: one 4-col row
+      val (minX, maxX) = (b.getLong(0), b.getLong(1))
+      val (minY, maxY) = (b.getLong(2), b.getLong(3))
+      def scaled(c: org.apache.spark.sql.Column, lo: Long, hi: Long) =
+        ((c - lit(lo)) * lit(mask)) / lit(math.max(1L, hi - lo))
+      val withZ = src.withColumn("zval", zInterleave(
+        scaled(col("o_custkey"), minX, maxX).cast("long"),
+        scaled(dayCol, minY, maxY).cast("long")))
+      withZ
+        .repartitionByRange(ZORDER_FILES, col("zval"))
+        .sortWithinPartitions(col("zval"))
+        .drop("zval")
+        .write.mode("overwrite").parquet(s"$root/zordered")
+      root
     }
-    zorderRoots.get(key)
-  }
 
   /** Content-preservation proof for the z-ordered rewrite: identical
     * row count and key/price checksums before and after. */
@@ -191,32 +142,21 @@ object Maintenance {
   /** Files for the date-sorted layout behind [[fileSkipping]]. */
   val SKIP_FILES = 16
 
-  private val skipPrepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val skipRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** (files_total, files_read) of the most recent [[fileSkipping]]
     * run — MaintenanceSpec asserts real pruning happened. */
   val lastSkipStats =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (Int, Int)]()
 
   private[operators] def ensureDateLayout(
-      s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!skipPrepared.contains(key)) synchronized {
-      if (!skipPrepared.contains(key)) {
-        val root = newTempRoot("graft-skip")
-        Tables(s, dir, "orders")
-          .repartitionByRange(SKIP_FILES, col("o_orderdate"))
-          .sortWithinPartitions(col("o_orderdate"))
-          .write.mode("overwrite").parquet(s"$root/by_date")
-        skipRoots.put(key, root)
-        skipPrepared.add(key)
-      }
+      s: SparkSession, dir: String): String =
+    Dirs.derived(s, dir, "skip") {
+      val root = Dirs.scratch("graft-skip").toString
+      Tables(s, dir, "orders")
+        .repartitionByRange(SKIP_FILES, col("o_orderdate"))
+        .sortWithinPartitions(col("o_orderdate"))
+        .write.mode("overwrite").parquet(s"$root/by_date")
+      root
     }
-    skipRoots.get(key)
-  }
 
   /** FILE-SKIPPING INDEX (zone map) — the lakehouse data-skipping
     * pattern: a bounded per-file min/max stats table over the
@@ -481,45 +421,34 @@ object Maintenance {
   val SNAP_V1_MOD = 7L
   val SNAP_V2_MOD = 5L
 
-  private val snapPrepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val snapRoots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-
   /** Materialize a three-commit versioned table (lakehouse log shape):
     * v0 = the full orders base, v1/v2 = update deltas touching the
     * keys ≡ 0 (mod [[SNAP_V1_MOD]]/[[SNAP_V2_MOD]]), plus a MANIFEST
     * (one row per commit: version, path) — the transaction log a time
     * traveler consults INSTEAD of listing the directory. */
   private[operators] def ensureSnapshots(
-      s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!snapPrepared.contains(key)) synchronized {
-      if (!snapPrepared.contains(key)) {
-        import s.implicits._
-        val root = newTempRoot("graft-snap")
-        val base = Tables(s, dir, "orders").select($"o_orderkey".as("k"),
-          $"o_orderstatus".as("status"),
-          expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)")
-            .as("price_cents"))
-        base.write.mode("overwrite").parquet(s"$root/v0")
-        base.filter(pmod($"k", lit(SNAP_V1_MOD)) === 0)
-          .select($"k", lit("U1").as("status"),
-            ($"price_cents" + 100L).as("price_cents"))
-          .write.mode("overwrite").parquet(s"$root/v1")
-        base.filter(pmod($"k", lit(SNAP_V2_MOD)) === 0)
-          .select($"k", lit("U2").as("status"),
-            ($"price_cents" + 250L).as("price_cents"))
-          .write.mode("overwrite").parquet(s"$root/v2")
-        Seq((0L, s"$root/v0"), (1L, s"$root/v1"), (2L, s"$root/v2"))
-          .toDF("version", "path").coalesce(1)
-          .write.mode("overwrite").json(s"$root/manifest")
-        snapRoots.put(key, root)
-        snapPrepared.add(key)
-      }
+      s: SparkSession, dir: String): String =
+    Dirs.derived(s, dir, "snap") {
+      import s.implicits._
+      val root = Dirs.scratch("graft-snap").toString
+      val base = Tables(s, dir, "orders").select($"o_orderkey".as("k"),
+        $"o_orderstatus".as("status"),
+        expr("CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)")
+          .as("price_cents"))
+      base.write.mode("overwrite").parquet(s"$root/v0")
+      base.filter(pmod($"k", lit(SNAP_V1_MOD)) === 0)
+        .select($"k", lit("U1").as("status"),
+          ($"price_cents" + 100L).as("price_cents"))
+        .write.mode("overwrite").parquet(s"$root/v1")
+      base.filter(pmod($"k", lit(SNAP_V2_MOD)) === 0)
+        .select($"k", lit("U2").as("status"),
+          ($"price_cents" + 250L).as("price_cents"))
+        .write.mode("overwrite").parquet(s"$root/v2")
+      Seq((0L, s"$root/v0"), (1L, s"$root/v1"), (2L, s"$root/v2"))
+        .toDF("version", "path").coalesce(1)
+        .write.mode("overwrite").json(s"$root/manifest")
+      root
     }
-    snapRoots.get(key)
-  }
 
   /** Version to time-travel to in [[snapshotRead]]: after v1, before
     * v2 — the read must SEE the v1 updates and NOT the v2 ones. */

@@ -1,9 +1,9 @@
 package graft.operators
 
-import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
+import graft.util.Dirs
 
 /** Time-partitioned layout + partition pruning — the OTHER half of
   * the 100 TB storage story next to [[Bucketed]].
@@ -28,38 +28,27 @@ import graft.sources.Tables
   */
 object Partitioned {
 
-  private val prepared =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(SparkSession, String)]()
-  private val roots =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), String]()
-  private val schemas = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), org.apache.spark.sql.types.StructType]()
-
   val DAY = "2024-01-15"
 
-  private def ensure(s: SparkSession, dir: String): String = {
-    val key = (s, dir)
-    if (!prepared.contains(key)) synchronized {
-      if (!prepared.contains(key)) {
-        val root = Files.createTempDirectory("graft-partitioned").toString
-        val withDay = Tables(s, dir, "events")
-          .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-        withDay.write.mode("overwrite")
-          .partitionBy("day")
-          .parquet(s"$root/events_by_day")
-        schemas.put(key, withDay.schema)
-        roots.put(key, root)
-        prepared.add(key)
-      }
+  /** The day-partitioned copy of events, read back with the schema it
+    * was written with. */
+  private def byDay(s: SparkSession, dir: String): DataFrame = {
+    val (root, schema) = Dirs.derived(s, dir, "partitioned") {
+      val root = Dirs.scratch("graft-partitioned").toString
+      val withDay = Tables(s, dir, "events")
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+      withDay.write.mode("overwrite")
+        .partitionBy("day")
+        .parquet(s"$root/events_by_day")
+      (root, withDay.schema)
     }
-    roots.get(key)
+    s.read.schema(schema).parquet(s"$root/events_by_day")
   }
 
   /** One day's event-type counts, read from the partitioned layout. */
   def q30PartitionPruned(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = ensure(s, dir)
-    s.read.schema(schemas.get((s, dir))).parquet(s"$root/events_by_day")
+    byDay(s, dir)
       .filter($"day" === DAY)
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -70,9 +59,7 @@ object Partitioned {
   /** The filtered frame (pre-aggregate) for plan assertions. */
   def prunedFrame(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = ensure(s, dir)
-    s.read.schema(schemas.get((s, dir))).parquet(s"$root/events_by_day")
-      .filter($"day" === DAY)
+    byDay(s, dir).filter($"day" === DAY)
   }
 
   /** DYNAMIC partition pruning — the runtime half of the pruning
@@ -90,7 +77,7 @@ object Partitioned {
     * decision — replays bit-identically in DuckDB. */
   def q69DppHotDays(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val root = ensure(s, dir)
+    val laid = byDay(s, dir)
     val daily = Tables(s, dir, "events")
       .select(date_format($"ts", "yyyy-MM-dd").as("day"),
         expr("CAST(floor(value * 100.0 + 0.5) AS BIGINT)").as("vc"))
@@ -98,7 +85,7 @@ object Partitioned {
       .localCheckpoint() // read twice (threshold, hot-day filter)
     val thr = daily.agg(expr("sum(c) div count(1)")).as[Long].head()
     val hot = daily.filter($"c" > thr).select($"day")
-    s.read.schema(schemas.get((s, dir))).parquet(s"$root/events_by_day")
+    laid
       .select($"day", $"event_type",
         expr("CAST(floor(value * 100.0 + 0.5) AS BIGINT)").as("vc"))
       .join(broadcast(hot), "day")

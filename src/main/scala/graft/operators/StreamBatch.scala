@@ -1,8 +1,12 @@
 package graft.operators
 
+import java.nio.file.Path
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+
+import graft.util.Dirs
 
 /** Stream/batch equivalence through the driver's correctness gate: this
   * query computes its answer by actually EXECUTING a Structured
@@ -120,18 +124,16 @@ object StreamBatch {
   // cleanup) when the same query drains again in this JVM — by then its
   // readback frame has been consumed (queries run sequentially)
   private val lastDrainDir =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    new java.util.concurrent.ConcurrentHashMap[String, Path]()
 
-  private def listDir[A](p: java.nio.file.Path)(
-      f: Iterator[java.nio.file.Path] => A): A = graft.util.Dirs.listDir(p)(f)
-
-  private def deleteRecursively(dir: String): Unit =
-    graft.util.Dirs.deleteRecursively(java.nio.file.Paths.get(dir))
-
-  /** Register `newDir` as `name`'s live temp dir, deleting the one the
-    * previous invocation left (its readback was consumed by then). */
-  private def trackTemp(name: String, newDir: String): Unit =
-    Option(lastDrainDir.put(name, newDir)).foreach(deleteRecursively)
+  /** A fresh scratch dir that becomes `name`'s one live drain dir,
+    * deleting the one the previous invocation left (its readback was
+    * consumed by then). */
+  private def drainDir(name: String, prefix: String): Path = {
+    val dir = Dirs.scratch(prefix)
+    Option(lastDrainDir.put(name, dir)).foreach(Dirs.deleteRecursively)
+    dir
+  }
 
   /** Drain a streaming frame to parquet DISTRIBUTED and read the result
     * back as an ordinary distributed frame — the shape for any streaming
@@ -147,9 +149,7 @@ object StreamBatch {
     * valid empty frame instead of a schema-inference error. */
   private def drainToParquet(
       s: SparkSession, df: DataFrame, mode: String, name: String): DataFrame = {
-    val out = java.nio.file.Files
-      .createTempDirectory(s"graft-stream-$name").toString
-    trackTemp(name, out)
+    val out = drainDir(name, s"graft-stream-$name").toString
     val q = df.writeStream
       .outputMode(mode)
       .trigger(Trigger.AvailableNow())
@@ -493,12 +493,11 @@ object StreamBatch {
 
     // staging: symlinks to the real part files (no copy), so the
     // stream can be extended with sentinel files
-    val staging = java.nio.file.Files.createTempDirectory("graft-louter-src")
-    trackTemp("q40_stream_left_outer:staging", staging.toString)
+    val staging = drainDir("q40_stream_left_outer:staging", "graft-louter-src")
     val src = java.nio.file.Paths.get(s"$dir/events.parquet")
     val parts =
       if (java.nio.file.Files.isDirectory(src))
-        listDir(src)(
+        Dirs.listDir(src)(
           _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
       else Seq(src)
     parts.zipWithIndex.foreach { case (f, i) =>
@@ -533,9 +532,7 @@ object StreamBatch {
         case LongType => expr("ts div 1000")
         case _ => unix_micros($"ts".cast("timestamp"))
       })).as[Long].head()
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-stream-q40").toString
-    trackTemp("q40_stream_left_outer", out)
+    val out = drainDir("q40_stream_left_outer", "graft-stream-q40").toString
     // NO-DATA micro-batches OFF for this query (r20, guide §5 / VERDICT
     // r19 item 3 — the heaviest key spent ~1.7 s of its 4.6 s drain in
     // three numInputRows=0 batches, each paying the full state-commit +
@@ -588,14 +585,14 @@ object StreamBatch {
             case _ => "{}" // props
           })
         val rows = Seq(row(uid, "view"), row(uid - 10L, "purchase"))
-        val tmp = java.nio.file.Files.createTempDirectory("graft-louter-sent")
+        val tmp = Dirs.scratch("graft-louter-sent")
         s.createDataFrame(s.sparkContext.parallelize(rows, 1), rawSchema)
           .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = listDir(tmp)(
+        val part = Dirs.listDir(tmp)(
           _.find(_.getFileName.toString.endsWith(".parquet")).get)
         java.nio.file.Files.move(part,
           staging.resolve(f"sentinel_$round%02d.parquet"))
-        deleteRecursively(tmp.toString)
+        Dirs.deleteRecursively(tmp)
       }
       sentinel(0); q.processAllAvailable() // watermark past every window
       sentinel(1); q.processAllAvailable() // a batch RUNS with it: evict

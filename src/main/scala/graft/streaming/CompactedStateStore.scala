@@ -7,13 +7,16 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
+import graft.util.Dirs
+
 /** Bounded-read materialization of the WFRun snapshot stream — the
   * parquet analogue of the reference's RocksDB-compacted state store
   * (scheduler/SchedulerTopology.java:130-146, where Kafka Streams keeps
   * only the latest value per key and compacts the changelog).
   *
-  * The plain [[Scheduler.parquetStateSink]] appends EVERY snapshot
-  * forever, so [[StateTable.latest]] windows over the whole history —
+  * A plain append log of every snapshot (what the scheduler's
+  * [[Scheduler.busWireSink]]/[[Scheduler.kafkaWireSink]] state topics
+  * hold) makes [[StateTable.latest]] window over the whole history —
   * read cost grows with (runs × snapshots-per-run), not with live
   * state. This store fixes that contract:
   *
@@ -89,7 +92,7 @@ final class CompactedStateStore(dir: String) extends Serializable {
 
   private def parquetFiles(p: Path): Seq[String] =
     if (!Files.isDirectory(p)) Nil
-    else graft.util.Dirs.listDir(p)(
+    else Dirs.listDir(p)(
       _.filter(f => f.getFileName.toString.endsWith(".parquet"))
         .map(_.toString).toSeq.sorted)
 
@@ -166,7 +169,7 @@ final class CompactedStateStore(dir: String) extends Serializable {
     val baseFiles = parquetFiles(baseDir(v))
 
     val next = baseDir(v + 1)
-    deleteRecursively(next)
+    Dirs.deleteRecursively(next)
     StateTable.latest(
       spark.read.parquet(newlyConsumed ++ baseFiles: _*), keepSeq = true)
       // one row per run: live state is small relative to history, and
@@ -184,7 +187,7 @@ final class CompactedStateStore(dir: String) extends Serializable {
 
     // deferred vacuum: delete what version v superseded — in-flight
     // readers of v planned against v's files, which all still exist
-    deleteRecursively(baseDir(v - 1))
+    Dirs.deleteRecursively(baseDir(v - 1))
     prevConsumed.foreach(f => Files.deleteIfExists(Paths.get(f)))
     Files.deleteIfExists(consumedFile(v - 1))
     newlyConsumed.length.toLong
@@ -199,9 +202,6 @@ final class CompactedStateStore(dir: String) extends Serializable {
     require(files.nonEmpty, s"CompactedStateStore at $dir is empty")
     StateTable.latest(spark.read.parquet(files: _*))
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    graft.util.Dirs.deleteRecursively(p)
 }
 
 object CompactedStateStore {

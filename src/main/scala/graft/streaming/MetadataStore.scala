@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.SparkSession
 
 import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec, TaskDef,
   WFSpec}
@@ -13,8 +11,9 @@ import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec, TaskDef,
   * Storage mirrors the reference's compacted per-resource "ID topics"
   * (GETable.java:37-41,124-140): an append-only parquet log of
   * `(kind, id, name, json, deleted, seq)` where the latest record per
-  * id wins and a delete is a tombstone. Reads compact at query time
-  * (latest-per-id window); at scale this is a Delta MERGE instead.
+  * id wins and a delete is a tombstone. Reads compact at read time
+  * (latest seq per id, cached beside the API server); at scale this
+  * is a Delta MERGE instead.
   *
   * Writes are synchronous (parquet append completes before `post`
   * returns), which gives the read-your-writes guarantee the reference
@@ -28,8 +27,8 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
   private val path = s"$rootDir/metadata_log"
   // The compaction cache's staleness probe walks the log with
   // java.io.File, which silently sees NOTHING for a non-local scheme
-  // (hdfs://, s3a://) — the cache would pin Map.empty while table()
-  // still reads rows, a wrong-answer mode rather than an error. Reject
+  // (hdfs://, s3a://) — the cache would pin Map.empty while the
+  // log holds rows, a wrong-answer mode rather than an error. Reject
   // the construction instead; a distributed deployment fronts the
   // store with its own listing (or Delta), it doesn't get a silently
   // empty one.
@@ -90,17 +89,6 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
     * topic, GETable.sendNullRecord:134-140). */
   def delete(kind: String, id: String): Unit =
     append(kind, id, "", "", deleted = true)
-
-  /** The compacted view: latest record per (kind, id), tombstones
-    * dropped. DataFrame surface for callers composing further relational
-    * work; the point-lookup methods below serve from [[compacted]]. */
-  def table(): DataFrame = {
-    val w = Window.partitionBy($"kind", $"id").orderBy($"seq".desc)
-    spark.read.parquet(path)
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1 && !$"deleted")
-      .drop("rn", "deleted")
-  }
 
   // Driver-side read-through compaction cache — the reference serves
   // every metadata lookup from its LOCAL Kafka Streams store

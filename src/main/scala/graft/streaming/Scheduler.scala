@@ -230,22 +230,6 @@ object Scheduler {
     eventSource(spark, "graft-bus", Map(
       "path" -> root, "subscribePattern" -> topicPattern))
 
-  /** S2 core: dynamic fan-out — one sink with a computed `topic`
-    * column replaces the reference's one-filter-processor-per-TaskDef
-    * topology (SchedulerTopology.java:89-107). */
-  private def taskQueueSink(
-      outputs: Dataset[SchedulerOut], format: String,
-      opts: Map[String, String], checkpoint: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[_] = {
-    outputs.filter(col("kind") === SchedulerOut.TSR)
-      .select(
-        col("taskDefName").as("topic"),
-        col("wfRunId").cast("binary").as("key"),
-        col("json").cast("binary").as("value"))
-      .writeStream.format(format).options(opts)
-      .option("checkpointLocation", checkpoint)
-  }
-
   /** S2+S3 as one dynamic-topic write — the reference scheduler's two
     * Kafka sinks (TSRs to per-TaskDef topics, snapshots to the
     * per-spec run-state topic; SchedulerTopology.java:89-127) expressed
@@ -281,36 +265,6 @@ object Scheduler {
       outputs: Dataset[SchedulerOut], root: String,
       checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
     wireSink(outputs, "graft-bus", Map("path" -> root), checkpoint)
-
-  /** S2: task-queue fan-out to Kafka topics. */
-  def kafkaTaskQueueSink(
-      outputs: Dataset[SchedulerOut], bootstrap: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
-    taskQueueSink(outputs, "kafka",
-      Map("kafka.bootstrap.servers" -> bootstrap), checkpoint)
-
-  /** S2 on the file-backed bus. */
-  def busTaskQueueSink(
-      outputs: Dataset[SchedulerOut], root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
-    taskQueueSink(outputs, "graft-bus", Map("path" -> root), checkpoint)
-
-  /** S3: WFRun snapshot sink → parquet state table (the reference
-    * forwards snapshots to the WFRun ID topic for the API layer,
-    * SchedulerTopology.java:110-127). This plain append log is the
-    * UNBOUNDED variant — fine for short-lived jobs; long-running
-    * deployments should use [[CompactedStateStore.streamingSink]],
-    * whose periodic compaction keeps query reads proportional to live
-    * state instead of history (reference parity: RocksDB-compacted
-    * state, SchedulerTopology.java:130-146). */
-  def parquetStateSink(
-      outputs: Dataset[SchedulerOut], dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[_] = {
-    outputs.filter(col("kind") === SchedulerOut.SNAPSHOT)
-      .writeStream.format("parquet")
-      .option("path", dir)
-      .option("checkpointLocation", checkpoint)
-  }
 }
 
 /** The query surface over materialized snapshots (SURVEY.md §2.5):

@@ -3,9 +3,9 @@ package graft.streaming.bus
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.immutable.ListMap
-import scala.jdk.CollectionConverters._
 
 import graft.engine.LHJson
+import graft.util.Dirs
 
 /** A file-backed, partitioned, offset-addressed message bus with the
   * same integration surface as Kafka: named topics, dense per-partition
@@ -68,19 +68,11 @@ object GraftBus {
     else counterFor(dir).get()
   }
 
-  /** `Files.list` holds an open directory fd until the stream is
-    * CLOSED — a polling consumer leaking one per call exhausts the fd
-    * limit in seconds. Every listing goes through here. */
-  private def listDir[A](dir: Path)(f: Iterator[Path] => A): A = {
-    val s = Files.list(dir)
-    try f(s.iterator.asScala) finally s.close()
-  }
-
   private def counterFor(dir: Path): java.util.concurrent.atomic.AtomicLong =
     nextOffsets.computeIfAbsent(dir.toString, _ => {
       val n =
         if (!Files.isDirectory(dir)) 0L
-        else listDir(dir)(_.count(_.getFileName.toString.endsWith(".rec")).toLong)
+        else Dirs.listDir(dir)(_.count(_.getFileName.toString.endsWith(".rec")).toLong)
       new java.util.concurrent.atomic.AtomicLong(n)
     })
 
@@ -88,7 +80,7 @@ object GraftBus {
   def topics(root: String): Seq[String] = {
     val r = Paths.get(root)
     if (!Files.isDirectory(r)) Nil
-    else listDir(r)(_.filter(Files.isDirectory(_))
+    else Dirs.listDir(r)(_.filter(Files.isDirectory(_))
       .map(_.getFileName.toString).toSeq).sorted
   }
 
@@ -96,7 +88,7 @@ object GraftBus {
   def partitions(root: String, topic: String): Seq[Int] = {
     val t = Paths.get(root, topic)
     if (!Files.isDirectory(t)) Nil
-    else listDir(t)(_.filter(Files.isDirectory(_))
+    else Dirs.listDir(t)(_.filter(Files.isDirectory(_))
       .flatMap(p => p.getFileName.toString.toIntOption).toSeq).sorted
   }
 

@@ -25,8 +25,8 @@ class CtlContractSpec extends AnyFunSuite {
   }
 
   test("python-driven lhctl contract holds across the process boundary") {
-    val root = Files.createTempDirectory("graft-ctlpy").toString
-    val fixdir = Files.createTempDirectory("graft-ctlfx").toString
+    val root = graft.util.Dirs.scratch("graft-ctlpy").toString
+    val fixdir = graft.util.Dirs.scratch("graft-ctlfx").toString
     Seq("basic_wf", "taskdef_greet", "externaleventdef_my_name")
       .foreach(copyFixture(fixdir, _))
     // Test/fork is on, so java.class.path is the real test classpath

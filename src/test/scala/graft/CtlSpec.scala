@@ -29,7 +29,7 @@ class CtlSpec extends AnyFunSuite {
   private def status(json: String): Any = parse(json)("status")
 
   test("lhctl verb surface: deploy/run/get/search/stop/resume/delete") {
-    val root = Files.createTempDirectory("graft-ctl").toString
+    val root = graft.util.Dirs.scratch("graft-ctl").toString
     def file(name: String): String = {
       val p = Paths.get(root, s"$name.json")
       Files.write(p, fixture(name).getBytes(StandardCharsets.UTF_8))

@@ -18,8 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
 class SdkContractSpec extends AnyFunSuite {
 
   test("python SDK compiles and runs the reference harness shapes") {
-    val root = Files.createTempDirectory("graft-sdkpy").toString
-    val fixdir = Files.createTempDirectory("graft-sdkfx").toString
+    val root = graft.util.Dirs.scratch("graft-sdkpy").toString
+    val fixdir = graft.util.Dirs.scratch("graft-sdkfx").toString
     val cp = System.getProperty("java.class.path")
     val script = Paths.get("tools", "sdk_contract.py").toAbsolutePath
     require(Files.exists(script), s"missing $script")

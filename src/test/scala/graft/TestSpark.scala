@@ -14,7 +14,7 @@ import graft.util.Sessions
   */
 object TestSpark {
   lazy val session: SparkSession = {
-    val wh = java.nio.file.Files.createTempDirectory("graft-test-wh").toString
+    val wh = graft.util.Dirs.scratch("graft-test-wh").toString
     Sessions.create(cpus = 4, shufflePartitions = 4,
       extra = Map("spark.sql.warehouse.dir" -> wh))
   }

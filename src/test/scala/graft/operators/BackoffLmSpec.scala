@@ -82,8 +82,7 @@ class BackoffLmSpec extends AnyFunSuite {
       (refId, "a b a b"),
       (outIds(0), "a b b"),
       (outIds(1), "z a z"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("backoff_planted").toString
+    val tmp = graft.util.Dirs.scratch("backoff_planted").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -64,7 +64,7 @@ class BatchCSpec extends AnyFunSuite {
 
   test("degree histogram: planted star graph bins exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_deg").toString
+    val dir = graft.util.Dirs.scratch("graft_deg").toString
     // star: hub supplier 1 co-supplies with 2..9 (one order per spoke)
     // → hub degree 8 (bin 4: 8-15), spokes degree 1 each (bin 1)
     (2L to 9L).zipWithIndex

@@ -13,7 +13,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("q76: walk reaches the root with multiplied quantities") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bom").toString
+    val dir = graft.util.Dirs.scratch("graft_bom").toString
     // 157 -> 15 (qty 157%5+1=3) -> 1 (qty 15%5+1=1); 42 -> 4 (qty 3);
     // 1 and 3 are roots themselves
     Seq(1L, 3L, 15L, 42L, 157L)
@@ -32,7 +32,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("bpe pair stats: corpus-frequency-weighted char pairs, ranked") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bpe").toString
+    val dir = graft.util.Dirs.scratch("graft_bpe").toString
     // vocab: abab (freq 2) -> pairs ab,ba,ab each occurrence;
     //        ab (freq 1) -> pair ab. totals: ab=5, ba=2
     Seq((1L, "abab ab", "en"), (2L, "abab x", "en"))
@@ -45,7 +45,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("kcore: pendant node peels off, dense core survives with degree") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kc").toString
+    val dir = graft.util.Dirs.scratch("graft_kc").toString
     val t0 = new java.sql.Timestamp(1700000000000L)
     // full bipartite 3x3 (every degree 3 = KCORE_K) + pendant cust 4
     val pairs = (for (c <- 1L to 3L; su <- 1L to 3L) yield (c, su)) :+
@@ -73,7 +73,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("unpivot: wide row melts to one (measure, value) row per column") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_up").toString
+    val dir = graft.util.Dirs.scratch("graft_up").toString
     Seq((7L, 5L, "O", 12.34,
         java.sql.Timestamp.valueOf("1995-01-03 00:00:00"), "x"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus",
@@ -87,7 +87,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("code detect: symbol density and keywords route code vs prose") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cd").toString
+    val dir = graft.util.Dirs.scratch("graft_cd").toString
     val code = "def foo() { return x; }" // 5 symbols / 23 chars, 2 kws
     val prose = "the cat sat on the mat"
     Seq((1L, code, "en"), (2L, prose, "en"))
@@ -102,7 +102,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("mm embedding dedup: same-cell pairs only within a modality") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mmd").toString
+    val dir = graft.util.Dirs.scratch("graft_mmd").toString
     def e(i: Int, sign: Double): Array[Float] = {
       val v = Array.fill(4)(0.0f); v(i) = sign.toFloat; v
     }
@@ -125,7 +125,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("dq freshness: hierarchical max-gap equals the flat definition") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dqf").toString
+    val dir = graft.util.Dirs.scratch("graft_dqf").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     val us = 1000000L
     Seq(
@@ -148,7 +148,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("changelog compact: net-effect folding per key") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_clc").toString
+    val dir = graft.util.Dirs.scratch("graft_clc").toString
     val t0 = new java.sql.Timestamp(1700000000000L)
     // 1: I only; 3: I,U; 4: I,D -> vanishes; 5: no ops; 15: U only;
     // 20: D only -> tombstone; 60: U,D -> tombstone
@@ -167,7 +167,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("reciprocal topk: matches an in-spec brute-force reference") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rk").toString
+    val dir = graft.util.Dirs.scratch("graft_rk").toString
     // 10 deterministic 4-dim vectors; K=5 is binding (9 candidates)
     val vecs = (0 until 10).map { i =>
       i.toLong -> Array.tabulate(4)(j => (((i * 7 + j * 3) % 11) - 5).toFloat)
@@ -201,7 +201,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("map agg: canonical k:v rendering and map read-back") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ma").toString
+    val dir = graft.util.Dirs.scratch("graft_ma").toString
     val t0 = new java.sql.Timestamp(1700000000000L)
     Seq((1L, "O", "1-URGENT"), (2L, "O", "1-URGENT"), (3L, "O", "3-MEDIUM"),
       (4L, "F", "2-HIGH"))
@@ -218,7 +218,7 @@ class BatchR14Spec extends AnyFunSuite {
 
   test("mix epochs: full-epoch and partial-permille integer arithmetic") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mix").toString
+    val dir = graft.util.Dirs.scratch("graft_mix").toString
     // wiki: 2 docs x 3 tokens = 6 toks -> 333 full epochs, rem 2,
     // permille 333; web: one 3000-token doc -> 0 epochs, permille 666
     val webText = Seq.fill(3000)("w").mkString(" ")

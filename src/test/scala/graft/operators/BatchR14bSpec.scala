@@ -14,7 +14,7 @@ class BatchR14bSpec extends AnyFunSuite {
 
   test("ohlc: open/close by arrival order, high/low/volume/total") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ohlc").toString
+    val dir = graft.util.Dirs.scratch("graft_ohlc").toString
     // arrival order (event_id) deliberately disagrees with value order
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "a", 5.00),
@@ -37,7 +37,7 @@ class BatchR14bSpec extends AnyFunSuite {
 
   test("gap islands: rn-difference runs, longest-island tie to earliest") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_isl").toString
+    val dir = graft.util.Dirs.scratch("graft_isl").toString
     def day(d: Int) = ts(f"2024-01-${d + 1}%02d 12:00:00")
     // user 1: days {0,1,2, 5,6, 9}; user 2: {4..7}; user 3: {0,1, 3,4}
     // (two len-2 islands -> tie resolves to the earlier start)
@@ -59,7 +59,7 @@ class BatchR14bSpec extends AnyFunSuite {
 
   test("jaccard: shared-customer permille on deduped purchase edges") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_jac").toString
+    val dir = graft.util.Dirs.scratch("graft_jac").toString
     val t0 = ts("2024-01-01 00:00:00")
     // supplier 1 customers {1,2,3}; supplier 2 {2,3,4}; supplier 3 {9}
     // (cust 2, supp 1) appears via TWO orders -> dedup must collapse it
@@ -83,7 +83,7 @@ class BatchR14bSpec extends AnyFunSuite {
 
   test("bucket checksum: only damaged buckets surface, with status") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ck").toString
+    val dir = graft.util.Dirs.scratch("graft_ck").toString
     val t0 = ts("2024-01-01 00:00:00")
     // 997 -> +1-cent corruption (bucket 15); 2018 = 2*1009 -> dropped
     // (bucket 31); 5 and 70 -> clean buckets 0 and 1, must NOT appear
@@ -102,7 +102,7 @@ class BatchR14bSpec extends AnyFunSuite {
 
   test("ngram novelty: df==1 share in integer permille") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nov").toString
+    val dir = graft.util.Dirs.scratch("graft_nov").toString
     // doc 1/2 share the shingle "a b c"; doc 3 is under 3 words
     // (excluded); doc 4's repeated shingle collapses via distinct
     Seq((1L, "a b c d", "en"), (2L, "a b c x", "en"), (3L, "q r", "en"),

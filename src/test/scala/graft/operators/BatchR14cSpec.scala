@@ -13,7 +13,7 @@ class BatchR14cSpec extends AnyFunSuite {
 
   test("interval coverage: nested merges, touching merges, gaps split") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_iv").toString
+    val dir = graft.util.Dirs.scratch("graft_iv").toString
     Seq(
       // user 1: [0,60s] with nested [30s,40s]; gap; [120s,150s]
       (1L, ts("2024-03-01 10:00:00"), 1L, "e", 60.00),
@@ -34,7 +34,7 @@ class BatchR14cSpec extends AnyFunSuite {
 
   test("fuzzy link: seeded deletions resolve back through the block") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fz").toString
+    val dir = graft.util.Dirs.scratch("graft_fz").toString
     // 10: 'blue'->pos 10%3+2=3 -> 'ble ring'; 20: 'black'->pos 2 ->
     // 'back ring'; 30: 'hot'->pos 2 -> 'ht bolt'. Cross-candidates in
     // the b|ring block score lev 3 -> excluded by the <=2 gate.
@@ -53,7 +53,7 @@ class BatchR14cSpec extends AnyFunSuite {
 
   test("histogram drift: permille L2 with clamped buckets, tie to low") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hd").toString
+    val dir = graft.util.Dirs.scratch("graft_hd").toString
     Seq(
       // first half: both rows land in bucket 0
       (1L, ts("2024-01-05 10:00:00"), 1L, "a", 1.00),

@@ -12,7 +12,7 @@ class BatchR14dSpec extends AnyFunSuite {
 
   test("rerank: with corpus <= shortlist, output == exact brute force") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rr").toString
+    val dir = graft.util.Dirs.scratch("graft_rr").toString
     // 12 vectors (< RERANK_SHORTLIST + 1): stage 1 shortlists all
     // candidates, so stage 2 must reproduce the exact ranking
     val vecs = (0 until 12).map { i =>
@@ -39,7 +39,7 @@ class BatchR14dSpec extends AnyFunSuite {
 
   test("boilerplate prefix: top-2-word prefix share per source") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bp").toString
+    val dir = graft.util.Dirs.scratch("graft_bp").toString
     Seq(
       (1L, "hello world alpha beta", "en", "A"),
       (2L, "hello world gamma", "en", "A"),
@@ -56,7 +56,7 @@ class BatchR14dSpec extends AnyFunSuite {
 
   test("quality quota: permille quota cut line per source") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_qq").toString
+    val dir = graft.util.Dirs.scratch("graft_qq").toString
     // src0 (even -> 400 permille of 5 docs = quota 2); scores by
     // stopword share: 500, 250, 250, 0, 0 -> threshold 250 at doc 2
     val src0 = Seq(
@@ -81,7 +81,7 @@ class BatchR14dSpec extends AnyFunSuite {
 
   test("explode outer: empty generator input survives as a null row") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val dir = graft.util.Dirs.scratch("graft_eo").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq((1L, "O", "1-URGENT"), (2L, "P", "3-MEDIUM"))
       .map { case (k, st, p) => (k, 1L, st, 1.0, t0, p) }

@@ -13,7 +13,7 @@ class BatchR14eSpec extends AnyFunSuite {
 
   test("asof forward: earliest order at-or-after the event, else null") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_af").toString
+    val dir = graft.util.Dirs.scratch("graft_af").toString
     Seq(
       (1L, ts("2024-01-05 10:00:00"), 1L, "e", 1.0),
       (2L, ts("2024-01-20 10:00:00"), 1L, "e", 1.0), // after all orders
@@ -37,7 +37,7 @@ class BatchR14eSpec extends AnyFunSuite {
 
   test("streaming ohlc equals the batch q79 resample") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_so").toString
+    val dir = graft.util.Dirs.scratch("graft_so").toString
     Seq(
       (1L, ts("2024-03-01 10:00:00"), 1L, "a", 5.00),
       (2L, ts("2024-03-01 11:00:00"), 1L, "a", 9.00),
@@ -59,7 +59,7 @@ class BatchR14eSpec extends AnyFunSuite {
 
   test("ivfpq planted twins: residual ADC retrieves the near-duplicate") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ipq").toString
+    val dir = graft.util.Dirs.scratch("graft_ipq").toString
     def vec(seed: Long): Array[Float] = Array.tabulate(64) { d =>
       (java.lang.Long.remainderUnsigned(
         graft.functions.TextHashes.mix64(seed * 131L + d),

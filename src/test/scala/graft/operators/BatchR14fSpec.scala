@@ -13,7 +13,7 @@ class BatchR14fSpec extends AnyFunSuite {
 
   test("incremental stats: merged base+delta equals full recompute") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_is").toString
+    val dir = graft.util.Dirs.scratch("graft_is").toString
     val t0 = ts("2024-01-01 00:00:00")
     // keys 10 and 20 are the delta slice (mod 10); their extremes
     // only survive if the MERGE actually folds both sides
@@ -32,7 +32,7 @@ class BatchR14fSpec extends AnyFunSuite {
 
   test("temporal join: facts see the version valid AT their timestamp") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tj").toString
+    val dir = graft.util.Dirs.scratch("graft_tj").toString
     // dim key 1: v1 from Jan 3 (attr A), v2 from Jan 10 (attr B)
     Seq((100L, 1L, ts("2024-01-03 00:00:00"), "A"),
       (101L, 1L, ts("2024-01-10 00:00:00"), "B"))
@@ -56,7 +56,7 @@ class BatchR14fSpec extends AnyFunSuite {
 
   test("dataset card: volume, dup share, median quality, code share") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dc").toString
+    val dir = graft.util.Dirs.scratch("graft_dc").toString
     // source A: 4 docs — two identical (dup share 500 permille), one
     // code-ish; quality scores 0, 0, 250, 500 -> p50 at rn=2 -> 0
     Seq(
@@ -77,7 +77,7 @@ class BatchR14fSpec extends AnyFunSuite {
 
   test("global shuffle: positions are a permutation, stable across runs") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_gs").toString
+    val dir = graft.util.Dirs.scratch("graft_gs").toString
     (0L until 50L).map(i => (i, s"doc $i", "en", "s"))
       .toDF("doc_id", "text", "lang", "source")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

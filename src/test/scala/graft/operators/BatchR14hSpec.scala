@@ -11,7 +11,7 @@ class BatchR14hSpec extends AnyFunSuite {
 
   test("hits: authority concentrates on the supplier every hub buys from") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ht").toString
+    val dir = graft.util.Dirs.scratch("graft_ht").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // suppliers: 1 is bought by customers {1,2,3}; 2 only by {1}
     val pairs = Seq((1L, 1L), (2L, 1L), (3L, 1L), (1L, 2L))
@@ -38,7 +38,7 @@ class BatchR14hSpec extends AnyFunSuite {
 
   test("pivot multi-agg: count and cents per status, absent cells 0") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pm").toString
+    val dir = graft.util.Dirs.scratch("graft_pm").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     Seq((1L, "O", 1.00), (2L, "O", 2.50), (3L, "F", 4.00))
       .map { case (k, st, p) => (k, 1L, st, p, t0, "1-URGENT") }

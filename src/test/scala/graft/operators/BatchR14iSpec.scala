@@ -11,7 +11,7 @@ class BatchR14iSpec extends AnyFunSuite {
 
   test("benford: cents leading digit, permille deviation per digit") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bf").toString
+    val dir = graft.util.Dirs.scratch("graft_bf").toString
     val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     // cents: 100, 150, 25 -> leading digits 1, 1, 2; one 9.00 -> 900
     Seq(1.00, 1.50, 0.25, 9.00).zipWithIndex
@@ -31,7 +31,7 @@ class BatchR14iSpec extends AnyFunSuite {
 
   test("cell balance: counts per seeded cell, permille shares") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cb").toString
+    val dir = graft.util.Dirs.scratch("graft_cb").toString
     // 8 one-hot seeds (cells 0..7); 8 extra vectors all hugging seed 0
     def e(i: Int): Array[Float] = {
       val v = Array.fill(8)(0.0f); v(i) = 1.0f; v

@@ -18,7 +18,7 @@ class BatchR16Spec extends AnyFunSuite {
 
   test("label communities: planted two-hub graph keeps its hubs apart") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpa").toString
+    val dir = graft.util.Dirs.scratch("graft_lpa").toString
     // two hub suppliers (10, 20) with disjoint customer blocks 1-3 /
     // 4-6 and ONE bridge customer 7 buying from both: a modular graph
     // where CC would merge everything into one component but the LPA
@@ -142,7 +142,7 @@ class BatchR16Spec extends AnyFunSuite {
 
   test("char entropy: degenerate docs score zero; mixed docs do not") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ent").toString
+    val dir = graft.util.Dirs.scratch("graft_ent").toString
     Seq((1L, "aaaaaaaa"), (2L, "abababab"), (3L, "abcdefgh"))
       .toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
@@ -158,7 +158,7 @@ class BatchR16Spec extends AnyFunSuite {
 
   test("char entropy: astral + combining-mark text counts CODE POINTS") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_uni").toString
+    val dir = graft.util.Dirs.scratch("graft_uni").toString
     // 1: four astral chars (each one surrogate PAIR in UTF-16) — per
     //    code point n=4, per code unit it would be 8
     // 2: 'e' + COMBINING ACUTE twice — 4 code points, 2 distinct (no

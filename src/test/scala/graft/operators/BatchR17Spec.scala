@@ -37,7 +37,7 @@ class BatchR17Spec extends AnyFunSuite {
 
   private def writePlanted(): (String, Set[(Long, Long)]) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpaq").toString
+    val dir = graft.util.Dirs.scratch("graft_lpaq").toString
     // four hub suppliers with disjoint 5-customer blocks plus two
     // bridge customers (21 spans hubs 10/20, 22 spans hubs 30/40):
     // CC would merge each bridged pair; LPA must recover all FOUR
@@ -143,7 +143,7 @@ class BatchR17Spec extends AnyFunSuite {
 
   test("LPA modularity: single-community partition scores exactly zero") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_lpa1").toString
+    val dir = graft.util.Dirs.scratch("graft_lpa1").toString
     // one hub, three customers — LPA collapses to one community, whose
     // modularity is identically 0 (1e6·m/m − (1000·2m/2m)² = 0): the
     // baseline the planted-partition score is measured against

@@ -65,7 +65,7 @@ class BatchR18Spec extends AnyFunSuite {
   private def writeGraph(name: String, buys: Seq[(Long, Long)])
       : (String, Set[(Long, Long)]) = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    val dir = graft.util.Dirs.scratch(name).toString
     buys.zipWithIndex.map { case ((c, _), i) => (100L + i, c) }
       .toDF("o_orderkey", "o_custkey")
       .coalesce(1).write.parquet(s"$dir/orders.parquet")

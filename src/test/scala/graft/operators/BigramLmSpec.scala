@@ -12,7 +12,7 @@ class BigramLmSpec extends AnyFunSuite {
 
   private def write(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bg").toString
+    val dir = graft.util.Dirs.scratch("graft_bg").toString
     docs.map { case (id, t) => (id, t, "en", "s", t.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

@@ -77,7 +77,7 @@ class BloomSpec extends AnyFunSuite {
       (dupB, "the same exact text content here", "en", "web", 32L),
       (newB, "completely different text with nothing shared", "en", "web", 45L),
       (dupC, "the same exact text content here", "en", "web", 32L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_bloom").toString
+    val dir = graft.util.Dirs.scratch("graft_bloom").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     val out = Incremental.incrementalDedup(spark, dir).collect()

@@ -142,8 +142,7 @@ class BpeTrainSpec extends AnyFunSuite {
   test("full-alphabet fixture: digits, punctuation, unicode (incl. " +
       "astral), and wire-delimiter escapes train identically") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("bpe_alphabet").toString
+    val tmp = graft.util.Dirs.scratch("bpe_alphabet").toString
     // every character class the old ^[a-z]+$ filter dropped: digits,
     // punctuation, uppercase, accents, CJK, an astral emoji (U+1F600,
     // a surrogate pair — must stay ONE symbol), plus the wire

@@ -11,8 +11,7 @@ class ContainmentSpec extends AnyFunSuite {
 
   test("containment flags a quoted subset that Jaccard misses") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_containment").toString
+    val dir = graft.util.Dirs.scratch("graft_containment").toString
     // doc 1: a short passage. doc 2: a long doc QUOTING doc 1 verbatim
     // inside much longer surrounding text. doc 3: unrelated.
     val quote = "alpha beta gamma delta epsilon zeta"

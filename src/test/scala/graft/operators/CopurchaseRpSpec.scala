@@ -11,7 +11,7 @@ class CopurchaseRpSpec extends AnyFunSuite {
 
   test("copurchase: per-order pairs, count ranking, partkey tiebreak") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cop").toString
+    val dir = graft.util.Dirs.scratch("graft_cop").toString
     // order 1: {1,2,3}; order 2: {1,2} (2 listed twice — distinct
     // collapses it); order 3: {1,4}
     Seq((1L, 1L), (1L, 2L), (1L, 3L), (2L, 1L), (2L, 2L), (2L, 2L),
@@ -30,7 +30,7 @@ class CopurchaseRpSpec extends AnyFunSuite {
   test("random projection: derandomized signs on a unit basis vector") {
     import spark.implicits._
     import graft.functions.TextHashes
-    val dir = java.nio.file.Files.createTempDirectory("graft_rp").toString
+    val dir = graft.util.Dirs.scratch("graft_rp").toString
     val v = Array.fill(64)(0.0f); v(0) = 1.0f
     Seq((1L, v)).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
@@ -45,7 +45,7 @@ class CopurchaseRpSpec extends AnyFunSuite {
 
   test("random projection preserves identical vectors exactly") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rp2").toString
+    val dir = graft.util.Dirs.scratch("graft_rp2").toString
     val v = Array.tabulate(64)(i => (math.sin(i) * 2).toFloat)
     Seq((1L, v), (2L, v)).toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")

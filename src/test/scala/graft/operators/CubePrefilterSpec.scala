@@ -13,7 +13,7 @@ class CubePrefilterSpec extends AnyFunSuite {
 
   test("cube: all four grouping combinations with correct flags") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cube").toString
+    val dir = graft.util.Dirs.scratch("graft_cube").toString
     // 2023-11-19 = Sunday (dow 0), 2023-11-20 = Monday (dow 1)
     val sun = Timestamp.valueOf("2023-11-19 10:00:00")
     val mon = Timestamp.valueOf("2023-11-20 10:00:00")
@@ -37,7 +37,7 @@ class CubePrefilterSpec extends AnyFunSuite {
   test("cms prefilter: duplicate chunks found, clean corpus empty") {
     import spark.implicits._
     def write(docs: Seq[(Long, String)]): String = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_cmsp").toString
+      val dir = graft.util.Dirs.scratch("graft_cmsp").toString
       docs.toDF("doc_id", "text")
         .coalesce(1).write.parquet(s"$dir/documents.parquet")
       dir
@@ -60,7 +60,7 @@ class CubePrefilterSpec extends AnyFunSuite {
 
   test("dedup cascade: exact copies counted beyond each keeper") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_casc").toString
+    val dir = graft.util.Dirs.scratch("graft_casc").toString
     val text = (1 to 30).map(i => s"w$i").mkString(" ")
     // 3 exact copies (2 beyond the keeper) + 1 unrelated doc
     Seq((1L, text), (2L, text), (3L, text),

@@ -22,7 +22,7 @@ class DataFunnelSpec extends AnyFunSuite {
       .head().getDouble(0)
     assert(q >= 0.46, s"fixture text must pass the quality gate: $q")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_fun").toString
+    val dir = graft.util.Dirs.scratch("graft_fun").toString
     Seq(
       (1L, good, "en"),            // survives q + lang
       (2L, good, "en"),            // exact dup of 1 → dropped at stage 30

@@ -14,7 +14,7 @@ class DecimalComplexSpec extends AnyFunSuite {
 
   test("decimal agg: sums and tax are exact, no float drift") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dec").toString
+    val dir = graft.util.Dirs.scratch("graft_dec").toString
     val t0 = new Timestamp(1700000000000L)
     // 0.1 + 0.2 is the classic float trap: decimal path must yield
     // exactly 0.30, and 6% of 0.25 is exactly 0.0150 at 4dp
@@ -41,7 +41,7 @@ class DecimalComplexSpec extends AnyFunSuite {
 
   test("decimal div: native decimal division obeys the half-up pin") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_div").toString
+    val dir = graft.util.Dirs.scratch("graft_div").toString
     val t0 = new Timestamp(1700000000000L)
     // "T" is an exact 4dp tie: total 0.01 over 8 orders = 0.00125,
     // which HALF_UP rounds to 0.0013 → avg_e4 = 13 (the integer pin
@@ -61,7 +61,7 @@ class DecimalComplexSpec extends AnyFunSuite {
 
   test("complex types: sorted csv, membership, map round-trip") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_cx").toString
+    val dir = graft.util.Dirs.scratch("graft_cx").toString
     Seq((1L, 5L, 1.00), (1L, 1L, 2.00), (1L, 5L, 3.00), (2L, 9L, 0.50))
       .toDF("l_orderkey", "l_partkey", "l_extendedprice")
       .coalesce(1).write.parquet(s"$dir/lineitem.parquet")

@@ -9,7 +9,7 @@ class DimEnergySpec extends AnyFunSuite {
 
   test("dimEnergy: exact integer moments, variance surrogate, rank") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dim").toString
+    val dir = graft.util.Dirs.scratch("graft_dim").toString
     Seq(
       (1L, Array(1.0f, 0.0f, 2.0f)),
       (2L, Array(3.0f, 0.0f, -2.0f)))

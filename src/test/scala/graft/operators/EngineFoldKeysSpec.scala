@@ -15,7 +15,7 @@ class EngineFoldKeysSpec extends AnyFunSuite {
 
   private def write(keys: Seq[Long]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_efk").toString
+    val dir = graft.util.Dirs.scratch("graft_efk").toString
     val t0 = new Timestamp(1700000000000L)
     keys.map(k => (k, 1L, "O", 1.0, t0, "x"))
       .toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",

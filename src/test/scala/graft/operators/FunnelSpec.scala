@@ -29,7 +29,7 @@ class FunnelSpec extends AnyFunSuite {
       (3L, "view", ts(0)),
       // user 4: no funnel event at all
       (4L, "error", ts(0)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_funnel").toString
+    val dir = graft.util.Dirs.scratch("graft_funnel").toString
     rows.toDF("user_id", "event_type", "ts")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
 

@@ -11,7 +11,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("pagerank: planted 2x2 graph matches a plain-Scala replay") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr").toString
+    val dir = graft.util.Dirs.scratch("graft_pr").toString
     // customers 1,2; suppliers 10,20. Orders: c1 buys from s10 and
     // s20; c2 buys from s20 only.
     Seq((100L, 1L), (101L, 1L), (102L, 2L))
@@ -77,7 +77,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("reachability: planted chain gets exact BFS layers; islands stay out") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_bfs").toString
+    val dir = graft.util.Dirs.scratch("graft_bfs").toString
     // chain: s1 -pA(101)- s2 -pB(102)- s3 ; island: s4 -pC(103)
     Seq((101L, 1L), (101L, 2L), (102L, 2L), (102L, 3L), (103L, 4L))
       .toDF("l_partkey", "l_suppkey")
@@ -142,7 +142,7 @@ class GraphSpec extends AnyFunSuite {
 
   test("triangles: planted K4 and a pendant — census counted exactly once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tri").toString
+    val dir = graft.util.Dirs.scratch("graft_tri").toString
     // suppliers 1-4 pairwise co-supply (6 orders, one per pair) → K4;
     // supplier 5 co-supplies with 1 only (pendant edge).
     val pairs = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),

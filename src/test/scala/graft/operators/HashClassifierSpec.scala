@@ -148,8 +148,7 @@ class HashClassifierSpec extends AnyFunSuite {
         (0 until 6).map(filler(i, _)).mkString(" "))
       Seq(clean, low)
     }
-    val tmp = java.nio.file.Files
-      .createTempDirectory("hash_cls_planted").toString
+    val tmp = graft.util.Dirs.scratch("hash_cls_planted").toString
     planted.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -13,7 +13,7 @@ class HofHeatmapSpec extends AnyFunSuite {
 
   test("vector stats via HOFs: fold, extremes, positive count") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hof").toString
+    val dir = graft.util.Dirs.scratch("graft_hof").toString
     Seq((1L, Array(1.0f, -2.0f, 0.0f, 0.5f)))
       .toDF("vec_id", "embedding")
       .coalesce(1).write.parquet(s"$dir/embeddings.parquet")
@@ -27,7 +27,7 @@ class HofHeatmapSpec extends AnyFunSuite {
 
   test("dow/hour heatmap: UTC buckets with the %w Sunday=0 convention") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hm").toString
+    val dir = graft.util.Dirs.scratch("graft_hm").toString
     // 2023-11-19 was a Sunday; 14:30 UTC → (dow 0, hod 14)
     val sunday = Timestamp.valueOf("2023-11-19 14:30:00")
     val monday = Timestamp.valueOf("2023-11-20 03:10:00")

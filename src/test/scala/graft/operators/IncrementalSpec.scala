@@ -87,7 +87,7 @@ class IncrementalSpec extends AnyFunSuite {
       (batchIds(1), nearVariant),
       // batch doc 2: nothing similar -> new
       (batchIds(2), unrelated))
-    val dir = java.nio.file.Files.createTempDirectory("graft_incr").toString
+    val dir = graft.util.Dirs.scratch("graft_incr").toString
     rows.toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
 

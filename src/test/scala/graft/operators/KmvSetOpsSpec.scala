@@ -13,7 +13,7 @@ class KmvSetOpsSpec extends AnyFunSuite {
 
   private def write(views: Range, buys: Range): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_kmvso").toString
+    val dir = graft.util.Dirs.scratch("graft_kmvso").toString
     val t0 = new Timestamp(1700000000000L)
     val rows =
       views.map(u => (u.toLong * 2, t0, u.toLong, "view", 0.0)) ++

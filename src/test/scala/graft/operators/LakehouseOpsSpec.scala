@@ -20,7 +20,7 @@ class LakehouseOpsSpec extends AnyFunSuite {
 
   test("scd2: planted feed builds chained intervals with one current row") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_scd2").toString
+    val dir = graft.util.Dirs.scratch("graft_scd2").toString
     // key 1: three versions incl. a same-day tie broken by change_id;
     // key 2: single version (immediately current)
     Seq(

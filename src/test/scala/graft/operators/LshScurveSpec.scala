@@ -100,8 +100,7 @@ class LshScurveSpec extends AnyFunSuite {
       Seq((k.toLong, docA(k)), (1000L + k, docB(k, 19)))
     }
     val rows = (lowPairs ++ highPairs).flatten
-    val tmp = java.nio.file.Files
-      .createTempDirectory("scurve_planted").toString
+    val tmp = graft.util.Dirs.scratch("scurve_planted").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))
@@ -228,8 +227,7 @@ class LshScurveSpec extends AnyFunSuite {
     // greatest(lo_p, 1) guard path on both engines); selection then
     // ties on noise 0 and falls to the fewest bands, (2,16)
     val rows = (0L until 30L).map(i => (i, s"w${i}a w${i}b"))
-    val tmp = java.nio.file.Files
-      .createTempDirectory("opsel_single").toString
+    val tmp = graft.util.Dirs.scratch("opsel_single").toString
     rows.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))

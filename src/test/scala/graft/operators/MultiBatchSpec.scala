@@ -28,8 +28,7 @@ class MultiBatchSpec extends AnyFunSuite {
   //  - shuffled: hash-scattered rows — every batch spans the whole
   //    month, so after batch 1 the watermark makes most rows "late".
   private def writeLayout(ordered: Boolean): String = {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-multibatch").toString
+    val root = graft.util.Dirs.scratch("graft-multibatch").toString
     graft.sources.Tables.ensureNanosFlag(spark)
     val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val laid =

@@ -93,8 +93,7 @@ class PackBestFitSpec extends AnyFunSuite {
     // stream: 1500-token docs concat-cross every ~second doc, while
     // FFD (1500+1500 > 2048) gives each its own bin, zero crossings
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("pack_crossing").toString
+    val tmp = graft.util.Dirs.scratch("pack_crossing").toString
     (1L to 6L).map(i => (i, Seq.fill(1500)("t").mkString(" "), "s"))
       .toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
@@ -111,8 +110,7 @@ class PackBestFitSpec extends AnyFunSuite {
 
   test("oversize documents land alone in their own bin") {
     import spark.implicits._
-    val tmp = java.nio.file.Files
-      .createTempDirectory("pack_oversize").toString
+    val tmp = graft.util.Dirs.scratch("pack_oversize").toString
     val big = Seq.fill(3000)("tok").mkString(" ") // 3000 > 2048
     Seq((1L, big, "s"), (2L, "a b c", "s"), (3L, big, "s"),
       (4L, Seq.fill(2048)("x").mkString(" "), "s"))

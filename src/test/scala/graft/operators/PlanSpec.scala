@@ -83,8 +83,7 @@ class PlanSpec extends AnyFunSuite {
   test("Q2 variable search is columnar: no JSON decode, pruned scan") {
     import spark.implicits._
     // snapshot-shaped parquet table as the streaming sink writes it
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-plan-snap").toString
+    val tmp = graft.util.Dirs.scratch("graft-plan-snap").toString
     Seq(
       ("wf1", "COMPLETED", "{\"big\":\"json\"}", 1L,
         Map("who" -> Seq("Obi-Wan"))),
@@ -517,8 +516,7 @@ class PlanSpec extends AnyFunSuite {
     // corpus repartition there is a pure extra full shuffle. Build an
     // 8-file embeddings copy, force one file per split, and assert the
     // only exchange left is the output sort's range partitioning.
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-kmeans-parts").toString
+    val tmp = graft.util.Dirs.scratch("graft-kmeans-parts").toString
     val shuffleKey = "spark.sql.shuffle.partitions"
     val maxPartKey = "spark.sql.files.maxPartitionBytes"
     val savedShuffle = spark.conf.get(shuffleKey)

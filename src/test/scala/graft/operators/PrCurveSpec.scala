@@ -146,8 +146,7 @@ class PrCurveSpec extends AnyFunSuite {
       Seq((i.toLong * 2, s"the of to in ${filler(i, 0)} ${filler(i, 1)}"),
         (i.toLong * 2 + 1, (0 until 6).map(filler(i, _)).mkString(" ")))
     }
-    val tmp = java.nio.file.Files
-      .createTempDirectory("pr_curve_planted").toString
+    val tmp = graft.util.Dirs.scratch("pr_curve_planted").toString
     planted.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))

@@ -13,7 +13,7 @@ class QualitySpec extends AnyFunSuite {
 
   test("profile: nulls excluded from nonnull and distinct counts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq1").toString
+    val dir = graft.util.Dirs.scratch("graft_dq1").toString
     val t0 = new Timestamp(1700000000000L)
     Seq(
       (1L, Some(10L), Some("O"), Some(1.5), Some(t0), Some("1-URGENT")),
@@ -35,7 +35,7 @@ class QualitySpec extends AnyFunSuite {
 
   test("referential: orphans counted on every broken edge") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dq2").toString
+    val dir = graft.util.Dirs.scratch("graft_dq2").toString
     def w(name: String, df: org.apache.spark.sql.DataFrame): Unit =
       df.coalesce(1).write.parquet(s"$dir/$name.parquet")
     // lineitem: 4 rows; orderkey 99 and partkey 77 are orphans

@@ -10,7 +10,7 @@ class RetrievalSpec extends AnyFunSuite {
 
   private def plantedDocs(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ret").toString
+    val dir = graft.util.Dirs.scratch("graft_ret").toString
     rows.toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -76,7 +76,7 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("rag index: gate drops short tails, dedup keeps one copy of shared chunks") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rag").toString
+    val dir = graft.util.Dirs.scratch("graft_rag").toString
     val shared = "s" * 200 // one full chunk, identical across two docs
     Seq((1L, shared, "en"), (2L, shared, "en"),
         (3L, "t" * 10, "en"), // below the 80-char gate entirely

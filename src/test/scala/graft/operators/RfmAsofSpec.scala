@@ -16,7 +16,7 @@ class RfmAsofSpec extends AnyFunSuite {
 
   test("rfm: breakpoint scores and segment code") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_rfm").toString
+    val dir = graft.util.Dirs.scratch("graft_rfm").toString
     val rows =
       // c1: one 50.00 order on the anchor day → r5 f1 m1 = 511
       Seq((1000L, 1L, day(500), 50.00)) ++
@@ -34,7 +34,7 @@ class RfmAsofSpec extends AnyFunSuite {
 
   test("asof tolerance: fresh match kept, stale and missing nulled") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_asoft").toString
+    val dir = graft.util.Dirs.scratch("graft_asoft").toString
     Seq((10L, 1L, day(200)), (20L, 2L, day(200)), (30L, 3L, day(200)))
       .toDF("event_id", "user_id", "ts")
       .coalesce(1).write.parquet(s"$dir/events.parquet")

@@ -171,7 +171,7 @@ class SketchSpec extends AnyFunSuite {
 
   test("hdr quantiles: planted values bin with ≤ 12.5% relative error") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_hdr").toString
+    val dir = graft.util.Dirs.scratch("graft_hdr").toString
     // 100 values of 1.00 (100 cents: L=7, sub=(100>>4)&3=2 → bucket 30)
     // and 1 value of 80.00 (8000 cents) — p50 lands in the 100-cent
     // bucket, p99 still inside it (cum 100 ≥ ceil(99·101/100)=100)

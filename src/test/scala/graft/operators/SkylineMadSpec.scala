@@ -10,7 +10,7 @@ class SkylineMadSpec extends AnyFunSuite {
 
   test("skyline: planted frontier with dominated, tied, and duplicate points") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sky").toString
+    val dir = graft.util.Dirs.scratch("graft_sky").toString
     // (partkey, price, size):
     //  1: (1.00, 10) frontier
     //  2: (2.00, 20) frontier (bigger, pricier)
@@ -53,7 +53,7 @@ class SkylineMadSpec extends AnyFunSuite {
 
   test("MAD: planted odd and even counts replay the lower-median rule") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mad").toString
+    val dir = graft.util.Dirs.scratch("graft_mad").toString
     // values (cents): 100, 200, 300, 1000, 10000 → median 300;
     // deviations: 200, 100, 0, 700, 9700 → MAD 200 (lower median of
     // sorted 0,100,200,700,9700 is the rank-2 element = 200)

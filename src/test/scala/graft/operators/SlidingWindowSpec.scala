@@ -17,7 +17,7 @@ class SlidingWindowSpec extends AnyFunSuite {
     // T0 is an exact 30-minute boundary (1700001000000 ms)
     val t0 = 1700001000000L
     def ts(minOff: Int) = new Timestamp(t0 + minOff * 60000L)
-    val dir = java.nio.file.Files.createTempDirectory("graft_slide").toString
+    val dir = graft.util.Dirs.scratch("graft_slide").toString
     Seq(
       (1L, ts(10), 7L, "A", 1.00),
       (2L, ts(40), 7L, "A", 2.00),

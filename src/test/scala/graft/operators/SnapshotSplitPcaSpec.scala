@@ -60,7 +60,7 @@ class SnapshotSplitPcaSpec extends AnyFunSuite {
 
   test("coreset fps: planted clusters — greedy picks one per cluster first") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_fps").toString
+    val dir = graft.util.Dirs.scratch("graft_fps").toString
     // three tight clusters far apart on a 4-dim line + noise dims;
     // ids 0-9 at x≈0, 10-19 at x≈100, 20-29 at x≈200
     val rows = (0 until 30).map { i =>
@@ -115,7 +115,7 @@ class SnapshotSplitPcaSpec extends AnyFunSuite {
 
   test("pca power iteration: planted dominant axis is recovered") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_pca").toString
+    val dir = graft.util.Dirs.scratch("graft_pca").toString
     // 4-dim corpus: variance concentrated on dim 2 (index 2), noise on
     // dim 0 — the dominant eigenvector must peak at dim 2
     val rows = (0 until 40).map { i =>

@@ -12,7 +12,7 @@ class SpanSimilaritySpec extends AnyFunSuite {
 
   private def write(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_span").toString
+    val dir = graft.util.Dirs.scratch("graft_span").toString
     docs.map { case (id, tx) => (id, tx, "en", "src0", tx.length.toLong) }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")

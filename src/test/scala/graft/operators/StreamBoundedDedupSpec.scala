@@ -13,8 +13,7 @@ class StreamBoundedDedupSpec extends AnyFunSuite {
 
   test("ordered multi-batch drain: exact key set with evicted state") {
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-bounded-dedup").toString
+    val root = graft.util.Dirs.scratch("graft-bounded-dedup").toString
     graft.sources.Tables.ensureNanosFlag(spark)
     val raw = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     // 8 time slices admitted earliest-first (mtime-pinned), the

@@ -21,8 +21,7 @@ class StreamCheckpointRecoverySpec extends AnyFunSuite {
   test("complete-mode upsert view survives a mid-drain kill + resume") {
     import spark.implicits._
     // orders as 8 part files so maxFilesPerTrigger=1 → 8 micro-batches
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-rec").toString
+    val root = graft.util.Dirs.scratch("graft-ckpt-rec").toString
     spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
       .repartition(8).write.parquet(s"$root/orders.parquet")
     val schema = spark.read.parquet(s"$root/orders.parquet").schema

@@ -17,7 +17,7 @@ class TimeSeriesSpec extends AnyFunSuite {
   private def write(rows: Seq[(Long, Long, String, String, Timestamp)])
       : String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ts").toString
+    val dir = graft.util.Dirs.scratch("graft_ts").toString
     rows.toDF("event_id", "user_id", "event_type", "props", "ts")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
     dir

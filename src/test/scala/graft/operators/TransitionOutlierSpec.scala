@@ -25,7 +25,7 @@ class TransitionOutlierSpec extends AnyFunSuite {
       (2L, 7L, ts(2), "B", 0.0),
       // user 3: single event — no transition
       (3L, 8L, ts(0), "C", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_trans").toString
+    val dir = graft.util.Dirs.scratch("graft_trans").toString
     rows.toDF("user_id", "event_id", "ts", "event_type", "value")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
 
@@ -42,7 +42,7 @@ class TransitionOutlierSpec extends AnyFunSuite {
     import spark.implicits._
     val rows = Seq(
       (1L, 2L, ts(0), "Y", 0.0), (1L, 1L, ts(0), "X", 0.0))
-    val dir = java.nio.file.Files.createTempDirectory("graft_trans2").toString
+    val dir = graft.util.Dirs.scratch("graft_trans2").toString
     rows.toDF("user_id", "event_id", "ts", "event_type", "value")
       .coalesce(1).write.parquet(s"$dir/events.parquet")
     val out = Relational.q62EventTransitions(spark, dir).collect()
@@ -61,7 +61,7 @@ class TransitionOutlierSpec extends AnyFunSuite {
         (1 to 7).map(d => (110L + d, day(d, 0), 9L, "m", 1.00)) ++
         Seq((120L, day(8, 0), 9L, "m", 100.00))
     val flat = (0 to 4).map(d => (200L + d, day(d, 0), 9L, "flat", 2.00))
-    val dir = java.nio.file.Files.createTempDirectory("graft_outlier").toString
+    val dir = graft.util.Dirs.scratch("graft_outlier").toString
     (spiky ++ flat).map { case (id, t0, u, ty, v) => (id, t0, u, ty, v) }
       .toDF("event_id", "ts", "user_id", "event_type", "value")
       .coalesce(1).write.parquet(s"$dir/events.parquet")

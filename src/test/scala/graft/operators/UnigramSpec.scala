@@ -168,8 +168,7 @@ class UnigramSpec extends AnyFunSuite {
       (i.toLong, (0 until 8).map(k => words((i + k * 7) % words.size))
         .mkString(" ") + " 世界 😀ok")
     }
-    val tmp = java.nio.file.Files
-      .createTempDirectory("unigram_planted").toString
+    val tmp = graft.util.Dirs.scratch("unigram_planted").toString
     docs.toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("fix"))
       .withColumn("n_chars", length($"text").cast("long"))

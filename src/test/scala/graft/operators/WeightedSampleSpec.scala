@@ -14,7 +14,7 @@ class WeightedSampleSpec extends AnyFunSuite {
     // one source, 1000 light docs (w=10) + 1000 heavy docs (w=10000)
     val rows = (0L until 1000L).map(i => (i, "x" * 10, "en", "s", 10L)) ++
       (1000L until 2000L).map(i => (i, "y" * 20, "en", "s", 10000L))
-    val dir = java.nio.file.Files.createTempDirectory("graft_ws").toString
+    val dir = graft.util.Dirs.scratch("graft_ws").toString
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .repartition(4).write.parquet(s"$dir/documents.parquet")
 
@@ -37,7 +37,7 @@ class WeightedSampleSpec extends AnyFunSuite {
 
   test("dsir: target-like documents outweigh off-domain documents") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_dsir").toString
+    val dir = graft.util.Dirs.scratch("graft_dsir").toString
     // target domain (src0) speaks {alpha beta}; the raw pool (src1)
     // mostly speaks {gamma delta} with a few target-like docs mixed in
     val target = (0L until 20L).map(i => (i, "alpha beta alpha beta", "src0"))

@@ -17,7 +17,7 @@ class WindowSetOpsSpec extends AnyFunSuite {
   private def write(
       rows: Seq[(Long, Long, String, Double, Timestamp, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_wso").toString
+    val dir = graft.util.Dirs.scratch("graft_wso").toString
     rows.toDF("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderdate", "o_orderpriority")
       .coalesce(1).write.parquet(s"$dir/orders.parquet")

@@ -12,7 +12,7 @@ class WinnowNtileSpec extends AnyFunSuite {
 
   private def writeDocs(docs: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_win").toString
+    val dir = graft.util.Dirs.scratch("graft_win").toString
     docs.toDF("doc_id", "text")
       .coalesce(1).write.parquet(s"$dir/documents.parquet")
     dir
@@ -48,7 +48,7 @@ class WinnowNtileSpec extends AnyFunSuite {
 
   test("q67: ntile quartiles, ranks, integer permille per nation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_nt").toString
+    val dir = graft.util.Dirs.scratch("graft_nt").toString
     // nation 0: five suppliers with distinct balances; nation 1: one
     (Seq((1, 0, 10.0), (2, 0, 20.0), (3, 0, 30.0), (4, 0, 40.0),
       (5, 0, 50.0), (6, 1, 99.0)))

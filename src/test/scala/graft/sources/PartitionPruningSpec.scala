@@ -15,7 +15,7 @@ class PartitionPruningSpec extends AnyFunSuite {
 
   test("date-partitioned events prune to the filtered day") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-part").toString
+    val out = graft.util.Dirs.scratch("graft-part").toString
     Tables(spark, dir, "events")
       .withColumn("day", to_date($"ts"))
       .write.partitionBy("day").mode("overwrite").parquet(out)

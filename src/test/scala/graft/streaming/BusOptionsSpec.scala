@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -43,7 +41,7 @@ class BusOptionsSpec extends AnyFunSuite {
   }
 
   test("startingOffsets=latest skips the backlog; earliest reads it") {
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     val topic = "opts__t1"
     GraftBus.send(root, topic, "k", "old1")
     GraftBus.send(root, topic, "k", "old2")
@@ -60,7 +58,7 @@ class BusOptionsSpec extends AnyFunSuite {
   }
 
   test("startingOffsets JSON map with -2/-1 sentinels starts mid-stream") {
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     val t1 = "opts__j1"
     val t2 = "opts__j2"
     (1 to 4).foreach(i => GraftBus.send(root, t1, "k", s"a$i"))
@@ -80,7 +78,7 @@ class BusOptionsSpec extends AnyFunSuite {
   }
 
   test("subscribePattern fans in multiple topics; subscribe list exact") {
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     GraftBus.send(root, "pat__x", "k", "vx")
     GraftBus.send(root, "pat__y", "k", "vy")
     GraftBus.send(root, "other", "k", "vo")
@@ -96,7 +94,7 @@ class BusOptionsSpec extends AnyFunSuite {
     // Kafka fails when specific offsets don't cover all subscribed
     // TopicPartitions; an omitted topic must NOT silently fall back to
     // earliest (that would make a typo'd topic name a silent no-op)
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     val t1 = "cov__a"
     val t2 = "cov__b"
     GraftBus.send(root, t1, "k", "v1")
@@ -122,7 +120,7 @@ class BusOptionsSpec extends AnyFunSuite {
   }
 
   test("invalid startingOffsets is rejected, not silently earliest") {
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     GraftBus.send(root, "bad__t", "k", "v")
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drainOnce(root,
@@ -145,7 +143,7 @@ class BusOptionsSpec extends AnyFunSuite {
 
   test("batch read: full log, distributed, subscribePattern filters") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-bus-batch").toString
+    val root = graft.util.Dirs.scratch("graft-bus-batch").toString
     (1 to 5).foreach(i => GraftBus.send(root, "bat__a", s"k$i", s"a$i"))
     (1 to 3).foreach(i => GraftBus.send(root, "bat__b", s"k$i", s"b$i"))
     GraftBus.send(root, "other", "k", "x")
@@ -159,7 +157,7 @@ class BusOptionsSpec extends AnyFunSuite {
 
   test("batch read: starting/endingOffsets bound the range per Kafka") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-bus-batch").toString
+    val root = graft.util.Dirs.scratch("graft-bus-batch").toString
     (0 until 6).foreach(i => GraftBus.send(root, "rng__t", "k", s"v$i"))
     def vals(extra: Map[String, String]) =
       batchRead(root, extra ++ Map("subscribe" -> "rng__t"))
@@ -177,7 +175,7 @@ class BusOptionsSpec extends AnyFunSuite {
   }
 
   test("endingOffsets on a streaming query is rejected (batch-only)") {
-    val root = Files.createTempDirectory("graft-bus-opts").toString
+    val root = graft.util.Dirs.scratch("graft-bus-opts").toString
     GraftBus.send(root, "eo__t", "k", "v")
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       drainOnce(root, Map("subscribe" -> "eo__t",
@@ -189,7 +187,7 @@ class BusOptionsSpec extends AnyFunSuite {
 
   test("batch read: key equality pushes into the scan and prunes rows") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-bus-batch").toString
+    val root = graft.util.Dirs.scratch("graft-bus-batch").toString
     (1 to 20).foreach(i => GraftBus.send(root, "key__t", s"k${i % 4}", s"v$i"))
     val df = batchRead(root)
       .filter($"key" === org.apache.spark.sql.functions

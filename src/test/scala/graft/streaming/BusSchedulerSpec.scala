@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.ListMap
@@ -47,8 +45,8 @@ class BusSchedulerSpec extends AnyFunSuite {
   private def now() = System.currentTimeMillis()
 
   test("basic run end-to-end over bus topics, duplicates deduped by guid") {
-    val root = Files.createTempDirectory("graft-bus").toString
-    val ckpt = Files.createTempDirectory("graft-bus-ckpt").toString
+    val root = graft.util.Dirs.scratch("graft-bus").toString
+    val ckpt = graft.util.Dirs.scratch("graft-bus-ckpt").toString
 
     // S1 → fold → S2+S3: the production topology, by-name connector
     val events = Scheduler.busEventSource(spark, root, "wfEvents__.*")
@@ -173,9 +171,9 @@ class BusSchedulerSpec extends AnyFunSuite {
     * as a JSON string, threadId -1 broadcast), and the final state is
     * read back through the Q1/Q2 snapshot query surface. */
   test("wire fixtures end-to-end: deploy basic_wf.json, fold over bus, query") {
-    val root = Files.createTempDirectory("graft-bus-wire").toString
-    val ckpt = Files.createTempDirectory("graft-bus-wire-ckpt").toString
-    val metaRoot = Files.createTempDirectory("graft-bus-wire-meta").toString
+    val root = graft.util.Dirs.scratch("graft-bus-wire").toString
+    val ckpt = graft.util.Dirs.scratch("graft-bus-wire-ckpt").toString
+    val metaRoot = graft.util.Dirs.scratch("graft-bus-wire-meta").toString
 
     // deploy the SDK-compiled documents through the CRUD surface
     val store = new MetadataStore(spark, metaRoot)
@@ -297,8 +295,8 @@ class BusSchedulerSpec extends AnyFunSuite {
 
   test("bus source resumes from checkpointed Kafka-shaped offsets") {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft-bus-resume").toString
-    val ckpt = Files.createTempDirectory("graft-bus-resume-ckpt").toString
+    val root = graft.util.Dirs.scratch("graft-bus-resume").toString
+    val ckpt = graft.util.Dirs.scratch("graft-bus-resume-ckpt").toString
     val topic = "wfEvents__resume"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 

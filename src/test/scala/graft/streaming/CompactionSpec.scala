@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -34,7 +32,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compacted reads match full history; footprint stays bounded") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = graft.util.Dirs.scratch("graft-compact").toString
     val store = new CompactedStateStore(dir)
 
     store.append(Seq(
@@ -77,7 +75,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compaction consumes only files listed before it started") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-compact-race").toString
+    val dir = graft.util.Dirs.scratch("graft-compact-race").toString
     val store = new CompactedStateStore(dir)
     store.append(Seq(snap("r1", 1, "RUNNING")).toDS().toDF())
     // simulate an append landing during the compaction read: files are
@@ -98,8 +96,8 @@ class CompactionSpec extends AnyFunSuite {
         nodes = Seq(task("n0", "echo_task", "thing" -> varRef("who"))),
         edges = Nil))
 
-    val dir = Files.createTempDirectory("graft-compact-stream").toString
-    val ckpt = Files.createTempDirectory("graft-compact-ckpt").toString
+    val dir = graft.util.Dirs.scratch("graft-compact-stream").toString
+    val ckpt = graft.util.Dirs.scratch("graft-compact-ckpt").toString
     val store = new CompactedStateStore(dir)
 
     val input = MemoryStream[WFEvent]
@@ -154,11 +152,11 @@ class CompactionSpec extends AnyFunSuite {
       // (never the per-row JSON fallback)
       assert(store.read(spark).columns.contains("aliases"),
         "scheduler-written store must carry the columnar aliases map")
-      val metaRoot = Files.createTempDirectory("graft-compact-meta").toString
+      val metaRoot = graft.util.Dirs.scratch("graft-compact-meta").toString
       val meta = new MetadataStore(spark, metaRoot)
       meta.postWfSpec(SpecCodec.encode(spec))
       val api = new GraftApi(spark, meta,
-        Files.createTempDirectory("graft-compact-bus").toString, Some(store))
+        graft.util.Dirs.scratch("graft-compact-bus").toString, Some(store))
       assert(api.statusOf(api.getWfRun("c-run-1")) == api.RpcStatus.OK)
       assert(LHJson.parse(api.getWfRunAlias("who", "Grievous"))
         .asInstanceOf[ListMap[String, Any]]("result") == Vector("c-run-2"))

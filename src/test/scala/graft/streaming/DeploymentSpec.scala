@@ -23,7 +23,7 @@ class DeploymentSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val root = java.nio.file.Files.createTempDirectory("graft-deploy").toString
+    val root = graft.util.Dirs.scratch("graft-deploy").toString
     val store = new MetadataStore(spark, root)
 
     // POST the spec document (validated like the reference's POST API)

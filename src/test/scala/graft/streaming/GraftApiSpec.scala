@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import scala.collection.immutable.ListMap
@@ -34,9 +32,9 @@ class GraftApiSpec extends AnyFunSuite {
   private def now() = System.currentTimeMillis()
 
   test("full reference API lifecycle over bus topics") {
-    val busRoot = Files.createTempDirectory("graft-api-bus").toString
-    val ckpt = Files.createTempDirectory("graft-api-ckpt").toString
-    val metaRoot = Files.createTempDirectory("graft-api-meta").toString
+    val busRoot = graft.util.Dirs.scratch("graft-api-bus").toString
+    val ckpt = graft.util.Dirs.scratch("graft-api-ckpt").toString
+    val metaRoot = graft.util.Dirs.scratch("graft-api-meta").toString
 
     val store = new MetadataStore(spark, metaRoot)
     val api = new GraftApi(spark, store, busRoot)
@@ -221,7 +219,7 @@ class GraftApiSpec extends AnyFunSuite {
       // -- compacted serving mode: the same routes over a
       // CompactedStateStore give byte-identical answers (the 24/7
       // deployment's configuration; reads O(live runs)) --
-      val compDir = Files.createTempDirectory("graft-api-comp").toString
+      val compDir = graft.util.Dirs.scratch("graft-api-comp").toString
       val comp = new CompactedStateStore(compDir)
       comp.append(api.snapshotFrame())
       comp.compact(spark)
@@ -308,7 +306,7 @@ class GraftApiSpec extends AnyFunSuite {
   test("serving cache: appender racing cached reader keeps byte-identity " +
       "and read-your-writes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cache-race").toString
+    val dir = graft.util.Dirs.scratch("graft-cache-race").toString
     val comp = new CompactedStateStore(dir)
     val cache = new ServingCache(comp)
     val K = 10

@@ -11,7 +11,7 @@ class MetadataStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = graft.TestSpark.session
 
   private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft-meta").toString
+    graft.util.Dirs.scratch("graft-meta").toString
   private lazy val store = new MetadataStore(spark, root)
 
     private val goodSpec =

@@ -45,7 +45,7 @@ class RecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
     val checkpoint =
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      graft.util.Dirs.scratch("graft-ckpt").toString
     val input = MemoryStream[WFEvent]
     val snapshots = TrieMap.empty[Long, (String, String)]
     val seq = new java.util.concurrent.atomic.AtomicLong()

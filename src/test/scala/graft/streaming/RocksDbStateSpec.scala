@@ -47,7 +47,7 @@ class RocksDbStateSpec extends AnyFunSuite {
     val prev = spark.conf.getOption(PROVIDER_CONF)
     spark.conf.set(PROVIDER_CONF, ROCKSDB)
     val checkpoint =
-      java.nio.file.Files.createTempDirectory("graft-rocks-ckpt").toString
+      graft.util.Dirs.scratch("graft-rocks-ckpt").toString
     val input = MemoryStream[WFEvent]
     val snapshots = TrieMap.empty[Long, (String, String)]
     val seq = new java.util.concurrent.atomic.AtomicLong()

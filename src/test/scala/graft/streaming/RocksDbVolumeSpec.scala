@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * (local[SPARK_GRAFT_CPUS], inherited from the test env) and asserts the probes all
   * folded the exact payload after restore. BenchState exits non-zero
   * on any probe mismatch, so exit 0 IS the correctness assertion;
-  * the throughput/restore numbers land in SCALING.md. */
+  * the throughput/restore numbers land in SCALING.md. It also checks
+  * that BenchState deletes its checkpoint before exiting. */
 class RocksDbVolumeSpec extends AnyFunSuite {
 
   test("1M parked runs restore correctly under RocksDB") {
@@ -55,5 +56,18 @@ class RocksDbVolumeSpec extends AnyFunSuite {
     val result = lines.filter(_.contains("state_volume")).mkString("\n")
     assert(result.contains("\"probe_failures\":0"), evidence)
     assert(result.contains("\"n_runs\":1000000"), evidence)
+    // halt skips shutdown hooks, so BenchState deletes its scratch
+    // (the ~180 MB RocksDB checkpoint) itself before exiting
+    val checkpoint = lines.find(_.contains("state_volume")).flatMap { l =>
+      graft.engine.LHJson.parse(l.dropWhile(_ != '{')) match {
+        case m: scala.collection.immutable.ListMap[String @unchecked, Any @unchecked] =>
+          m.get("checkpoint").collect { case p: String => p }
+        case _ => None
+      }
+    }
+    assert(checkpoint.nonEmpty,
+      s"no checkpoint path in the result line; $evidence")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(checkpoint.get)),
+      s"BenchState left its checkpoint ${checkpoint.get} behind")
   }
 }
