@@ -87,28 +87,8 @@ case class TaskScheduleRequest(
 object EventCodec {
   import LHJson._
 
-  private def m(v: Any): ListMap[String, Any] = v match {
-    case mm: ListMap[_, _] => mm.asInstanceOf[ListMap[String, Any]]
-    case other => throw new VarSubError(s"Expected JSON object, got $other")
-  }
-  private def obj(mm: ListMap[String, Any], k: String): Option[ListMap[String, Any]] =
-    mm.get(k).collect { case o: ListMap[_, _] => m(o) }
-  private def str(mm: ListMap[String, Any], k: String): Option[String] =
-    mm.get(k) match { case Some(s: String) => Some(s); case _ => None }
-  private def int(mm: ListMap[String, Any], k: String, dflt: Int = 0): Int =
-    mm.get(k) match {
-      case Some(i: Int) => i
-      case Some(l: Long) => l.toInt
-      case Some(d: Double) => d.toInt
-      case _ => dflt
-    }
-  private def long(mm: ListMap[String, Any], k: String, dflt: Long = 0L): Long =
-    mm.get(k) match {
-      case Some(i: Int) => i.toLong
-      case Some(l: Long) => l
-      case Some(d: Double) => d.toLong
-      case _ => dflt
-    }
+  private def objOf(v: Any): ListMap[String, Any] =
+    obj(v).getOrElse(throw new VarSubError(s"Expected JSON object, got $v"))
 
   /** Epoch millis of an ISO-8601 datetime string. Both producer
     * families must decode: the reference Java engine's Jackson writes
@@ -135,7 +115,7 @@ object EventCodec {
     }
 
   def decodeWFEvent(json: String): WFEvent = {
-    val o = m(parse(json))
+    val o = objOf(parse(json))
     WFEvent(
       wfSpecId = str(o, "wfSpecId").getOrElse(""),
       wfSpecName = str(o, "wfSpecName").getOrElse(""),
@@ -164,12 +144,12 @@ object EventCodec {
       (if (e.guid.nonEmpty) ListMap("guid" -> e.guid) else ListMap.empty))
 
   def decodeRunRequest(json: String): WFRunRequest = {
-    val o = m(stringToObj(json) match {
+    val o = objOf(stringToObj(json) match {
       case _: String => ListMap.empty[String, Any]
       case other => other
     })
     WFRunRequest(
-      variables = obj(o, "variables").getOrElse(ListMap.empty),
+      variables = o.get("variables").flatMap(obj).getOrElse(ListMap.empty),
       wfSpecId = str(o, "wfSpecId").getOrElse(""),
       wfRunId = str(o, "wfRunId"))
   }
@@ -181,16 +161,16 @@ object EventCodec {
       "wfRunId" -> r.wfRunId.orNull))
 
   def decodeTaskRunEvent(json: String): TaskRunEvent = {
-    val o = m(parse(json))
+    val o = objOf(parse(json))
     TaskRunEvent(
       threadId = int(o, "threadId"),
       taskRunPosition = int(o, "taskRunPosition"),
       timestamp = timestamp(o, "timestamp"),
       taskDefVersionNumber = int(o, "taskDefVersionNumber", -1),
-      startedEvent = obj(o, "startedEvent").map(s =>
+      startedEvent = o.get("startedEvent").flatMap(obj).map(s =>
         TaskRunStartedPayload(str(s, "workerId").getOrElse(""), str(s, "stdin"))),
-      endedEvent = obj(o, "endedEvent").map { e =>
-        val r = obj(e, "result").getOrElse(
+      endedEvent = o.get("endedEvent").flatMap(obj).map { e =>
+        val r = e.get("result").flatMap(obj).getOrElse(
           throw new VarSubError("endedEvent missing result"))
         TaskRunEndedPayload(TaskRunResult(str(r, "stdout"), str(r, "stderr"),
           r.get("success").contains(true), int(r, "returncode")))
@@ -211,7 +191,7 @@ object EventCodec {
         "returncode" -> en.result.returncode))).orNull))
 
   def decodeExternalEvent(json: String): ExternalEventPayload = {
-    val o = m(parse(json))
+    val o = objOf(parse(json))
     ExternalEventPayload(
       externalEventDefId = str(o, "externalEventDefId").getOrElse(""),
       externalEventDefName = str(o, "externalEventDefName").getOrElse(
@@ -228,7 +208,7 @@ object EventCodec {
       "timestamp" -> p.timestamp))
 
   def decodeTimer(json: String): WFRunTimer = {
-    val o = m(parse(json))
+    val o = objOf(parse(json))
     WFRunTimer(
       wfRunId = str(o, "wfRunId").getOrElse(""),
       threadRunId = int(o, "threadRunId"),
@@ -255,7 +235,7 @@ object EventCodec {
       "kafkaTopic" -> t.kafkaTopic))
 
   def decodeTsr(json: String): TaskScheduleRequest = {
-    val o = m(parse(json))
+    val o = objOf(parse(json))
     TaskScheduleRequest(
       taskDefId = str(o, "taskDefId").getOrElse(""),
       taskDefName = str(o, "taskDefName").getOrElse(""),
@@ -265,7 +245,7 @@ object EventCodec {
       threadId = int(o, "threadId"),
       taskRunPosition = int(o, "taskRunPosition"),
       variableSubstitutions =
-        obj(o, "variableSubstitutions").getOrElse(ListMap.empty),
+        o.get("variableSubstitutions").flatMap(obj).getOrElse(ListMap.empty),
       kafkaTopic = str(o, "kafkaTopic").getOrElse(""))
   }
 }

@@ -135,6 +135,64 @@ object LHJson {
         }
       } catch { case _: Exception => ListMap("" -> other) }
   }
+
+  // ---- field readers, shared by the engine's codecs ----
+  // A value of the wrong type reads like an absent one: the reader
+  // gives its default or None, and each codec says with a
+  // `getOrElse(throw …)` which absences are errors, in its own error
+  // type. A number reads through `intValue`/`longValue` (Scala's
+  // `toInt`/`toLong`) whether it parsed as Int, Long or Double.
+
+  /** `v` as an object; None for anything else. */
+  def obj(v: Any): Option[ListMap[String, Any]] = v match {
+    case m: ListMap[_, _] => Some(m.asInstanceOf[ListMap[String, Any]])
+    case _ => None
+  }
+
+  /** Field `k` as an object, absent or null reading as the empty one;
+    * None when it holds anything else. */
+  def objOrEmpty(o: ListMap[String, Any], k: String): Option[ListMap[String, Any]] =
+    o.getOrElse(k, null) match {
+      case null => Some(ListMap.empty)
+      case v => obj(v)
+    }
+
+  /** Field `k` as a list; empty when absent or not a list. */
+  def list(o: ListMap[String, Any], k: String): Vector[Any] =
+    o.getOrElse(k, null) match {
+      case xs: Vector[_] => xs
+      case _ => Vector.empty
+    }
+
+  def str(o: ListMap[String, Any], k: String): Option[String] =
+    o.getOrElse(k, null) match {
+      case s: String => Some(s)
+      case _ => None
+    }
+
+  def int(o: ListMap[String, Any], k: String, dflt: Int = 0): Int =
+    o.getOrElse(k, null) match {
+      case n: Number => n.intValue
+      case _ => dflt
+    }
+
+  def optInt(o: ListMap[String, Any], k: String): Option[Int] =
+    o.getOrElse(k, null) match {
+      case n: Number => Some(n.intValue)
+      case _ => None
+    }
+
+  def long(o: ListMap[String, Any], k: String, dflt: Long = 0L): Long =
+    o.getOrElse(k, null) match {
+      case n: Number => n.longValue
+      case _ => dflt
+    }
+
+  def optLong(o: ListMap[String, Any], k: String): Option[Long] =
+    o.getOrElse(k, null) match {
+      case n: Number => Some(n.longValue)
+      case _ => None
+    }
 }
 
 /** Jayway-compatible JSONPath evaluator (reference: LHUtil.jsonPath,

@@ -44,42 +44,26 @@ case class ExternalEventDef(
   * emits the SDK's exact order so exported documents are
   * indistinguishable from lhctl's. */
 object ResourceCodec {
-
-  private def obj(v: Any, what: String): ListMap[String, Any] = v match {
-    case mm: ListMap[_, _] => mm.asInstanceOf[ListMap[String, Any]]
-    case other => throw new SpecValidationError(
-      s"Expected JSON object for $what, got: $other")
-  }
-  private def str(m: ListMap[String, Any], k: String): Option[String] =
-    m.get(k) match { case Some(s: String) => Some(s); case _ => None }
-  private def int(m: ListMap[String, Any], k: String, dflt: Int): Int =
-    m.get(k) match {
-      case Some(i: Int) => i
-      case Some(l: Long) => l.toInt
-      case Some(d: Double) => d.toInt
-      case _ => dflt
-    }
+  import LHJson.{int, obj, str}
+  import SpecCodec.objOf
 
   private val statuses =
     Set("STARTING", "RUNNING", "COMPLETED", "STOPPING", "STOPPED",
       "DESIRED_REDEPLOY", "ERROR")
 
   def decodeTaskDef(json: String): TaskDef = {
-    val o = obj(LHJson.parse(json), "taskDef root")
+    val o = objOf(LHJson.parse(json), "taskDef root")
     val name = str(o, "name").getOrElse(
       throw new SpecValidationError("TaskDef missing name"))
-    val vars = o.get("requiredVars") match {
-      case Some(m: ListMap[_, _]) =>
-        m.asInstanceOf[ListMap[String, Any]].map { case (vn, vv) =>
-          val vm = obj(vv, s"requiredVar $vn")
-          val tpe = str(vm, "type").getOrElse(
-            throw new SpecValidationError(s"requiredVar $vn missing type"))
-          if (!VarType.all.contains(tpe))
-            throw new SpecValidationError(s"requiredVar $vn has bad type $tpe")
-          vn -> WFRunVariableDef(tpe, vm.getOrElse("defaultValue", null))
-        }
-      case _ => ListMap.empty[String, WFRunVariableDef]
-    }
+    val vars = o.get("requiredVars").flatMap(obj).getOrElse(ListMap.empty)
+      .map { case (vn, vv) =>
+        val vm = objOf(vv, s"requiredVar $vn")
+        val tpe = str(vm, "type").getOrElse(
+          throw new SpecValidationError(s"requiredVar $vn missing type"))
+        if (!VarType.all.contains(tpe))
+          throw new SpecValidationError(s"requiredVar $vn has bad type $tpe")
+        vn -> WFRunVariableDef(tpe, vm.getOrElse("defaultValue", null))
+      }
     val status = str(o, "status").getOrElse("RUNNING")
     if (!statuses.contains(status))
       throw new SpecValidationError(s"TaskDef $name has bad status $status")
@@ -112,7 +96,7 @@ object ResourceCodec {
     "deployMetadata" -> t.deployMetadata.orNull))
 
   def decodeExternalEventDef(json: String): ExternalEventDef = {
-    val o = obj(LHJson.parse(json), "externalEventDef root")
+    val o = objOf(LHJson.parse(json), "externalEventDef root")
     val name = str(o, "name").getOrElse(
       throw new SpecValidationError("ExternalEventDef missing name"))
     val status = str(o, "status").getOrElse("RUNNING")

@@ -135,16 +135,17 @@ class SpecValidationError(msg: String) extends Exception(msg)
   * (ThreadSpec.java:90-118).
   */
 object SpecCodec {
+  import LHJson.{list, obj, objOrEmpty, str}
 
   def decode(json: String): WFSpec = {
-    val root = obj(LHJson.parse(json), "wfSpec root")
+    val root = objOf(LHJson.parse(json), "wfSpec root")
     val name = str(root, "name").getOrElse(
       throw new SpecValidationError("WFSpec missing name"))
-    val threads = obj(root.getOrElse("threadSpecs",
+    val threads = objOf(root.getOrElse("threadSpecs",
         throw new SpecValidationError("WFSpec missing threadSpecs")),
       "threadSpecs")
     val threadSpecs = threads.map { case (tname, tval) =>
-      tname -> decodeThread(tname, obj(tval, s"threadSpec $tname"))
+      tname -> decodeThread(tname, objOf(tval, s"threadSpec $tname"))
     }
     val spec = WFSpec(
       name = name,
@@ -156,24 +157,20 @@ object SpecCodec {
   }
 
   private def decodeThread(name: String, t: ListMap[String, Any]): ThreadSpec = {
-    val nodes = objOrEmpty(t, "nodes").map { case (n, v) =>
-      n -> decodeNode(n, obj(v, s"node $n"))
+    val nodes = fieldObj(t, "nodes").map { case (n, v) =>
+      n -> decodeNode(n, objOf(v, s"node $n"))
     }
-    val edges = t.get("edges") match {
-      case Some(xs: Vector[_]) =>
-        xs.map(e => decodeEdge(obj(e, "edge"))).toVector
-      case _ => Vector.empty[Edge]
-    }
-    val varDefs = objOrEmpty(t, "variableDefs").map { case (vn, vv) =>
-      val m = obj(vv, s"variableDef $vn")
+    val edges = list(t, "edges").map(e => decodeEdge(objOf(e, "edge")))
+    val varDefs = fieldObj(t, "variableDefs").map { case (vn, vv) =>
+      val m = objOf(vv, s"variableDef $vn")
       val tpe = str(m, "type").getOrElse(
         throw new SpecValidationError(s"variableDef $vn missing type"))
       if (!VarType.all.contains(tpe))
         throw new SpecValidationError(s"variableDef $vn has bad type $tpe")
       vn -> WFRunVariableDef(tpe, m.getOrElse("defaultValue", null))
     }
-    val interrupts = objOrEmpty(t, "interruptDefs").map { case (en, ev) =>
-      val m = obj(ev, s"interruptDef $en")
+    val interrupts = fieldObj(t, "interruptDefs").map { case (en, ev) =>
+      val m = objOf(ev, s"interruptDef $en")
       en -> InterruptDef(str(m, "handlerThreadName").getOrElse(
         throw new SpecValidationError(s"interruptDef $en missing handler")))
     }
@@ -200,15 +197,15 @@ object SpecCodec {
       threadSpawnThreadSpecName = str(n, "threadSpawnThreadSpecName"),
       threadWaitThreadId =
         n.get("threadWaitThreadId").filter(_ != null).map(v =>
-          decodeAssignment(obj(v, "threadWaitThreadId"))),
-      variables = objOrEmpty(n, "variables").map { case (vn, vv) =>
-        vn -> decodeAssignment(obj(vv, s"assignment $vn"))
+          decodeAssignment(objOf(v, "threadWaitThreadId"))),
+      variables = fieldObj(n, "variables").map { case (vn, vv) =>
+        vn -> decodeAssignment(objOf(vv, s"assignment $vn"))
       },
-      variableMutations = objOrEmpty(n, "variableMutations").map { case (vn, vv) =>
-        vn -> decodeMutation(obj(vv, s"mutation $vn"))
+      variableMutations = fieldObj(n, "variableMutations").map { case (vn, vv) =>
+        vn -> decodeMutation(objOf(vv, s"mutation $vn"))
       },
       timeoutSeconds = n.get("timeoutSeconds").filter(_ != null).map(v =>
-        decodeAssignment(obj(v, "timeoutSeconds"))),
+        decodeAssignment(objOf(v, "timeoutSeconds"))),
       numRetries = n.get("numRetries") match {
         case Some(i: Int) => i
         case Some(l: Long) => l.toInt
@@ -217,14 +214,14 @@ object SpecCodec {
       exceptionToThrow = str(n, "exceptionToThrow"),
       baseExceptionhandler =
         n.get("baseExceptionhandler").filter(_ != null).map { v =>
-          val m = obj(v, "baseExceptionhandler")
+          val m = objOf(v, "baseExceptionhandler")
           ExceptionHandlerSpec(str(m, "handlerThreadSpecName").getOrElse(
             throw new SpecValidationError(
               s"node $name handler missing handlerThreadSpecName")))
         },
       customExceptionHandlers =
-        objOrEmpty(n, "customExceptionHandlers").map { case (en, ev) =>
-          val m = obj(ev, s"customExceptionHandler $en")
+        fieldObj(n, "customExceptionHandlers").map { case (en, ev) =>
+          val m = objOf(ev, s"customExceptionHandler $en")
           en -> ExceptionHandlerSpec(str(m, "handlerThreadSpecName").getOrElse(
             throw new SpecValidationError(
               s"handler $en missing handlerThreadSpecName")))
@@ -246,21 +243,21 @@ object SpecCodec {
       jsonPath = str(m, "jsonPath"),
       literalValue = m.getOrElse("literalValue", null),
       sourceVariable = m.get("sourceVariable").filter(_ != null).map(v =>
-        decodeAssignment(obj(v, "sourceVariable"))))
+        decodeAssignment(objOf(v, "sourceVariable"))))
 
-  private def decodeEdge(m: ListMap[String, Any]): Edge =
+  private[engine] def decodeEdge(m: ListMap[String, Any]): Edge =
     Edge(
       sourceNodeName = str(m, "sourceNodeName").getOrElse(
         throw new SpecValidationError("edge missing sourceNodeName")),
       sinkNodeName = str(m, "sinkNodeName").getOrElse(
         throw new SpecValidationError("edge missing sinkNodeName")),
       condition = m.get("condition").filter(_ != null).map { v =>
-        val c = obj(v, "condition")
+        val c = objOf(v, "condition")
         EdgeCondition(
-          leftSide = decodeAssignment(obj(c.getOrElse("leftSide",
+          leftSide = decodeAssignment(objOf(c.getOrElse("leftSide",
             throw new SpecValidationError("condition missing leftSide")),
             "leftSide")),
-          rightSide = decodeAssignment(obj(c.getOrElse("rightSide",
+          rightSide = decodeAssignment(objOf(c.getOrElse("rightSide",
             throw new SpecValidationError("condition missing rightSide")),
             "rightSide")),
           comparator = str(c, "comparator").getOrElse(
@@ -484,23 +481,14 @@ object SpecCodec {
     helper(spec.entrypointThreadName)
   }
 
-  // ---- tiny typed accessors over the LHJson tree ----
+  /** `v` as an object, or a SpecValidationError naming `what`: the
+    * metadata codecs' error for a malformed document. */
+  private[engine] def objOf(v: Any, what: String): ListMap[String, Any] =
+    obj(v).getOrElse(throw new SpecValidationError(
+      s"Expected JSON object for $what, got: $v"))
 
-  private def obj(v: Any, what: String): ListMap[String, Any] = v match {
-    case m: ListMap[_, _] => m.asInstanceOf[ListMap[String, Any]]
-    case other => throw new SpecValidationError(
-      s"Expected JSON object for $what, got: $other")
-  }
-
-  private def objOrEmpty(m: ListMap[String, Any], k: String): ListMap[String, Any] =
-    m.get(k) match {
-      case Some(v) if v != null => obj(v, k)
-      case _ => ListMap.empty
-    }
-
-  private def str(m: ListMap[String, Any], k: String): Option[String] =
-    m.get(k) match {
-      case Some(s: String) => Some(s)
-      case _ => None
-    }
+  /** Field `k` as an object, absent or null reading as empty; any
+    * other non-object fails in [[objOf]]. */
+  private def fieldObj(m: ListMap[String, Any], k: String): ListMap[String, Any] =
+    objOrEmpty(m, k).getOrElse(objOf(m(k), k))
 }

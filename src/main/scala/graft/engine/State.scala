@@ -94,8 +94,6 @@ final class ThreadRunState(
   val variableLocks: mutable.HashMap[String, Int] = mutable.HashMap.empty
   val haltReasons: mutable.LinkedHashSet[String] = mutable.LinkedHashSet.empty
 
-  def isFailed: Boolean =
-    status == Status.HALTED && haltReasons.contains(HaltReason.FAILED)
   def isCompleted: Boolean = status == Status.COMPLETED
   /** Reference: ThreadRun.isTerminated (ThreadRun.java:1263-1271). */
   def isTerminated: Boolean =
@@ -182,23 +180,7 @@ object StateCodec {
   private def upNextToJson(p: UpNextPair): ListMap[String, Any] = ListMap(
     "attemptNumber" -> p.attemptNumber,
     "alreadyActivated" -> p.alreadyActivated,
-    "edge" -> edgeToJson(p.edge))
-
-  private def edgeToJson(e: Edge): ListMap[String, Any] = ListMap(
-    "sourceNodeName" -> e.sourceNodeName,
-    "sinkNodeName" -> e.sinkNodeName,
-    "condition" -> e.condition.map(c => ListMap(
-      "leftSide" -> assignToJson(c.leftSide),
-      "rightSide" -> assignToJson(c.rightSide),
-      "comparator" -> c.comparator)).orNull)
-
-  private def assignToJson(a: VariableAssignment): ListMap[String, Any] =
-    ListMap(
-      "wfRunVariableName" -> a.wfRunVariableName.orNull,
-      "literalValue" -> a.literalValue,
-      "wfRunMetadata" -> a.wfRunMetadata.orNull,
-      "jsonPath" -> a.jsonPath.orNull,
-      "defaultValue" -> a.defaultValue)
+    "edge" -> SpecCodec.edgeTree(p.edge))
 
   private def taskToJson(t: TaskRunState): ListMap[String, Any] = ListMap(
     "position" -> t.position,
@@ -354,110 +336,72 @@ object StateCodec {
   // ---- decode (state-store round trip) ----
 
   def decode(json: String): WFRunState = {
-    val o = asObj(parse(json))
-    val s = new WFRunState(
-      str(o, "objectId"), str(o, "wfSpecDigest"), str(o, "wfSpecName"))
-    s.status = str(o, "status")
+    val o = objOf(parse(json))
+    val s = new WFRunState(str(o, "objectId").orNull,
+      str(o, "wfSpecDigest").orNull, str(o, "wfSpecName").orNull)
+    s.status = str(o, "status").orNull
     s.startTime = optLong(o, "startTime")
     s.endTime = optLong(o, "endTime")
-    s.errorCode = optStr(o, "errorCode")
-    s.errorMessage = optStr(o, "errorMessage")
-    o.get("threadRuns").collect { case xs: Vector[_] =>
-      xs.foreach(t => s.threadRuns += threadFromJson(asObj(t)))
-    }
-    o.get("correlatedEvents").collect { case m: ListMap[_, _] =>
-      m.asInstanceOf[ListMap[String, Any]].foreach { case (k, v) =>
-        val buf = mutable.ArrayBuffer.empty[EventCorrel]
-        v match {
-          case xs: Vector[_] => xs.foreach(c => buf += correlFromJson(asObj(c)))
-          case _ => ()
-        }
-        s.correlatedEvents(k) = buf
+    s.errorCode = str(o, "errorCode")
+    s.errorMessage = str(o, "errorMessage")
+    list(o, "threadRuns").foreach(t => s.threadRuns += threadFromJson(objOf(t)))
+    objOrEmpty(o, "correlatedEvents").foreach(_.foreach { case (k, v) =>
+      val buf = mutable.ArrayBuffer.empty[EventCorrel]
+      v match {
+        case xs: Vector[_] => xs.foreach(c => buf += correlFromJson(objOf(c)))
+        case _ => ()
       }
-    }
+      s.correlatedEvents(k) = buf
+    })
     s
   }
 
   private def threadFromJson(o: ListMap[String, Any]): ThreadRunState = {
-    val t = new ThreadRunState(int(o, "id"), str(o, "threadSpecName"))
-    t.status = str(o, "status")
-    o.get("variables").collect { case m: ListMap[_, _] =>
-      m.asInstanceOf[ListMap[String, Any]].foreach { case (k, v) =>
-        t.variables(k) = v
-      }
+    val t = new ThreadRunState(int(o, "id"), str(o, "threadSpecName").orNull)
+    t.status = str(o, "status").orNull
+    objOrEmpty(o, "variables").foreach(_.foreach { case (k, v) =>
+      t.variables(k) = v
+    })
+    list(o, "upNext").foreach { p =>
+      val po = objOf(p)
+      t.upNext += new UpNextPair(
+        int(po, "attemptNumber"),
+        SpecCodec.decodeEdge(SpecCodec.objOf(po.getOrElse("edge", null), "edge")),
+        po.get("alreadyActivated").contains(true))
     }
-    o.get("upNext").collect { case xs: Vector[_] =>
-      xs.foreach { p =>
-        val po = asObj(p)
-        t.upNext += new UpNextPair(
-          int(po, "attemptNumber"),
-          edgeFromJson(asObj(po("edge"))),
-          po.get("alreadyActivated").contains(true))
-      }
-    }
-    o.get("taskRuns").collect { case xs: Vector[_] =>
-      xs.foreach(x => t.taskRuns += taskFromJson(asObj(x)))
-    }
+    list(o, "taskRuns").foreach(x => t.taskRuns += taskFromJson(objOf(x)))
     t.parentThreadId = optInt(o, "parentThreadId")
-    o.get("childThreadIds").collect { case xs: Vector[_] =>
-      xs.foreach(x => t.childThreadIds += toInt(x))
-    }
-    o.get("activeInterruptThreadIds").collect { case xs: Vector[_] =>
-      xs.foreach(x => t.activeInterruptThreadIds += toInt(x))
-    }
-    o.get("handledInterruptThreadIds").collect { case xs: Vector[_] =>
-      xs.foreach(x => t.handledInterruptThreadIds += toInt(x))
-    }
-    t.errorMessage = optStr(o, "errorMessage").getOrElse("")
+    list(o, "childThreadIds").foreach(x => t.childThreadIds += toInt(x))
+    list(o, "activeInterruptThreadIds")
+      .foreach(x => t.activeInterruptThreadIds += toInt(x))
+    list(o, "handledInterruptThreadIds")
+      .foreach(x => t.handledInterruptThreadIds += toInt(x))
+    t.errorMessage = str(o, "errorMessage").getOrElse("")
     t.isInterruptThread = o.get("isInterruptThread").contains(true)
-    t.exceptionName = optStr(o, "exceptionName")
-    o.get("variableLocks").collect { case m: ListMap[_, _] =>
-      m.asInstanceOf[ListMap[String, Any]].foreach { case (k, v) =>
-        t.variableLocks(k) = toInt(v)
-      }
-    }
-    o.get("haltReasons").collect { case xs: Vector[_] =>
-      xs.foreach(x => t.haltReasons += x.asInstanceOf[String])
-    }
+    t.exceptionName = str(o, "exceptionName")
+    objOrEmpty(o, "variableLocks").foreach(_.foreach { case (k, v) =>
+      t.variableLocks(k) = toInt(v)
+    })
+    list(o, "haltReasons").foreach(x => t.haltReasons += x.asInstanceOf[String])
     t
   }
-
-  private def edgeFromJson(o: ListMap[String, Any]): Edge =
-    Edge(
-      sourceNodeName = optStr(o, "sourceNodeName").getOrElse(""),
-      sinkNodeName = str(o, "sinkNodeName"),
-      condition = o.get("condition").filter(_ != null).map { c =>
-        val co = asObj(c)
-        EdgeCondition(
-          assignFromJson(asObj(co("leftSide"))),
-          assignFromJson(asObj(co("rightSide"))),
-          str(co, "comparator"))
-      })
-
-  private def assignFromJson(o: ListMap[String, Any]): VariableAssignment =
-    VariableAssignment(
-      wfRunVariableName = optStr(o, "wfRunVariableName"),
-      literalValue = o.getOrElse("literalValue", null),
-      wfRunMetadata = optStr(o, "wfRunMetadata"),
-      jsonPath = optStr(o, "jsonPath"),
-      defaultValue = o.getOrElse("defaultValue", null))
 
   private def taskFromJson(o: ListMap[String, Any]): TaskRunState = {
     val t = new TaskRunState(
       int(o, "position"), int(o, "number"), int(o, "threadId"),
-      str(o, "nodeName"), int(o, "attemptNumber"))
-    t.status = str(o, "status")
+      str(o, "nodeName").orNull, int(o, "attemptNumber"))
+    t.status = str(o, "status").orNull
     t.stdin = o.getOrElse("stdin", null)
     t.stdout = o.getOrElse("stdout", null)
     t.stderr = o.getOrElse("stderr", null)
     t.returnCode = int(o, "returnCode")
-    t.workerId = optStr(o, "workerId").orNull
+    t.workerId = str(o, "workerId").orNull
     t.taskDefVersionNumber = int(o, "taskDefVersionNumber", -1)
     t.scheduleTime = optLong(o, "scheduleTime")
     t.startTime = optLong(o, "startTime")
     t.endTime = optLong(o, "endTime")
-    t.failureReason = optStr(o, "failureReason")
-    t.failureMessage = optStr(o, "failureMessage")
+    t.failureReason = str(o, "failureReason")
+    t.failureMessage = str(o, "failureMessage")
     t
   }
 
@@ -473,50 +417,26 @@ object StateCodec {
     "assignedTaskRunExecutionNumber" -> c.assignedTaskRunExecutionNumber)
 
   private def correlFromJson(o: ListMap[String, Any]): EventCorrel = {
-    val e = asObj(o("event"))
+    val e = objOf(o.getOrElse("event", null))
     val c = new EventCorrel(
       ExternalEventPayload(
-        optStr(e, "externalEventDefId").getOrElse(""),
-        optStr(e, "externalEventDefName").getOrElse(""),
+        str(e, "externalEventDefId").getOrElse(""),
+        str(e, "externalEventDefName").getOrElse(""),
         e.getOrElse("content", null),
         long(e, "timestamp")),
       long(o, "arrivalTime"))
     c.assignedThreadId = int(o, "assignedThreadId", -1)
-    c.assignedNodeName = optStr(o, "assignedNodeName")
+    c.assignedNodeName = str(o, "assignedNodeName")
     c.assignedTaskRunExecutionNumber =
       int(o, "assignedTaskRunExecutionNumber", -1)
     c
   }
 
-  // ---- helpers ----
-  private def asObj(v: Any): ListMap[String, Any] =
-    v.asInstanceOf[ListMap[String, Any]]
-  private def str(o: ListMap[String, Any], k: String): String =
-    o.get(k) match { case Some(s: String) => s; case _ => null }
-  private def optStr(o: ListMap[String, Any], k: String): Option[String] =
-    o.get(k) match { case Some(s: String) => Some(s); case _ => None }
+  private def objOf(v: Any): ListMap[String, Any] =
+    obj(v).getOrElse(throw new VarSubError(s"Expected JSON object, got $v"))
+  /** List elements read strictly: a non-number is an error. */
   private def toInt(v: Any): Int = v match {
     case i: Int => i; case l: Long => l.toInt; case d: Double => d.toInt
     case _ => throw new VarSubError(s"Expected int, got $v")
   }
-  private def int(o: ListMap[String, Any], k: String, dflt: Int = 0): Int =
-    o.get(k) match {
-      case Some(null) | None => dflt
-      case Some(v) => toInt(v)
-    }
-  private def optInt(o: ListMap[String, Any], k: String): Option[Int] =
-    o.get(k) match {
-      case Some(null) | None => None
-      case Some(v) => Some(toInt(v))
-    }
-  private def long(o: ListMap[String, Any], k: String, dflt: Long = 0L): Long =
-    o.get(k) match {
-      case Some(i: Int) => i.toLong; case Some(l: Long) => l
-      case Some(d: Double) => d.toLong; case _ => dflt
-    }
-  private def optLong(o: ListMap[String, Any], k: String): Option[Long] =
-    o.get(k) match {
-      case Some(i: Int) => Some(i.toLong); case Some(l: Long) => Some(l)
-      case _ => None
-    }
 }

@@ -77,8 +77,9 @@ class GraftApi(
 
   /** Status of a rendered response (spec/test convenience). */
   def statusOf(responseJson: String): String =
-    LHJson.parse(responseJson).asInstanceOf[ListMap[String, Any]]("status")
-      .asInstanceOf[String]
+    LHJson.obj(LHJson.parse(responseJson)).flatMap(LHJson.str(_, "status"))
+      .getOrElse(throw new IllegalArgumentException(
+        s"not an RPC response: $responseJson"))
 
   // ---- metadata routes ----
 

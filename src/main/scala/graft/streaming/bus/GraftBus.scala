@@ -97,13 +97,13 @@ object GraftBus {
       from: Long, until: Long): Seq[BusRecord] =
     (from until until).map { off =>
       val f = partitionDir(root, topic, partition).resolve(recName(off))
-      val o = LHJson.parse(
-        new String(Files.readAllBytes(f), StandardCharsets.UTF_8))
-        .asInstanceOf[ListMap[String, Any]]
+      val o = LHJson.obj(LHJson.parse(
+        new String(Files.readAllBytes(f), StandardCharsets.UTF_8)))
+        .getOrElse(throw new IllegalStateException(s"corrupt bus record $f"))
       BusRecord(topic, partition, off,
-        o.getOrElse("key", "").asInstanceOf[String],
-        o.getOrElse("value", "").asInstanceOf[String],
-        o.get("ts").map(_.toString.toLong).getOrElse(0L))
+        LHJson.str(o, "key").getOrElse(""),
+        LHJson.str(o, "value").getOrElse(""),
+        LHJson.long(o, "ts"))
     }
 
   /** At-least-once producer append; returns (partition, offset) — the

@@ -26,6 +26,11 @@ class RocksDbVolumeSpec extends AnyFunSuite {
           .flatMap(p => Seq("--add-opens", s"java.base/$p=ALL-UNNAMED")) ++
         Seq("-Xmx8g", "-Dspark.ui.enabled=false",
           "-Dspark.sql.session.timeZone=UTC",
+          // BenchState exits through Runtime.halt, which skips
+          // deleteOnExit: the RocksDB and LZ4 native libraries it
+          // extracts into java.io.tmpdir would stay behind. Under this
+          // JVM's scratch root, this JVM's shutdown hook deletes them.
+          s"-Djava.io.tmpdir=${graft.util.Dirs.scratch("graft-statebench-tmp-")}",
           "-cp", cp, "graft.BenchState", "1000000", "rocksdb")): _*)
     // The full output goes to a file the OS writes, so nothing blocks
     // on the pipe: the waitFor cap below is live, and a failure keeps
