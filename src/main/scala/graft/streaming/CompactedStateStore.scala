@@ -2,6 +2,9 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import java.util.UUID
+import java.util.concurrent.CopyOnWriteArrayList
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,10 +23,13 @@ import graft.util.Dirs
   * read cost grows with (runs × snapshots-per-run), not with live
   * state. This store fixes that contract:
   *
-  *  - the streaming sink ([[streamingSink]]) appends snapshot batches
-  *    to `log/` via foreachBatch (plain parquet appends — deliberately
-  *    NO `_spark_metadata` commit log, so compaction owns file
-  *    lifecycle without corrupting a streaming-sink manifest);
+  *  - [[append]] (and the streaming sink [[streamingSink]], which calls
+  *    it from foreachBatch) writes each batch into a private staging
+  *    dir `_incoming-<uuid>` under the store, then moves its parquet
+  *    files into `log/` — plain parquet files, deliberately NO
+  *    `_spark_metadata` commit log, so compaction owns file lifecycle
+  *    without corrupting a streaming-sink manifest. The move is what
+  *    tells the store exactly which file names the batch published;
   *  - [[compact]] folds base ∪ unconsumed-log into a NEW VERSIONED
   *    base (`base_v<K+1>`, one row per run, latest by the scheduler's
   *    emit `seq`) and publishes it by atomically advancing a version
@@ -39,13 +45,31 @@ import graft.util.Dirs
   *    folding the full history while the files touched stay
   *    O(live runs + delta since last compaction).
   *
+  * Write-through: a [[ServingCache]] registers itself with its store
+  * when it is built. While one is registered (and not bypassed),
+  * [[append]] collects the batch once, writes the files from the
+  * collected rows (a foreachBatch frame is never run twice) and, after
+  * the move and before returning, hands the cache the published file
+  * names with their `(wfRunId, seq, json, wfSpecName)` rows. [[compact]]
+  * tells the cache which files it folded (old base plus newly consumed
+  * log) and which base files it published. Both hand-offs happen while
+  * the cache's monitor is held across the publish, so no lookup sees a
+  * published file the cache has not merged. Only this instance's own
+  * writes are handed over; files another process or another instance
+  * on the same directory writes reach the cache through its per-lookup
+  * refresh. The registry is transient: a deserialized copy of the
+  * store has no caches.
+  *
   * Crash contract (at-least-once, idempotent): foreachBatch may replay
   * a batch after recovery, appending duplicate (wfRunId, seq) rows —
   * harmless, `latest` keeps one of the identical copies. A crash
-  * anywhere inside [[compact]] before the version-pointer move leaves
-  * the published version untouched (orphan tmp/next-version dirs are
-  * re-created on the next run); after the pointer move, deferred
-  * deletions simply happen at the next compaction.
+  * inside [[append]] before the move leaves only an orphan staging dir
+  * (never read); one during the move leaves part of the batch in
+  * `log/`, which the replay completes. A crash anywhere inside
+  * [[compact]] before the version-pointer move leaves the published
+  * version untouched (orphan tmp/next-version dirs are re-created on
+  * the next run); after the pointer move, deferred deletions simply
+  * happen at the next compaction.
   */
 final class CompactedStateStore(dir: String) extends Serializable {
 
@@ -54,6 +78,14 @@ final class CompactedStateStore(dir: String) extends Serializable {
   private def versionFile: Path = Paths.get(dir, "_version")
   private def consumedFile(v: Long): Path = Paths.get(dir, s"_consumed_v$v")
   private def formatFile: Path = Paths.get(dir, "_format")
+
+  @transient private lazy val caches = new CopyOnWriteArrayList[ServingCache]()
+
+  /** Hand this store's own appends and compactions to `cache`. */
+  private[streaming] def register(cache: ServingCache): Unit = caches.add(cache)
+
+  private def listeningCaches: List[ServingCache] =
+    caches.asScala.filterNot(_.isBypassed).toList
 
   /** On-disk format guard. Format 2 = enriched serving schema (no
     * `topic` column; `wfSpecName`/`status`/`aliases` materialized at
@@ -119,11 +151,37 @@ final class CompactedStateStore(dir: String) extends Serializable {
   /** Append one micro-batch of snapshot rows to the log, enriched to
     * the serving schema ([[CompactedStateStore.enrich]]): scheduler
     * frames pass through, raw bus frames pay their one-time decode
-    * HERE instead of on every query. */
+    * HERE instead of on every query. The batch is written to a staging
+    * dir and its files moved into `log/`; registered caches receive
+    * the batch before this returns (class doc, Write-through). */
   def append(batch: DataFrame): Unit = {
     ensureFormat()
-    CompactedStateStore.enrich(batch)
-      .write.mode("append").parquet(logDir.toString)
+    val enriched = CompactedStateStore.enrich(batch)
+    val listening = listeningCaches
+    val staging = Paths.get(dir, s"_incoming-${UUID.randomUUID()}")
+    try {
+      val rows =
+        if (listening.isEmpty) {
+          enriched.write.parquet(staging.toString)
+          Nil
+        } else {
+          val collected = enriched.collect()
+          enriched.sparkSession
+            .createDataFrame(java.util.Arrays.asList(collected: _*), enriched.schema)
+            .write.parquet(staging.toString)
+          collected.toSeq.map(r => (r.getAs[String]("wfRunId"),
+            r.getAs[Long]("seq"), r.getAs[String]("json"),
+            r.getAs[String]("wfSpecName")))
+        }
+      val staged = parquetFiles(staging).map(Paths.get(_))
+      val published = staged.map(f => logDir.resolve(f.getFileName))
+      Files.createDirectories(logDir)
+      ServingCache.publish(listening) {
+        staged.zip(published).foreach { case (from, to) =>
+          Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
+        }
+      }(_.appended(published.map(_.toString), rows))
+    } finally Dirs.deleteRecursively(staging)
   }
 
   /** Streaming sink for the scheduler's snapshot rows; `compactEvery`
@@ -178,12 +236,15 @@ final class CompactedStateStore(dir: String) extends Serializable {
       .coalesce(1)
       .write.mode("overwrite").parquet(next.toString)
 
+    val newBase = parquetFiles(next)
     // publish v+1: manifest first, then the version pointer (readers
     // resolve the pointer before the manifest, so they never see a
     // version without its manifest)
-    writeAtomic(consumedFile(v + 1),
-      (prevConsumed ++ newlyConsumed).mkString("\n"))
-    writeAtomic(versionFile, (v + 1).toString)
+    ServingCache.publish(listeningCaches) {
+      writeAtomic(consumedFile(v + 1),
+        (prevConsumed ++ newlyConsumed).mkString("\n"))
+      writeAtomic(versionFile, (v + 1).toString)
+    }(_.compacted(baseFiles ++ newlyConsumed, newBase))
 
     // deferred vacuum: delete what version v superseded — in-flight
     // readers of v planned against v's files, which all still exist

@@ -42,12 +42,13 @@ import graft.streaming.bus.GraftBus
 class GraftApi(
     spark: SparkSession, store: MetadataStore, busRoot: String,
     compacted: Option[CompactedStateStore] = None,
-    // Optional driver-side read-through cache over `compacted` (must
-    // wrap the SAME store): GET /WFRun answers warm hits from memory
-    // (microseconds) instead of launching a Spark job (~150-300 ms),
-    // the reference's local-RocksDB locality bet made explicit. Miss
-    // and Bypass both fall through to the distributed path, so wiring
-    // the cache can only ever change LATENCY, never an answer.
+    // Optional driver-side cache over `compacted` (must wrap the SAME
+    // store, whose own writes it receives write-through): GET /WFRun
+    // answers from memory (microseconds) instead of launching a Spark
+    // job (~150-300 ms), the reference's local-RocksDB locality bet
+    // made explicit. Miss and Bypass both fall through to the
+    // distributed path, so wiring the cache can only ever change
+    // LATENCY, never an answer.
     servingCache: Option[ServingCache] = None) {
 
   require(servingCache.forall(c => compacted.exists(_ eq c.store)),
@@ -202,9 +203,9 @@ class GraftApi(
   }
 
   /** Resolve a deployed WFSpec by name via the metadata store's point
-    * lookup (Q8) — never a full deployed-spec scan per request. */
-  private def specByName(name: String): Option[WFSpec] =
-    store.getByNameOrId(store.Kind.WFSpec, name).map(SpecCodec.decode)
+    * lookup (Q8), decoded once per metadata log state — never a full
+    * deployed-spec scan or a spec decode per request. */
+  private def specByName(name: String): Option[WFSpec] = store.wfSpec(name)
 
   /** GET /WFRun/{id}: the latest snapshot, exported in the SDK's
     * serialized WFRunSchema shape so lhctl-family tooling reads it
@@ -225,15 +226,61 @@ class GraftApi(
 
   /** GET /WFRunAlias/{key}/{value}: Q2/Q9 variable search — every
     * String-valued variable is an index alias (WFRun.getAliases).
-    * The predicate evaluates DISTRIBUTED (columnar over the `aliases`
-    * map column when the frame carries one); only matching run ids
-    * (bounded by matches) reach the driver. */
+    *
+    * Concurrent searches share one scan. A search joins a queue; a scan
+    * starts only after the search was queued and answers every search
+    * waiting at that moment, and at most one scan runs at a time, so N
+    * concurrent searches cost one Spark job, not N competing ones (the
+    * amortised per-job coordination of Drizzle, SOSP 2017). The scan
+    * evaluates DISTRIBUTED: the latest frame filtered by the OR of the
+    * waiting searches' predicates, columnar over the `aliases` map
+    * column, collecting `(wfRunId, aliases)` of the matching runs
+    * (bounded by matches); each search then picks its own runs from
+    * those rows. A frame without an `aliases` column runs
+    * [[StateTable.searchByVariable]] per search inside the same scan.
+    * A scan's error reaches every search it was answering. */
   def getWfRunAlias(key: String, value: String): String = {
+    val search = new AliasSearch(key, value)
+    pendingSearches.add(search)
+    val answer = aliasScan.synchronized {
+      if (search.answer == null) {
+        val batch = Iterator.continually(pendingSearches.poll())
+          .takeWhile(_ != null).toVector
+        val answers =
+          try scanAliases(batch).map(Right(_))
+          catch { case t: Throwable => batch.map(_ => Left(t)) }
+        batch.zip(answers).foreach { case (s, a) => s.answer = a }
+      }
+      search.answer
+    }
+    answer.fold(e => throw e, ids => response(RpcStatus.OK, None, ids))
+  }
+
+  private final class AliasSearch(val key: String, val value: String) {
+    // written and read under `aliasScan`
+    var answer: Either[Throwable, Vector[String]] = _
+  }
+  private val pendingSearches =
+    new java.util.concurrent.ConcurrentLinkedQueue[AliasSearch]()
+  private val aliasScan = new Object
+
+  /** One scan answering `batch`, in order: sorted matching run ids. */
+  private def scanAliases(batch: Vector[AliasSearch]): Vector[Vector[String]] = {
+    import org.apache.spark.sql.functions.{array_contains, col}
     import spark.implicits._
-    val ids = StateTable
-      .searchByVariable(latestFrame(None), key, value)
-      .as[String].collect().sorted.toVector
-    response(RpcStatus.OK, None, ids)
+    val frame = latestFrame(None)
+    if (frame.columns.contains("aliases")) {
+      val rows = frame
+        .filter(batch.map(s => array_contains(col("aliases")(s.key), s.value))
+          .reduce(_ || _))
+        .select("wfRunId", "aliases").as[(String, Map[String, Seq[String]])]
+        .collect()
+      batch.map(s => rows.collect {
+        case (id, aliases) if aliases.get(s.key).exists(_.contains(s.value)) => id
+      }.sorted.toVector)
+    } else
+      batch.map(s => StateTable.searchByVariable(frame, s.key, s.value)
+        .as[String].collect().sorted.toVector)
   }
 
   // ---- run-lifecycle routes (produce to the spec's event topic) ----
@@ -264,10 +311,9 @@ class GraftApi(
       wfRunId: Option[String] = None,
       await: Option[org.apache.spark.sql.streaming.StreamingQuery] = None,
       timeoutMs: Long = 30000L): String =
-    store.getByNameOrId(store.Kind.WFSpec, wfSpecKey) match {
+    store.wfSpec(wfSpecKey) match {
       case None => response(RpcStatus.OBJECT_NOT_FOUND, Some(wfSpecKey))
-      case Some(doc) =>
-        val spec = SpecCodec.decode(doc)
+      case Some(spec) =>
         val runId = wfRunId.getOrElse(
           java.util.UUID.randomUUID().toString.replace("-", ""))
         val (part, off) = GraftBus.send(busRoot, eventTopic(spec), runId,

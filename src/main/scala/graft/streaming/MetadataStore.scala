@@ -22,7 +22,7 @@ import graft.engine.{ExternalEventDef, ResourceCodec, SpecCodec, TaskDef,
   */
 class MetadataStore(spark: SparkSession, rootDir: String) {
   import spark.implicits._
-  import MetadataStore.MetaRow
+  import MetadataStore.{MetaRow, View}
 
   private val path = s"$rootDir/metadata_log"
   // The compaction cache's staleness probe walks the log with
@@ -100,9 +100,10 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
   // Staleness: re-validated against the log's file listing on every
   // read — parquet appends create a new file, so this instance's own
   // writes AND external writers are visible to the very next lookup
-  // (same contract as ServingCache over CompactedStateStore).
-  @volatile private var cacheFiles: Set[String] = null
-  @volatile private var cacheRows: Map[(String, String), MetaRow] = Map.empty
+  // (the contract ServingCache keeps for files other writers add).
+  // Decoded WFSpecs are memoised in the same view, so they are dropped
+  // with it.
+  @volatile private var view: View = null
 
   private def logFiles(): Set[String] = {
     val dir = new java.io.File(path)
@@ -121,16 +122,16 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
       .getOrElse(Set.empty)
   }
 
-  /** The compacted view as an in-memory map, refreshed only when the
-    * log's file set changed (one bounded Spark read per WRITE, never
-    * per read). Tombstoned ids are absent. */
-  private def compacted(): Map[(String, String), MetaRow] = {
+  /** The compacted view of the log, rebuilt only when the log's file
+    * set changed (one bounded Spark read per WRITE, never per read). */
+  private def current(): View = {
     val files = logFiles()
-    if (cacheFiles == files) return cacheRows
+    val v = view
+    if (v != null && v.files == files) return v
     synchronized {
       val fresh = logFiles()
-      if (cacheFiles != fresh) {
-        cacheRows =
+      if (view == null || view.files != fresh)
+        view = new View(fresh,
           if (fresh.isEmpty) Map.empty
           else spark.read.parquet(path)
             .select($"kind", $"id", $"name", $"json", $"deleted", $"seq")
@@ -141,12 +142,13 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
               if (latest._5) None // tombstone wins: id is gone
               else Some(k -> MetaRow(latest._1, latest._2, latest._3,
                 latest._4, latest._6))
-            }
-        cacheFiles = fresh
-      }
-      cacheRows
+            })
+      view
     }
   }
+
+  /** Latest (kind, id) -> record; tombstoned ids are absent. */
+  private def compacted(): Map[(String, String), MetaRow] = current().rows
 
   /** Q1: point lookup by id (served from the compacted cache). */
   def getById(kind: String, id: String): Option[String] =
@@ -154,13 +156,21 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
 
   /** Q8: lookup by id, falling back to the latest record with that name
     * (LHDatabaseClient.getByNameOrId, LHDatabaseClient.java:22-45). */
-  def getByNameOrId(kind: String, key: String): Option[String] = {
-    getById(kind, key).orElse {
-      compacted().values.iterator
-        .filter(r => r.kind == kind && r.name == key)
-        .toSeq.sortBy(-_.seq).headOption.map(_.json)
-    }
+  def getByNameOrId(kind: String, key: String): Option[String] =
+    rowByNameOrId(compacted(), kind, key).map(_.json)
+
+  /** Q8 for a WFSpec, decoded: the decode (with its validation) runs
+    * once per spec per log file set, not once per request. */
+  def wfSpec(key: String): Option[WFSpec] = {
+    val v = current()
+    rowByNameOrId(v.rows, Kind.WFSpec, key).map(v.spec)
   }
+
+  private def rowByNameOrId(rows: Map[(String, String), MetaRow],
+      kind: String, key: String): Option[MetaRow] =
+    rows.get((kind, key)).orElse(
+      rows.values.iterator.filter(r => r.kind == kind && r.name == key)
+        .toSeq.sortBy(-_.seq).headOption)
 
   /** All ids with the given (kind, name) — the metadata alias route. */
   def idsByName(kind: String, name: String): Seq[String] =
@@ -177,15 +187,28 @@ class MetadataStore(spark: SparkSession, rootDir: String) {
     * the next (re)start of the streaming query picks it up — one query
     * serves every spec, replacing the reference's scheduler-process-
     * per-WFSpec (WFSpec.deploy, WFSpec.java:263-272). */
-  def deployedSpecs(): Map[String, WFSpec] =
-    compacted().values.collect { case r if r.kind == Kind.WFSpec =>
-      val sp = SpecCodec.decode(r.json)
+  def deployedSpecs(): Map[String, WFSpec] = {
+    val v = current()
+    v.rows.values.collect { case r if r.kind == Kind.WFSpec =>
+      val sp = v.spec(r)
       sp.name -> sp
     }.toMap
+  }
 }
 
 object MetadataStore {
   /** One compacted metadata record: latest per (kind, id). */
   final case class MetaRow(
       kind: String, id: String, name: String, json: String, seq: Long)
+
+  /** The compacted log as of one file set, with the WFSpecs decoded
+    * from it so far; a new file set gets a new view, so a memoised
+    * spec never outlives the record it was decoded from. */
+  private final class View(
+      val files: Set[String], val rows: Map[(String, String), MetaRow]) {
+    private val specs =
+      new java.util.concurrent.ConcurrentHashMap[String, WFSpec]()
+    def spec(r: MetaRow): WFSpec =
+      specs.computeIfAbsent(r.id, _ => SpecCodec.decode(r.json))
+  }
 }

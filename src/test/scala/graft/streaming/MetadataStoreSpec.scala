@@ -41,6 +41,20 @@ class MetadataStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(store.getAllIds(store.Kind.TaskDef).isEmpty)
   }
 
+  test("a WFSpec is decoded once per log file set; deployedSpecs shares it") {
+    val s = new MetadataStore(spark,
+      graft.util.Dirs.scratch("graft-meta-memo").toString)
+    s.postWfSpec(goodSpec)
+    val first = s.wfSpec("meta_basic").get
+    assert(s.wfSpec("meta_basic").get eq first)
+    assert(s.deployedSpecs()("meta_basic") eq first)
+    assert(s.wfSpec("ghost").isEmpty)
+    // any new log file drops the memo with the rows it was decoded from
+    s.postResource(s.Kind.TaskDef, "td-memo", "echo_task", "{}")
+    val after = s.wfSpec("meta_basic").get
+    assert(!(after eq first) && after == first)
+  }
+
   private def fixture(name: String): String = {
     val in = getClass.getResourceAsStream(s"/wirespecs/$name.json")
     require(in != null, s"missing fixture $name")

@@ -15,11 +15,19 @@ as an empty `{}` and only a judge-side re-run closed the round's
 record — the builder's own gate run must be self-evidencing, exactly
 like Bench's BENCH_gate_latest.json (r17 verdict #5).
 """
-import json, sys, glob, os
+import atexit, json, sys, glob, os, shutil, tempfile
 import duckdb
 
 out_dir, sf_dir = sys.argv[1], sys.argv[2]
 con = duckdb.connect()
+# Half of RAM and a spill directory: without a temp_directory an
+# in-memory DuckDB cannot spill, so a query larger than its limit fails
+# with "Out of Memory" instead of running out of core.
+spill_dir = tempfile.mkdtemp(prefix="check-oracle-spill-")
+atexit.register(shutil.rmtree, spill_dir, ignore_errors=True)
+ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+con.execute(f"SET memory_limit = '{ram_mb // 2}MB'")
+con.execute(f"SET temp_directory = '{spill_dir}'")
 for t in ["region","nation","customer","supplier","part","orders",
           "lineitem","events","documents","embeddings"]:
     p = f"{sf_dir}/{t}.parquet"
