@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.engine.LHJson
-import graft.streaming.{GraftApi, MetadataStore, Scheduler}
+import graft.streaming.{CompactedStateStore, GraftApi, MetadataStore, Scheduler}
 import graft.util.Sessions
 
 /** `lhctl`-shaped command-line client over [[graft.streaming.GraftApi]]
@@ -23,8 +23,10 @@ import graft.util.Sessions
   * byte-identical to the API layer.
   *
   * Usage: runMain graft.Ctl <rootDir> <verb> [args...]
-  *   rootDir layout: <root>/bus (topics), <root>/meta (metadata log),
-  *   <root>/ckpt (scheduler checkpoint) — the single-directory
+  *   rootDir layout: <root>/bus (event and task topics), <root>/meta
+  *   (metadata log), <root>/state (compacted run-state store: `serve`
+  *   writes it, every run-state verb reads it), <root>/ckpt (scheduler
+  *   checkpoint) — the single-directory
   *   analogue of the reference's cluster address env
   *   (lh_lib/client.py).
   *
@@ -74,7 +76,8 @@ object Ctl {
     * Session injected so specs drive the CLI in-process. */
   def exec(spark: SparkSession, root: String, args: Seq[String]): String = {
     val store = new MetadataStore(spark, s"$root/meta")
-    val api = new GraftApi(spark, store, s"$root/bus")
+    val api = new GraftApi(spark, store, s"$root/bus",
+      Some(new CompactedStateStore(s"$root/state")))
     args.toList match {
       case "deploy" :: t :: file :: Nil =>
         val json = {
@@ -109,6 +112,12 @@ object Ctl {
     }
   }
 
+  /** `serve` folds the run-state log into the store's base every this
+    * many micro-batches (about 2 s at the 200 ms trigger: the
+    * scheduler's processing-time timeouts run a batch every trigger),
+    * so a read touches O(live runs) rows plus the recent log. */
+  private val CompactEveryBatches = 10L
+
   /** The "deployed engine": one scheduler streaming query over every
     * deployed spec's event topic (deploy-as-streaming-query is this
     * engine's analogue of the reference's DockerWorkflowDeployer —
@@ -123,7 +132,9 @@ object Ctl {
     val specs = store.deployedSpecs()
     val events = Scheduler.busEventSource(spark, s"$root/bus", "wfEvents__.*")
     val outputs = Scheduler(events, specs)
-    val q = Scheduler.busWireSink(outputs, s"$root/bus", s"$root/ckpt")
+    val q = Scheduler.storeSink(outputs, s"$root/bus",
+        new CompactedStateStore(s"$root/state"), s"$root/ckpt",
+        CompactEveryBatches)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
     // `serve ... worker`: also run the loopback task worker over every

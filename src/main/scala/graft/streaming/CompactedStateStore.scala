@@ -6,9 +6,7 @@ import java.util.UUID
 import java.util.concurrent.CopyOnWriteArrayList
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.util.Dirs
 
@@ -23,8 +21,8 @@ import graft.util.Dirs
   * read cost grows with (runs × snapshots-per-run), not with live
   * state. This store fixes that contract:
   *
-  *  - [[append]] (and the streaming sink [[streamingSink]], which calls
-  *    it from foreachBatch) writes each batch into a private staging
+  *  - [[append]] (called from foreachBatch by the scheduler's
+  *    [[Scheduler.storeSink]]) writes each batch into a private staging
   *    dir `_incoming-<uuid>` under the store, then moves its parquet
   *    files into `log/` — plain parquet files, deliberately NO
   *    `_spark_metadata` commit log, so compaction owns file lifecycle
@@ -88,8 +86,8 @@ final class CompactedStateStore(dir: String) extends Serializable {
     caches.asScala.filterNot(_.isBypassed).toList
 
   /** On-disk format guard. Format 2 = enriched serving schema (no
-    * `topic` column; `wfSpecName`/`status`/`aliases` materialized at
-    * append time). A log written before the enrichment change holds
+    * `topic` column; `wfSpecName`/`status`/`aliases` materialized by
+    * the scheduler). A log written before the enrichment change holds
     * raw-schema files; appending enriched files beside them would give
     * spark.read.parquet (no mergeSchema) a mixed-schema footprint that
     * resolves to whichever file it samples — a silent wrong-schema
@@ -148,26 +146,30 @@ final class CompactedStateStore(dir: String) extends Serializable {
       StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Append one micro-batch of snapshot rows to the log, enriched to
-    * the serving schema ([[CompactedStateStore.enrich]]): scheduler
-    * frames pass through, raw bus frames pay their one-time decode
-    * HERE instead of on every query. The batch is written to a staging
-    * dir and its files moved into `log/`; registered caches receive
-    * the batch before this returns (class doc, Write-through). */
+  /** Append one micro-batch of snapshot rows to the log. The frame
+    * must carry the serving columns the scheduler materializes
+    * (`wfSpecName`, `status`, `aliases`), so no query ever decodes
+    * a snapshot; a frame without them is rejected before anything is
+    * written. The batch is written to a staging dir and its files
+    * moved into `log/`; registered caches receive the batch before
+    * this returns (class doc, Write-through). */
   def append(batch: DataFrame): Unit = {
+    val missing =
+      CompactedStateStore.ServingColumns.filterNot(batch.columns.contains)
+    require(missing.isEmpty, s"snapshot frame lacks the serving column(s) " +
+      s"${missing.mkString(", ")}: append SchedulerOut snapshot rows")
     ensureFormat()
-    val enriched = CompactedStateStore.enrich(batch)
     val listening = listeningCaches
     val staging = Paths.get(dir, s"_incoming-${UUID.randomUUID()}")
     try {
       val rows =
         if (listening.isEmpty) {
-          enriched.write.parquet(staging.toString)
+          batch.write.parquet(staging.toString)
           Nil
         } else {
-          val collected = enriched.collect()
-          enriched.sparkSession
-            .createDataFrame(java.util.Arrays.asList(collected: _*), enriched.schema)
+          val collected = batch.collect()
+          batch.sparkSession
+            .createDataFrame(java.util.Arrays.asList(collected: _*), batch.schema)
             .write.parquet(staging.toString)
           collected.toSeq.map(r => (r.getAs[String]("wfRunId"),
             r.getAs[Long]("seq"), r.getAs[String]("json"),
@@ -182,25 +184,6 @@ final class CompactedStateStore(dir: String) extends Serializable {
         }
       }(_.appended(published.map(_.toString), rows))
     } finally Dirs.deleteRecursively(staging)
-  }
-
-  /** Streaming sink for the scheduler's snapshot rows; `compactEvery`
-    * > 0 runs [[compact]] inline after every N-th batch (the reference
-    * compacts continuously inside RocksDB; a cluster deployment would
-    * schedule it out-of-band instead of on the micro-batch path). */
-  def streamingSink(
-      outputs: Dataset[SchedulerOut], checkpoint: String,
-      compactEvery: Long = 0L): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val snaps = outputs.toDF().filter(col("kind") === SchedulerOut.SNAPSHOT)
-    snaps.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        append(batch)
-        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0) {
-          compact(batch.sparkSession)
-          ()
-        }
-      }
   }
 
   /** Files a [[read]] at the current version touches: the published
@@ -271,51 +254,8 @@ object CompactedStateStore {
     * row schema changes incompatibly (see [[CompactedStateStore#append]]). */
   val FORMAT = "graft-state-v2-enriched"
 
-  /** Ensure a snapshot frame carries the SERVING columns the scheduler
-    * sink materializes (`wfSpecName`, `status`, columnar `aliases`) so
-    * a store built from raw bus topics serves alias search through the
-    * columnar branch of [[StateTable.searchByVariable]] instead of the
-    * per-row JSON-decode fallback, and point lookups resolve their spec
-    * without a decode. The decode happens HERE, once per snapshot, at
-    * append/compaction time — never on the query path (a per-request
-    * full-corpus decode would not survive 100× state cardinality).
-    *
-    * A frame that already has the columns (scheduler-written) passes
-    * through untouched apart from dropping the bus `topic` column,
-    * whose information lands in `wfSpecName`. Distributed: one typed
-    * map over the frame, no driver materialization.
-    */
-  def enrich(snapshots: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import graft.engine.StateCodec
-    val cols = snapshots.columns.toSet
-    if (cols.contains("aliases") && cols.contains("wfSpecName"))
-      snapshots.drop("topic")
-    else {
-      val spark = snapshots.sparkSession
-      import spark.implicits._
-      // spec-name source that needs no decode, when one exists
-      val fromTopic = !cols.contains("wfSpecName") && cols.contains("topic")
-      val specCol =
-        if (cols.contains("wfSpecName")) col("wfSpecName")
-        else if (fromTopic) col("topic")
-        else lit(null).cast("string")
-      snapshots
-        .select(col("wfRunId"), col("seq"), col("json"),
-          specCol.as("specSrc"))
-        .as[(String, Long, String, Option[String])]
-        .map { case (id, seq, json, specSrc) =>
-          val st = StateCodec.decode(json)
-          val spec = specSrc match {
-            case Some(s) if fromTopic =>
-              s.stripPrefix(Scheduler.STATE_TOPIC_PREFIX)
-            case Some(s) => s
-            case None => st.wfSpecName
-          }
-          (id, spec, st.status, json, seq, st.aliasMap)
-        }
-        .toDF("wfRunId", "wfSpecName", "status", "json", "seq", "aliases")
-    }
-  }
+  /** Columns every stored frame carries beside `wfRunId`/`seq`/`json`:
+    * the spec name and status, and the columnar `aliases` map that
+    * alias search filters on. [[SchedulerOut]] rows have them. */
+  private val ServingColumns = Seq("wfSpecName", "status", "aliases")
 }

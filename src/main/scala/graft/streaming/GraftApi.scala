@@ -26,22 +26,17 @@ import graft.streaming.bus.GraftBus
   *
   * HTTP itself is out of scope (the reference's Javalin server is
   * deployment plumbing Spark doesn't need); the METHODS are the API.
-  * Run-state reads go through the per-spec state topics the scheduler
-  * sink writes — the same documents a real consumer would read — OR,
-  * when a [[CompactedStateStore]] is supplied, through its
-  * base∪delta parquet (the RocksDB-compacted analogue, reference
-  * SchedulerTopology.java:130-146): reads stay O(live runs) instead
-  * of O(snapshot history) — measured at 1000 runs × 51 snapshots:
-  * ~11× route-to-route (367 ms vs 4,023 ms p50 `GET /WFRun`), and
-  * near-FLAT in history where the bus path grows ~6.5× per decade
-  * (BASELINE.md serve rows; the bus-transport serve bench that took
-  * them is in git history). A 24/7
-  * deployment serves from the compacted store; the bus path is the
-  * zero-infra variant for short-lived jobs and tests.
+  * Run-state reads have one source: the [[CompactedStateStore]] that
+  * [[Scheduler.storeSink]] appends the scheduler's snapshots to, read
+  * as base∪delta parquet (the RocksDB-compacted analogue, reference
+  * SchedulerTopology.java:130-146; APIStreamsContext.getTFromId:62-83
+  * answers every run-state route from that one store), so reads stay
+  * O(live runs) instead of O(snapshot history). `compacted` is
+  * required; it is an Option only to keep the constructor's shape.
   */
 class GraftApi(
     spark: SparkSession, store: MetadataStore, busRoot: String,
-    compacted: Option[CompactedStateStore] = None,
+    compacted: Option[CompactedStateStore],
     // Optional driver-side cache over `compacted` (must wrap the SAME
     // store, whose own writes it receives write-through): GET /WFRun
     // answers from memory (microseconds) instead of launching a Spark
@@ -51,7 +46,11 @@ class GraftApi(
     // LATENCY, never an answer.
     servingCache: Option[ServingCache] = None) {
 
-  require(servingCache.forall(c => compacted.exists(_ eq c.store)),
+  require(compacted.isDefined,
+    "GraftApi reads run state from a CompactedStateStore: pass Some(store)")
+  private val state = compacted.get
+
+  require(servingCache.forall(_.store eq state),
     "servingCache must wrap the SAME CompactedStateStore passed as " +
       "`compacted` — a cache over a different store would serve answers " +
       "the distributed fallback path cannot reproduce")
@@ -123,65 +122,25 @@ class GraftApi(
   def getAll(kind: String): String =
     response(RpcStatus.OK, None, store.getAllIds(kind).sorted.toVector)
 
-  // ---- run-state routes (read the scheduler's state topics) ----
+  // ---- run-state routes (read the compacted state store) ----
 
-  /** The scheduler's run-state topics as a DISTRIBUTED frame: the
-    * `graft-bus` DSv2 batch read — the same topics a real consumer
-    * reads, scanned executor-side (one input partition per
-    * topic-partition), never iterated on the driver. A `key` point
-    * lookup is applied BEFORE the select so it pushes into the scan
-    * ([[graft.streaming.bus.BusScanBuilder]]): the partition readers
-    * skip non-matching records at the source and only the requested
-    * run's snapshots ever become rows. */
-  private[graft] def snapshotFrame(
-      key: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val raw = spark.read.format("graft-bus")
-      .option("path", busRoot)
-      .option("subscribePattern",
-        java.util.regex.Pattern.quote(Scheduler.STATE_TOPIC_PREFIX) + ".*")
-      .load()
-    val pruned = key.fold(raw)(k =>
-      raw.filter(col("key") === lit(k.getBytes("UTF-8"))))
-    pruned.select(
-      col("key").cast("string").as("wfRunId"),
-      col("value").cast("string").as("json"),
-      col("offset").as("seq"),
-      col("topic"))
-  }
-
-  /** Latest snapshot per run: the compacted store's base∪delta when
-    * one is supplied (already latest-folded, files touched O(live
-    * runs)), else the latest-fold over the distributed bus batch read.
-    * A point-lookup `key` prunes BEFORE the fold either way — through
-    * parquet predicate pushdown (the wfRunId filter passes through the
-    * latest window because it IS the window's partition key) or the
-    * bus scan's key pushdown. */
-  private def latestFrame(key: Option[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    compacted match {
-      case Some(c) =>
-        // an empty store (API up before the first snapshot lands) must
-        // answer like the bus path: NOT_FOUND / empty, never a crash
-        if (c.readFootprint.isEmpty) {
-          import spark.implicits._
-          Seq.empty[(String, String, String)].toDF("wfRunId", "json", "wfSpecName")
-        } else {
-          val base = c.read(spark)
-          key.fold(base)(k => base.filter(col("wfRunId") === k))
-        }
-      case None => StateTable.latest(snapshotFrame(key))
+  /** Latest snapshot per run: the store's base∪delta, already
+    * latest-folded, files touched O(live runs); None while the store
+    * is empty (API up before the first snapshot lands). A point-lookup
+    * `key` filters BEFORE the fold: the wfRunId predicate passes
+    * through the latest window because it IS the window's partition
+    * key, and reaches the parquet scan as a pushed filter. */
+  private[graft] def latestFrame(key: Option[String]): Option[DataFrame] =
+    if (state.readFootprint.isEmpty) None
+    else {
+      import org.apache.spark.sql.functions.col
+      val all = state.read(spark)
+      Some(key.fold(all)(k => all.filter(col("wfRunId") === k)))
     }
-  }
-
-  /** Key-pruned point lookup frame (spec hook for plan assertions). */
-  private[graft] def latestSnapshotFrame(wfRunId: String): DataFrame =
-    latestFrame(Some(wfRunId))
 
   /** Collects at most one row: (snapshot json, spec name). The spec
-    * name comes from a column, never from a JSON decode: the state
-    * topic name (`wfRunState__<specName>`) on the bus path, the
-    * `wfSpecName` column every compacted-store file carries otherwise. */
+    * name comes from the `wfSpecName` column every stored file
+    * carries, never from a JSON decode. */
   private def latestSnapshot(wfRunId: String): Option[(String, String)] = {
     // cache fast path: a Hit IS the store's latest snapshot (the cache
     // re-validates against the store's published file set on every
@@ -192,20 +151,10 @@ class GraftApi(
         case _ => // fall through
       }
     }
-    val frame = latestFrame(Some(wfRunId))
-    if (compacted.isEmpty)
-      frame.select("json", "topic").collect().headOption.map(r =>
-        (r.getString(0),
-          r.getString(1).stripPrefix(Scheduler.STATE_TOPIC_PREFIX)))
-    else
-      frame.select("json", "wfSpecName").collect().headOption.map(r =>
-        (r.getString(0), r.getString(1)))
+    latestFrame(Some(wfRunId)).flatMap(
+      _.select("json", "wfSpecName").collect().headOption.map(r =>
+        (r.getString(0), r.getString(1))))
   }
-
-  /** Resolve a deployed WFSpec by name via the metadata store's point
-    * lookup (Q8), decoded once per metadata log state — never a full
-    * deployed-spec scan or a spec decode per request. */
-  private def specByName(name: String): Option[WFSpec] = store.wfSpec(name)
 
   /** GET /WFRun/{id}: the latest snapshot, exported in the SDK's
     * serialized WFRunSchema shape so lhctl-family tooling reads it
@@ -215,7 +164,7 @@ class GraftApi(
     latestSnapshot(id) match {
       case Some((json, specName)) =>
         val st = StateCodec.decode(json)
-        specByName(specName) match {
+        store.wfSpec(specName) match {
           case Some(spec) => response(RpcStatus.OK, Some(id),
             StateCodec.sdkRunTree(st, spec))
           case None => response(RpcStatus.INTERNAL_ERROR, Some(id),
@@ -236,9 +185,8 @@ class GraftApi(
     * waiting searches' predicates, columnar over the `aliases` map
     * column, collecting `(wfRunId, aliases)` of the matching runs
     * (bounded by matches); each search then picks its own runs from
-    * those rows. A frame without an `aliases` column runs
-    * [[StateTable.searchByVariable]] per search inside the same scan.
-    * A scan's error reaches every search it was answering. */
+    * those rows. An empty store answers every search `[]` with no
+    * scan. A scan's error reaches every search it was answering. */
   def getWfRunAlias(key: String, value: String): String = {
     val search = new AliasSearch(key, value)
     pendingSearches.add(search)
@@ -268,19 +216,18 @@ class GraftApi(
   private def scanAliases(batch: Vector[AliasSearch]): Vector[Vector[String]] = {
     import org.apache.spark.sql.functions.{array_contains, col}
     import spark.implicits._
-    val frame = latestFrame(None)
-    if (frame.columns.contains("aliases")) {
-      val rows = frame
-        .filter(batch.map(s => array_contains(col("aliases")(s.key), s.value))
-          .reduce(_ || _))
-        .select("wfRunId", "aliases").as[(String, Map[String, Seq[String]])]
-        .collect()
-      batch.map(s => rows.collect {
-        case (id, aliases) if aliases.get(s.key).exists(_.contains(s.value)) => id
-      }.sorted.toVector)
-    } else
-      batch.map(s => StateTable.searchByVariable(frame, s.key, s.value)
-        .as[String].collect().sorted.toVector)
+    latestFrame(None) match {
+      case None => batch.map(_ => Vector.empty)
+      case Some(frame) =>
+        val rows = frame
+          .filter(batch.map(s => array_contains(col("aliases")(s.key), s.value))
+            .reduce(_ || _))
+          .select("wfRunId", "aliases").as[(String, Map[String, Seq[String]])]
+          .collect()
+        batch.map(s => rows.collect {
+          case (id, aliases) if aliases.get(s.key).exists(_.contains(s.value)) => id
+        }.sorted.toVector)
+    }
   }
 
   // ---- run-lifecycle routes (produce to the spec's event topic) ----
@@ -332,7 +279,7 @@ class GraftApi(
     * registered ExternalEventDefs (unknown def → OBJECT_NOT_FOUND,
     * like the reference resolving the def before posting) and the
     * resolved name is used for `externalEventDefName`; the run's spec
-    * comes from its state topic + a metadata point lookup. */
+    * comes from its stored snapshot + a metadata point lookup. */
   def postEvent(externalEventDefId: String, wfRunId: String,
       content: Any,
       await: Option[org.apache.spark.sql.streaming.StreamingQuery] = None,
@@ -347,7 +294,7 @@ class GraftApi(
         latestSnapshot(wfRunId) match {
           case None => response(RpcStatus.OBJECT_NOT_FOUND, Some(wfRunId))
           case Some((_, specName)) =>
-            specByName(specName) match {
+            store.wfSpec(specName) match {
               case None => response(RpcStatus.INTERNAL_ERROR, Some(wfRunId),
                 message = Some(s"spec $specName not deployed"))
               case Some(spec) =>
@@ -372,7 +319,7 @@ class GraftApi(
     latestSnapshot(wfRunId) match {
       case None => response(RpcStatus.OBJECT_NOT_FOUND, Some(wfRunId))
       case Some((_, specName)) =>
-        specByName(specName) match {
+        store.wfSpec(specName) match {
           case None => response(RpcStatus.INTERNAL_ERROR, Some(wfRunId),
             message = Some(s"spec $specName not deployed"))
           case Some(spec) =>

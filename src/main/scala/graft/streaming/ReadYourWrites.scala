@@ -58,11 +58,6 @@ object ReadYourWrites {
         .exists(_ > offset)
     }
 
-  def awaitProcessed(
-      query: StreamingQuery, topic: String, partition: Int,
-      offset: Long): Unit =
-    awaitProcessed(query, topic, partition, offset, 0, 30000L)
-
   /** Scan ALL retained progress entries (newest first): the covering
     * batch need not be the latest one. */
   private def poll(

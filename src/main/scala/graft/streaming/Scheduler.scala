@@ -2,10 +2,12 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{
+  DataStreamWriter, GroupState, GroupStateTimeout, OutputMode}
 import scala.annotation.unused
 
 import graft.engine._
+import graft.streaming.bus.GraftBus
 
 /** One output row of the scheduler fold — the Scala mirror of the
   * reference's `SchedulerOutput` sum type (scheduler/SchedulerOutput
@@ -265,6 +267,35 @@ object Scheduler {
       outputs: Dataset[SchedulerOut], root: String,
       checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
     wireSink(outputs, "graft-bus", Map("path" -> root), checkpoint)
+
+  /** The deployed sink: TSRs to their per-TaskDef bus topics, snapshots
+    * to a [[CompactedStateStore]] the API serves from (the reference
+    * keeps run state in a co-located store, SchedulerTopology.java
+    * :130-146). Each micro-batch runs one action: the batch is
+    * collected once, each TSR is sent as the record the bus sink
+    * writes (key = wfRunId, value = json), and the snapshot rows go to
+    * [[CompactedStateStore.append]]. `compactEvery` > 0 runs
+    * [[CompactedStateStore.compact]] inline after every N-th batch (the
+    * reference compacts continuously inside RocksDB; a cluster
+    * deployment would schedule it out-of-band). At-least-once, like
+    * the wire sinks: a replayed batch re-sends its TSRs and re-appends
+    * its snapshots (`latest` keeps one copy). */
+  def storeSink(
+      outputs: Dataset[SchedulerOut], busRoot: String,
+      state: CompactedStateStore, checkpoint: String,
+      compactEvery: Long = 0L): DataStreamWriter[SchedulerOut] =
+    outputs.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: Dataset[SchedulerOut], batchId: Long) =>
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val (tsrs, snaps) = batch.collect().partition(_.kind == SchedulerOut.TSR)
+        tsrs.foreach(t => GraftBus.send(busRoot, t.taskDefName, t.wfRunId, t.json))
+        if (snaps.nonEmpty) state.append(snaps.toSeq.toDS().toDF())
+        if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
+          state.compact(spark)
+        ()
+      }
 }
 
 /** The query surface over materialized snapshots (SURVEY.md §2.5):

@@ -11,14 +11,14 @@ import org.apache.spark.sql.connector.catalog.{
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
   Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan,
-  ScanBuilder, SupportsPushDownFilters}
+  ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{
   DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
   WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -121,53 +121,31 @@ final class BusTable(props: Map[String, String])
     }
 }
 
-/** Scan builder with key-equality pushdown: a `key = <bytes>` predicate
-  * (the point-lookup shape every run-state route compiles to) reaches
-  * the partition readers, which then skip non-matching records at the
-  * source instead of materializing the whole log into rows first. The
-  * record files must still be opened — the key lives inside the record,
-  * exactly as in Kafka, where a key filter cannot skip segment reads —
-  * so the filter is also returned as a post-scan residual and Spark
-  * re-applies it (correctness never depends on the prune). */
+/** Scan builder: no filter pushdown, like the Kafka source — every
+  * predicate runs after the scan. */
 final class BusScanBuilder(root: String, options: CaseInsensitiveStringMap)
-    extends ScanBuilder with SupportsPushDownFilters {
-
-  private var keyEq: Option[String] = None
-  private var accepted: Array[Filter] = Array.empty
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    accepted = filters.collect {
-      case f @ EqualTo("key", v: Array[Byte]) =>
-        keyEq = Some(new String(v, "UTF-8")); f
-    }
-    filters // residual: Spark re-applies everything after the scan
-  }
-  override def pushedFilters(): Array[Filter] = accepted
+    extends ScanBuilder {
 
   override def build(): Scan = new BusScan(root,
     Option(options.get("subscribe")),
     Option(options.get("subscribepattern")),
     Option(options.get("startingoffsets")),
-    Option(options.get("endingoffsets")),
-    keyEq)
+    Option(options.get("endingoffsets")))
 }
 
 /** Scan supporting both batch (full log, [0, nextOffset) per
   * partition) and micro-batch execution over the same partition
-  * readers. `pushedKey` is exposed so plan-inspection tests can assert
-  * a route's read path is key-pruned. */
+  * readers. */
 final class BusScan(
     root: String, subscribe: Option[String], pattern: Option[String],
-    startingOffsets: Option[String], endingOffsets: Option[String],
-    val pushedKey: Option[String])
+    startingOffsets: Option[String], endingOffsets: Option[String])
     extends Scan {
 
   override def readSchema(): StructType = BusDataSource.SCHEMA
-  override def description(): String =
-    s"graft-bus root=$root keyFilter=${pushedKey.getOrElse("<none>")}"
+  override def description(): String = s"graft-bus root=$root"
 
   override def toBatch: Batch = new BusBatch(root, subscribe, pattern,
-    startingOffsets, endingOffsets, pushedKey)
+    startingOffsets, endingOffsets)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream = {
@@ -265,16 +243,15 @@ private[bus] object BusTopics {
 }
 
 /** Distributed batch read of the bus log: one input partition per
-  * (topic, partition), each read executor-side — the shape the
-  * run-state query routes serve from (a driver-side loop over
-  * `GraftBus.read` would be O(all records) driver I/O per request).
-  * Honors Kafka's batch options: `startingOffsets` (default earliest)
-  * and `endingOffsets` (default latest), each `earliest`/`latest`/
+  * (topic, partition), each read executor-side (a driver-side loop
+  * over `GraftBus.read` would be O(all records) driver I/O). Honors
+  * Kafka's batch options: `startingOffsets` (default earliest) and
+  * `endingOffsets` (default latest), each `earliest`/`latest`/
   * per-partition JSON with -2/-1 sentinels. */
 final class BusBatch(
     root: String, subscribe: Option[String], pattern: Option[String],
-    startingOffsets: Option[String], endingOffsets: Option[String],
-    keyFilter: Option[String]) extends Batch {
+    startingOffsets: Option[String], endingOffsets: Option[String])
+    extends Batch {
 
   override def planInputPartitions(): Array[InputPartition] = {
     val topics = BusTopics.matched(root, subscribe, pattern)
@@ -290,8 +267,7 @@ final class BusBatch(
       hi = until.getOrElse(t, Map.empty[Int, Long])
         .getOrElse(p, GraftBus.nextOffset(root, t, p))
       if hi > lo
-    } yield BusInputPartition(root, t, p, lo, hi, keyFilter)
-      : InputPartition).toArray
+    } yield BusInputPartition(root, t, p, lo, hi): InputPartition).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -359,20 +335,17 @@ final class BusMicroBatchStream(
 }
 
 final case class BusInputPartition(
-    root: String, topic: String, partition: Int, from: Long, until: Long,
-    keyFilter: Option[String] = None)
+    root: String, topic: String, partition: Int, from: Long, until: Long)
     extends InputPartition
 
 final class BusPartitionReaderFactory extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val bp = p.asInstanceOf[BusInputPartition]
     new PartitionReader[InternalRow] {
-      // lazy record-at-a-time read (never the whole range in memory),
-      // with the pushed key filter applied before row materialization
+      // lazy record-at-a-time read (never the whole range in memory)
       private val records = (bp.from until bp.until).iterator
         .map(off =>
           GraftBus.read(bp.root, bp.topic, bp.partition, off, off + 1).head)
-        .filter(r => bp.keyFilter.forall(_ == r.key))
       private var cur: BusRecord = _
       override def next(): Boolean =
         if (records.hasNext) { cur = records.next(); true } else false

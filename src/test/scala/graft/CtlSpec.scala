@@ -91,6 +91,14 @@ class CtlSpec extends AnyFunSuite {
       assert(status(ctl("resume", runId)) == "OK")
       await("resume to land")(() => runStatus(runId).contains("RUNNING"))
 
+      // run state lives in the compacted store `serve` writes (and
+      // compacts), not in bus run-state topics
+      val state = new graft.streaming.CompactedStateStore(s"$root/state")
+      await("a published compaction")(() => state.version >= 1L)
+      assert(Files.exists(Paths.get(root, "state", "_format")))
+      assert(!graft.streaming.bus.GraftBus.topics(s"$root/bus")
+        .exists(_.startsWith(graft.streaming.Scheduler.STATE_TOPIC_PREFIX)))
+
       // -- search (variable index; no runs carry this alias yet) and
       // search-alias (metadata name lookup) --
       assert(status(ctl("search", "my_name_var", "Obi-Wan")) == "OK")

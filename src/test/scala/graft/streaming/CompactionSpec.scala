@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -7,6 +9,7 @@ import scala.collection.immutable.ListMap
 
 import graft.engine._
 import graft.engine.SpecBuilders._
+import graft.streaming.bus.GraftBus
 
 /** [[CompactedStateStore]] contract: query answers are identical to
   * folding the full snapshot history, while the files a read touches
@@ -24,6 +27,13 @@ class CompactionSpec extends AnyFunSuite {
     SchedulerOut(SchedulerOut.SNAPSHOT, run, "spec", "", -1, -1, status,
       s"""{"run":"$run","seq":$seq}""", seq,
       Map("who" -> Seq(s"alias-$run")))
+
+  /** One echo task on the `who` variable: a TSR and a snapshot per run. */
+  private val spec = wfSpec("compact_stream", "main",
+    thread("main",
+      Map("who" -> WFRunVariableDef(VarType.STRING)),
+      nodes = Seq(task("n0", "echo_task", "thing" -> varRef("who"))),
+      edges = Nil))
 
   private def rows(store: CompactedStateStore): Set[(String, String)] =
     store.read(spark).collect()
@@ -90,19 +100,15 @@ class CompactionSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val spec = wfSpec("compact_stream", "main",
-      thread("main",
-        Map("who" -> WFRunVariableDef(VarType.STRING)),
-        nodes = Seq(task("n0", "echo_task", "thing" -> varRef("who"))),
-        edges = Nil))
-
     val dir = graft.util.Dirs.scratch("graft-compact-stream").toString
     val ckpt = graft.util.Dirs.scratch("graft-compact-ckpt").toString
+    val busRoot = graft.util.Dirs.scratch("graft-compact-bus").toString
     val store = new CompactedStateStore(dir)
 
     val input = MemoryStream[WFEvent]
     val outputs = Scheduler(input.toDS(), Map(spec.name -> spec))
-    val query = store.streamingSink(outputs, ckpt, compactEvery = 1L)
+    val query = Scheduler.storeSink(outputs, busRoot, store, ckpt,
+      compactEvery = 1L)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
 
@@ -155,13 +161,32 @@ class CompactionSpec extends AnyFunSuite {
       val metaRoot = graft.util.Dirs.scratch("graft-compact-meta").toString
       val meta = new MetadataStore(spark, metaRoot)
       meta.postWfSpec(SpecCodec.encode(spec))
-      val api = new GraftApi(spark, meta,
-        graft.util.Dirs.scratch("graft-compact-bus").toString, Some(store))
+      val api = new GraftApi(spark, meta, busRoot, Some(store))
       assert(api.statusOf(api.getWfRun("c-run-1")) == api.RpcStatus.OK)
       assert(LHJson.parse(api.getWfRunAlias("who", "Grievous"))
         .asInstanceOf[ListMap[String, Any]]("result") == Vector("c-run-2"))
       assert(api.statusOf(api.getWfRun("ghost"))
         == api.RpcStatus.OBJECT_NOT_FOUND)
+
+      // the TSRs went to their task topic on the bus, one per run
+      assert(GraftBus.partitions(busRoot, "echo_task")
+        .map(GraftBus.nextOffset(busRoot, "echo_task", _)).sum == 2L)
     } finally query.stop()
+  }
+
+  test("a frame without the serving columns is rejected before it is written") {
+    import spark.implicits._
+    val (st, _) = Simulator.run(spec, Map("who" -> "Obi-Wan"), runId = "raw-1")
+    val dir = graft.util.Dirs.scratch("graft-compact-raw").toString
+    val store = new CompactedStateStore(dir)
+    // the bus state-topic shape: a real snapshot, but no serving columns
+    val raw = Seq(("raw-1", StateCodec.encode(st), 0L,
+      s"${Scheduler.STATE_TOPIC_PREFIX}${spec.name}"))
+      .toDF("wfRunId", "json", "seq", "topic")
+    val e = intercept[IllegalArgumentException](store.append(raw))
+    Seq("wfSpecName", "status", "aliases").foreach(c =>
+      assert(e.getMessage.contains(c), s"message names $c: ${e.getMessage}"))
+    assert(!Files.exists(Paths.get(dir, "log")), "nothing reaches log/")
+    assert(store.readFootprint.isEmpty)
   }
 }

@@ -8,7 +8,9 @@ import graft.engine._
 import graft.streaming.bus.GraftBus
 
 /** The reference's API surface, exercised route-by-route through
-  * [[GraftApi]] over the REAL bus topology: POST resources (incl. the
+  * [[GraftApi]] over the REAL bus topology (event and task topics on
+  * the bus, run state in the [[CompactedStateStore]] the scheduler's
+  * [[Scheduler.storeSink]] writes): POST resources (incl. the
   * validation-rejection and not-found paths), POST /WFRun, the
   * external-event route, stop/resume, point GET in the SDK WFRunSchema
   * shape, and alias search — every response in the LHRPCResponse
@@ -35,9 +37,17 @@ class GraftApiSpec extends AnyFunSuite {
     val busRoot = graft.util.Dirs.scratch("graft-api-bus").toString
     val ckpt = graft.util.Dirs.scratch("graft-api-ckpt").toString
     val metaRoot = graft.util.Dirs.scratch("graft-api-meta").toString
+    val comp = new CompactedStateStore(
+      graft.util.Dirs.scratch("graft-api-state").toString)
 
     val store = new MetadataStore(spark, metaRoot)
-    val api = new GraftApi(spark, store, busRoot)
+    val api = new GraftApi(spark, store, busRoot, Some(comp))
+
+    // -- an empty store (API up before the first snapshot lands) --
+    assert(api.statusOf(api.getWfRun("api-run-1"))
+      == api.RpcStatus.OBJECT_NOT_FOUND)
+    assert(parse(api.getWfRunAlias("my_name_var", "Obi-Wan"))("result")
+      == Vector())
 
     // -- POST /{Type}: envelope field order + OK / VALIDATION_ERROR --
     val posted = api.postResource(store.Kind.WFSpec, fixture("basic_wf"))
@@ -63,7 +73,7 @@ class GraftApiSpec extends AnyFunSuite {
     // deploy = the streaming query picks up deployedSpecs (Q6)
     val events = Scheduler.busEventSource(spark, busRoot, "wfEvents__.*")
     val outputs = Scheduler(events, store.deployedSpecs())
-    val query = Scheduler.busWireSink(outputs, busRoot, ckpt)
+    val query = Scheduler.storeSink(outputs, busRoot, comp, ckpt)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
 
@@ -180,19 +190,17 @@ class GraftApiSpec extends AnyFunSuite {
       await("run-2 completion")(() => runStatus("api-run-2")
         .contains(Status.COMPLETED))
 
-      // -- GET /WFRun read path is KEY-PRUNED: the point lookup pushes
-      // its key filter into the graft-bus scan (partition readers skip
-      // non-matching records at the source), never a full driver read --
-      val lookupScan = api.latestSnapshotFrame("api-run-1")
-        .queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2
-              .DataSourceV2ScanRelation => r.scan
+      // -- GET /WFRun read path is KEY-PRUNED: the point lookup's
+      // wfRunId predicate passes through the latest window and reaches
+      // the parquet scan as a pushed filter --
+      val lookupScans = api.latestFrame(Some("api-run-1")).get
+        .queryExecution.sparkPlan.collect {
+          case s: org.apache.spark.sql.execution.FileSourceScanExec => s
         }
-      assert(lookupScan.exists {
-        case s: graft.streaming.bus.BusScan =>
-          s.pushedKey.contains("api-run-1")
-        case _ => false
-      }, s"getWfRun scan is not key-pruned: $lookupScan")
+      assert(lookupScans.nonEmpty && lookupScans.forall(
+        _.metadata.get("PushedFilters")
+          .exists(_.contains("EqualTo(wfRunId,api-run-1)"))),
+        s"getWfRun scan does not push its key: $lookupScans")
 
       // -- POST with the read-your-writes barrier (reference: POSTApi
       // blocks inside the request): POST then IMMEDIATE GET observes
@@ -216,53 +224,39 @@ class GraftApiSpec extends AnyFunSuite {
       assert(parse(api.getAliasSet(store.Kind.WFSpec, "name", "ghost"))
         ("result") == Vector())
 
-      // -- compacted serving mode: the same routes over a
-      // CompactedStateStore give byte-identical answers (the 24/7
-      // deployment's configuration; reads O(live runs)) --
-      val compDir = graft.util.Dirs.scratch("graft-api-comp").toString
-      val comp = new CompactedStateStore(compDir)
-      comp.append(api.snapshotFrame())
-      comp.compact(spark)
-      val apiComp = new GraftApi(spark, store, busRoot, Some(comp))
-      assert(apiComp.getWfRun("api-run-1") == api.getWfRun("api-run-1"),
-        "compacted-mode GET /WFRun must be byte-identical to bus mode")
-      assert(apiComp.getWfRunAlias("my_name_var", "Obi-Wan")
-        == api.getWfRunAlias("my_name_var", "Obi-Wan"))
-      assert(apiComp.statusOf(apiComp.getWfRun("ghost-run"))
-        == api.RpcStatus.OBJECT_NOT_FOUND)
-
       // -- serving cache: warm GET /WFRun answers from driver memory,
-      // BYTE-IDENTICAL to the distributed path (the cache's core
-      // contract, ServingCache scaladoc) --
+      // BYTE-IDENTICAL to the uncached distributed path over the same
+      // store (the cache's core contract, ServingCache scaladoc) --
       val cache = new ServingCache(comp)
       val apiCached = new GraftApi(spark, store, busRoot, Some(comp),
         servingCache = Some(cache))
       assert(apiCached.getWfRun("api-run-1") == api.getWfRun("api-run-1"),
-        "cached GET /WFRun must be byte-identical to the bus path")
-      assert(apiCached.getWfRun("api-run-2") == apiComp.getWfRun("api-run-2"),
-        "cached GET /WFRun must be byte-identical to the compacted path")
+        "cached GET /WFRun must be byte-identical to the uncached path")
+      assert(apiCached.getWfRun("api-run-2") == api.getWfRun("api-run-2"),
+        "cached GET /WFRun must be byte-identical to the uncached path")
+      assert(apiCached.getWfRunAlias("my_name_var", "Obi-Wan")
+        == api.getWfRunAlias("my_name_var", "Obi-Wan"))
       assert(cache.size > 0, "cache populated after first lookup")
       assert(apiCached.statusOf(apiCached.getWfRun("ghost-run"))
         == api.RpcStatus.OBJECT_NOT_FOUND)
 
-      // read-your-writes after an APPEND the cache has not seen: a new
-      // log file must be visible to the very next lookup (staleness is
-      // re-checked against the store's published file set per request).
-      // The appended row is a real snapshot re-keyed under a fresh run
-      // id, in the raw bus shape — so this also exercises the append
-      // path's one-time enrich decode.
+      // read-your-writes after an APPEND from outside the scheduler: the
+      // appended run must be visible to the very next lookup. The row
+      // is a real snapshot re-keyed under a fresh run id, as the
+      // scheduler's SchedulerOut snapshot row.
       import spark.implicits._
-      val (_, rywJson, rywSeq, rywTopic) = api.snapshotFrame(Some("api-run-1"))
-        .select("wfRunId", "json", "seq", "topic")
-        .as[(String, String, Long, String)].collect().maxBy(_._3)
-      comp.append(Seq(("cache-ryw-run", rywJson, rywSeq, rywTopic))
-        .toDF("wfRunId", "json", "seq", "topic"))
+      val (rywJson, rywSpec, rywStatus, rywAliases) = comp.read(spark)
+        .filter($"wfRunId" === "api-run-1")
+        .select("json", "wfSpecName", "status", "aliases")
+        .as[(String, String, String, Map[String, Seq[String]])].head()
+      comp.append(Seq(SchedulerOut(SchedulerOut.SNAPSHOT, "cache-ryw-run",
+        rywSpec, "", -1, -1, rywStatus, rywJson, 1L, rywAliases)).toDS().toDF())
       assert(apiCached.statusOf(apiCached.getWfRun("cache-ryw-run"))
         == api.RpcStatus.OK,
         "append must be visible to the next cached lookup")
       assert(apiCached.getWfRun("cache-ryw-run")
-        == apiComp.getWfRun("cache-ryw-run"),
-        "post-append cached answer must match the distributed path")
+        == api.getWfRun("cache-ryw-run"),
+        "post-append cached answer must match the uncached path")
 
       // staleness across a COMPACTION: compact() publishes a new base
       // and (a generation later) deletes superseded files — the cache's
@@ -270,7 +264,7 @@ class GraftApiSpec extends AnyFunSuite {
       // swap and keep answering byte-identically
       assert(comp.compact(spark) > 0L, "ryw append left a log file to fold")
       assert(apiCached.getWfRun("cache-ryw-run")
-        == apiComp.getWfRun("cache-ryw-run"),
+        == api.getWfRun("cache-ryw-run"),
         "cached answer must survive compaction")
       assert(apiCached.getWfRun("api-run-1") == api.getWfRun("api-run-1"),
         "pre-compaction entries must stay correct after the file-set swap")
@@ -281,7 +275,7 @@ class GraftApiSpec extends AnyFunSuite {
       val tiny = new ServingCache(comp, maxEntries = 1)
       val apiTiny = new GraftApi(spark, store, busRoot, Some(comp),
         servingCache = Some(tiny))
-      assert(apiTiny.getWfRun("api-run-1") == apiComp.getWfRun("api-run-1"))
+      assert(apiTiny.getWfRun("api-run-1") == api.getWfRun("api-run-1"))
       assert(tiny.isBypassed && tiny.size == 0,
         s"bounded cache must bypass (bypassed=${tiny.isBypassed})")
 

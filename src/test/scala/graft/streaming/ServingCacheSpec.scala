@@ -142,7 +142,8 @@ class ServingCacheSpec extends AnyFunSuite {
     val (_, store) = newStore("graft-serving-stream")
     val cache = new ServingCache(store)
     val input = MemoryStream[SchedulerOut]
-    val query = store.streamingSink(input.toDS(),
+    val query = Scheduler.storeSink(input.toDS(),
+      graft.util.Dirs.scratch("graft-serving-bus").toString, store,
       graft.util.Dirs.scratch("graft-serving-ckpt").toString).start()
     try {
       input.addData(snap("s1", 1), snap("s2", 1))
