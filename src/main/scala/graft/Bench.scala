@@ -17,13 +17,12 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    // Measurement-knob guard: these decade-scale levers change how
-    // GATED queries run (GC between rounds, compressed cached blocks);
-    // a full Bench with one still exported would time the altered
-    // plans against frozen floors measured without them and report a
-    // bogus regression with nothing in the artifact saying why.
-    val knobs = Seq("SPARK_GRAFT_ROUND_GC", "SPARK_GRAFT_RDD_COMPRESS")
-      .filter(sys.env.contains)
+    // Measurement-knob guard: this decade-scale lever changes how
+    // GATED queries run (GC between rounds); a full Bench with it still
+    // exported would time the altered plans against frozen floors
+    // measured without it and report a bogus regression with nothing in
+    // the artifact saying why.
+    val knobs = Seq("SPARK_GRAFT_ROUND_GC").filter(sys.env.contains)
     require(knobs.isEmpty,
       s"refusing full Bench with measurement knob(s) set: " +
         s"${knobs.mkString(", ")} — unset them (decade runs time " +
@@ -110,9 +109,7 @@ object Bench {
     // measurement. Steady-state cost per rep is unchanged (plans are
     // warmed; sf0.1 inputs stay page-cache-resident across a pass —
     // verified: interleaved idle-run mins match consecutive-run mins
-    // within noise). SPARK_GRAFT_BENCH_REP_MODE=consecutive restores
-    // the old order for A/B experiments.
-    val repMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_REP_MODE", "interleaved")
+    // within noise).
     // ERROR-HONEST timing (round-10 post-mortem): a rep that throws
     // must NEVER contribute a time — r10 recorded time-to-exception for
     // 20+ broken queries, producing physically impossible 0.02×-0.05×
@@ -143,10 +140,7 @@ object Bench {
             .getOrElse(e.getClass.getName).replaceAll("\\s+", " ").take(200)
       }
     }
-    if (repMode == "consecutive")
-      ordered.foreach { case (n, f) => (0 until reps).foreach(_ => runRep(n, f)) }
-    else
-      (0 until reps).foreach(_ => ordered.foreach { case (n, f) => runRep(n, f) })
+    (0 until reps).foreach(_ => ordered.foreach { case (n, f) => runRep(n, f) })
     val timed: Seq[(String, Double, Option[String])] =
       ordered.map { case (name, _) =>
         val ok = samples(name)
@@ -292,7 +286,7 @@ object Bench {
         samples(k).map(v => f"$v%.3f").mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","timing":"min-of-$reps $repMode, plans warmed on sf0.001, full materialization","gc_sec":${gcMillis() / 1e3},"rep_sec":$repSec,"vs_frozen":$vsFrozen,"vs_frozen_total":$totalRatio,"over_2x":$over2x,"errored":$erroredJson,"errors":$errorsJson,"unfrozen_queries":$unfrozen,"frozen_ref":"${FrozenBaseline.methodology}","stream_timing":$streamTiming,"recall":{"ann_lsh_planted_twin_top1":$recallPlanted,"ann_pq_planted_twin_top5":$recallPqPlanted,"ann_ivf_vs_brute_corpus":$recallIvfCorpus,"ann_ivfpq_planted_twin_top5":$recallIvfPqPlanted,"unstructured_noise_floor":{"ann_lsh_vs_brute_corpus":$recallCorpus,"ann_pq_vs_brute_corpus":$recallPqCorpus,"ann_ivfpq_vs_brute_corpus":$recallIvfPqCorpus,"why":"test embeddings are i.i.d. random (no true neighbors, all cosines ~0.3), so bucketed-LSH/PQ/IVF-PQ corpus recall on them is the noise floor of the method, not an operating point — headline recall is the planted-twin and IVF rows above; BASELINE.md 'ANN recall reporting'"}},"ivf_curve":$ivfCurve}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","timing":"min-of-$reps interleaved, plans warmed on sf0.001, full materialization","gc_sec":${gcMillis() / 1e3},"rep_sec":$repSec,"vs_frozen":$vsFrozen,"vs_frozen_total":$totalRatio,"over_2x":$over2x,"errored":$erroredJson,"errors":$errorsJson,"unfrozen_queries":$unfrozen,"frozen_ref":"${FrozenBaseline.methodology}","stream_timing":$streamTiming,"recall":{"ann_lsh_planted_twin_top1":$recallPlanted,"ann_pq_planted_twin_top5":$recallPqPlanted,"ann_ivf_vs_brute_corpus":$recallIvfCorpus,"ann_ivfpq_planted_twin_top5":$recallIvfPqPlanted,"unstructured_noise_floor":{"ann_lsh_vs_brute_corpus":$recallCorpus,"ann_pq_vs_brute_corpus":$recallPqCorpus,"ann_ivfpq_vs_brute_corpus":$recallIvfPqCorpus,"why":"test embeddings are i.i.d. random (no true neighbors, all cosines ~0.3), so bucketed-LSH/PQ/IVF-PQ corpus recall on them is the noise floor of the method, not an operating point — headline recall is the planted-twin and IVF rows above; BASELINE.md 'ANN recall reporting'"}},"ivf_curve":$ivfCurve}"""
     // The artifact must not depend on a bounded stdout tail surviving
     // (round 5's driver capture lost 25 queries mid-JSON): write the
     // full JSON to a stable file, then print it, with the path as the

@@ -132,7 +132,7 @@ object Ctl {
     val specs = store.deployedSpecs()
     val events = Scheduler.busEventSource(spark, s"$root/bus", "wfEvents__.*")
     val outputs = Scheduler(events, specs)
-    val q = Scheduler.storeSink(outputs, s"$root/bus",
+    val q = Scheduler.busStoreSink(outputs, s"$root/bus",
         new CompactedStateStore(s"$root/state"), s"$root/ckpt",
         CompactEveryBatches)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))

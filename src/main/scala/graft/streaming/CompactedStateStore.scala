@@ -15,14 +15,14 @@ import graft.util.Dirs
   * (scheduler/SchedulerTopology.java:130-146, where Kafka Streams keeps
   * only the latest value per key and compacts the changelog).
   *
-  * A plain append log of every snapshot (what the scheduler's
-  * [[Scheduler.busWireSink]]/[[Scheduler.kafkaWireSink]] state topics
-  * hold) makes [[StateTable.latest]] window over the whole history —
-  * read cost grows with (runs × snapshots-per-run), not with live
-  * state. This store fixes that contract:
+  * A plain append log of every snapshot makes [[StateTable.latest]]
+  * window over the whole history — read cost grows with
+  * (runs × snapshots-per-run), not with live state. This store fixes
+  * that contract:
   *
-  *  - [[append]] (called from foreachBatch by the scheduler's
-  *    [[Scheduler.storeSink]]) writes each batch into a private staging
+  *  - [[append]] (called from foreachBatch by the scheduler's store
+  *    sink, [[Scheduler.busStoreSink]] / [[Scheduler.kafkaStoreSink]])
+  *    writes each batch into a private staging
   *    dir `_incoming-<uuid>` under the store, then moves its parquet
   *    files into `log/` — plain parquet files, deliberately NO
   *    `_spark_metadata` commit log, so compaction owns file lifecycle

@@ -26,8 +26,9 @@ import graft.streaming.bus.GraftBus
   *
   * HTTP itself is out of scope (the reference's Javalin server is
   * deployment plumbing Spark doesn't need); the METHODS are the API.
-  * Run-state reads have one source: the [[CompactedStateStore]] that
-  * [[Scheduler.storeSink]] appends the scheduler's snapshots to, read
+  * Run-state reads have one source: the [[CompactedStateStore]] the
+  * scheduler's one sink ([[Scheduler.busStoreSink]] /
+  * [[Scheduler.kafkaStoreSink]]) appends its snapshots to, read
   * as base∪delta parquet (the RocksDB-compacted analogue, reference
   * SchedulerTopology.java:130-146; APIStreamsContext.getTFromId:62-83
   * answers every run-state route from that one store), so reads stay

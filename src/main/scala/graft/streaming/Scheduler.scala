@@ -7,7 +7,6 @@ import org.apache.spark.sql.streaming.{
 import scala.annotation.unused
 
 import graft.engine._
-import graft.streaming.bus.GraftBus
 
 /** One output row of the scheduler fold — the Scala mirror of the
   * reference's `SchedulerOutput` sum type (scheduler/SchedulerOutput
@@ -232,70 +231,56 @@ object Scheduler {
     eventSource(spark, "graft-bus", Map(
       "path" -> root, "subscribePattern" -> topicPattern))
 
-  /** S2+S3 as one dynamic-topic write — the reference scheduler's two
-    * Kafka sinks (TSRs to per-TaskDef topics, snapshots to the
-    * per-spec run-state topic; SchedulerTopology.java:89-127) expressed
-    * as a single sink routing on a computed `topic` column, since one
-    * Spark streaming query has one sink. */
-  private def wireSink(
-      outputs: Dataset[SchedulerOut], format: String,
-      opts: Map[String, String], checkpoint: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[_] = {
-    outputs.select(
-      when(col("kind") === SchedulerOut.TSR, col("taskDefName"))
-        .otherwise(concat(lit(STATE_TOPIC_PREFIX), col("wfSpecName")))
-        .as("topic"),
-      col("wfRunId").cast("binary").as("key"),
-      col("json").cast("binary").as("value"))
-      .writeStream.format(format).options(opts)
-      .option("checkpointLocation", checkpoint)
-  }
-
-  /** Run-state topic prefix (the reference's per-WFRun ID topic,
-    * WFSpec.java:375-381 / SchedulerTopology.java:110-127). */
-  val STATE_TOPIC_PREFIX = "wfRunState__"
-
-  /** [[wireSink]] over Kafka. */
-  def kafkaWireSink(
-      outputs: Dataset[SchedulerOut], bootstrap: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
-    wireSink(outputs, "kafka",
-      Map("kafka.bootstrap.servers" -> bootstrap), checkpoint)
-
-  /** [[wireSink]] over the file-backed bus. */
-  def busWireSink(
-      outputs: Dataset[SchedulerOut], root: String,
-      checkpoint: String): org.apache.spark.sql.streaming.DataStreamWriter[_] =
-    wireSink(outputs, "graft-bus", Map("path" -> root), checkpoint)
-
-  /** The deployed sink: TSRs to their per-TaskDef bus topics, snapshots
-    * to a [[CompactedStateStore]] the API serves from (the reference
-    * keeps run state in a co-located store, SchedulerTopology.java
-    * :130-146). Each micro-batch runs one action: the batch is
-    * collected once, each TSR is sent as the record the bus sink
-    * writes (key = wfRunId, value = json), and the snapshot rows go to
-    * [[CompactedStateStore.append]]. `compactEvery` > 0 runs
-    * [[CompactedStateStore.compact]] inline after every N-th batch (the
-    * reference compacts continuously inside RocksDB; a cluster
-    * deployment would schedule it out-of-band). At-least-once, like
-    * the wire sinks: a replayed batch re-sends its TSRs and re-appends
+  /** S2+S3, the scheduler's one sink: TSRs to their per-TaskDef topics
+    * through the by-name connector, snapshots to a
+    * [[CompactedStateStore]] the API serves from (the reference keeps
+    * run state in a co-located store, SchedulerTopology.java:130-146).
+    * Each micro-batch is collected once; its TSRs are written as one
+    * batch job of `(topic = taskDefName, key = wfRunId, value = json)`
+    * rows (dynamic topic routing, like the Kafka sink), and its
+    * snapshot rows go to [[CompactedStateStore.append]]. Both writes
+    * finish inside `foreachBatch`, so once a batch commits its TSRs and
+    * snapshots are visible (the [[ReadYourWrites]] contract).
+    * `compactEvery` > 0 runs [[CompactedStateStore.compact]] inline
+    * after every N-th batch (the reference compacts continuously inside
+    * RocksDB; a cluster deployment would schedule it out-of-band).
+    * At-least-once: a replayed batch re-sends its TSRs and re-appends
     * its snapshots (`latest` keeps one copy). */
-  def storeSink(
-      outputs: Dataset[SchedulerOut], busRoot: String,
-      state: CompactedStateStore, checkpoint: String,
-      compactEvery: Long = 0L): DataStreamWriter[SchedulerOut] =
+  private def storeSink(
+      outputs: Dataset[SchedulerOut], format: String,
+      opts: Map[String, String], state: CompactedStateStore,
+      checkpoint: String, compactEvery: Long): DataStreamWriter[SchedulerOut] =
     outputs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[SchedulerOut], batchId: Long) =>
         val spark = batch.sparkSession
         import spark.implicits._
         val (tsrs, snaps) = batch.collect().partition(_.kind == SchedulerOut.TSR)
-        tsrs.foreach(t => GraftBus.send(busRoot, t.taskDefName, t.wfRunId, t.json))
+        if (tsrs.nonEmpty)
+          tsrs.toSeq.map(t => (t.taskDefName, t.wfRunId, t.json))
+            .toDF("topic", "key", "value")
+            .write.format(format).options(opts).mode("append").save()
         if (snaps.nonEmpty) state.append(snaps.toSeq.toDS().toDF())
         if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
           state.compact(spark)
         ()
       }
+
+  /** [[storeSink]] over Kafka: TSRs to per-TaskDef Kafka topics. */
+  def kafkaStoreSink(
+      outputs: Dataset[SchedulerOut], bootstrap: String,
+      state: CompactedStateStore, checkpoint: String,
+      compactEvery: Long = 0L): DataStreamWriter[SchedulerOut] =
+    storeSink(outputs, "kafka", Map("kafka.bootstrap.servers" -> bootstrap),
+      state, checkpoint, compactEvery)
+
+  /** [[storeSink]] over the file-backed bus. */
+  def busStoreSink(
+      outputs: Dataset[SchedulerOut], busRoot: String,
+      state: CompactedStateStore, checkpoint: String,
+      compactEvery: Long = 0L): DataStreamWriter[SchedulerOut] =
+    storeSink(outputs, "graft-bus", Map("path" -> busRoot),
+      state, checkpoint, compactEvery)
 }
 
 /** The query surface over materialized snapshots (SURVEY.md §2.5):
@@ -335,24 +320,15 @@ object StateTable {
     * sink time: the predicate is columnar (map lookup + array_contains,
     * both codegen'd), so the scan prunes to (wfRunId, aliases) and no
     * snapshot JSON is ever decoded — a full-corpus JSON parse per query
-    * would not survive 100× state cardinality. The decode fallback only
-    * serves ad-hoc frames that predate the aliases column. */
+    * would not survive 100× state cardinality. */
   def searchByVariable(
       latestSnapshots: DataFrame, varName: String, value: String): DataFrame = {
-    if (latestSnapshots.columns.contains("aliases")) {
-      latestSnapshots
-        .filter(array_contains(col("aliases")(varName), value))
-        .select(col("wfRunId"))
-    } else {
-      val spark = latestSnapshots.sparkSession
-      import spark.implicits._
-      latestSnapshots.select($"wfRunId", $"json").as[(String, String)]
-        .filter { case (_, json) =>
-          val st = StateCodec.decode(json)
-          st.aliases.exists { case (k, v) => k == varName && v == value }
-        }
-        .toDF("wfRunId", "json").select($"wfRunId")
-    }
+    require(latestSnapshots.columns.contains("aliases"),
+      "StateTable.searchByVariable needs the `aliases` map column " +
+        "(SchedulerOut.aliases, WFRunState.aliasMap)")
+    latestSnapshots
+      .filter(array_contains(col("aliases")(varName), value))
+      .select(col("wfRunId"))
   }
 
   /** Q1: point lookup by run id. */

@@ -10,14 +10,11 @@ import org.apache.spark.sql.connector.catalog.{
   SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{
-  Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan,
-  ScanBuilder}
+  InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
 import org.apache.spark.sql.connector.write.{
-  DataWriter, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
-  WriterCommitMessage}
-import org.apache.spark.sql.connector.write.streaming.{
-  StreamingDataWriterFactory, StreamingWrite}
+  BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo,
+  PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -30,16 +27,19 @@ import graft.engine.LHJson
   * service-loader mechanism that resolves `format("kafka")` to the
   * Kafka connector at runtime, so the scheduler wiring that loads a
   * connector by name is exercised for real (Scheduler.busEventSource /
-  * kafkaEventSource differ only in the format string).
+  * kafkaEventSource and busStoreSink / kafkaStoreSink differ only in
+  * the format string and connection option).
   *
-  * Kafka-surface parity, deliberately exact:
+  * It has exactly the two modes the scheduler uses: a micro-batch read
+  * (the event source) and a batch write (the TSRs each store-sink
+  * micro-batch sends). Kafka-surface parity, deliberately exact:
   *  - read schema = the Kafka source's seven columns (key/value binary,
   *    topic, partition, offset, timestamp, timestampType);
   *  - streaming offsets serialize as `{"topic":{"0":123}}` — Kafka's
   *    JSON offset-map shape — and flow through checkpoints and query
   *    progress, which is what [[graft.streaming.ReadYourWrites]]
   *    parses for the per-partition read barrier;
-  *  - the sink routes each row by its `topic` column (dynamic fan-out,
+  *  - the write routes each row by its `topic` column (dynamic fan-out,
   *    like the Kafka sink) and is at-least-once: task retries re-append
   *    records, redelivery is the consumer's problem — exactly the
   *    contract the scheduler's dedupe window exists for;
@@ -103,10 +103,9 @@ final class BusTable(props: Map[String, String])
   override def schema(): StructType = BusDataSource.SCHEMA
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(
-      TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
-      TableCapability.STREAMING_WRITE,
-      TableCapability.ACCEPT_ANY_SCHEMA) // sink rows are (topic,key,value)
+      TableCapability.BATCH_WRITE,
+      TableCapability.ACCEPT_ANY_SCHEMA) // written rows are (topic,key,value)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new BusScanBuilder(root, options)
@@ -114,9 +113,14 @@ final class BusTable(props: Map[String, String])
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write {
-        override def toStreaming: StreamingWrite =
-          new BusStreamingWrite(root, info.schema(),
-            Option(info.options.get("topic")))
+        override def toBatch: BatchWrite = new BatchWrite {
+          private val factory = BusWriterFactory(root, info.schema())
+          override def createBatchWriterFactory(
+              physical: PhysicalWriteInfo): DataWriterFactory = factory
+          // at-least-once: a failed job leaves its appended rows
+          override def commit(messages: Array[WriterCommitMessage]): Unit = ()
+          override def abort(messages: Array[WriterCommitMessage]): Unit = ()
+        }
       }
     }
 }
@@ -133,9 +137,7 @@ final class BusScanBuilder(root: String, options: CaseInsensitiveStringMap)
     Option(options.get("endingoffsets")))
 }
 
-/** Scan supporting both batch (full log, [0, nextOffset) per
-  * partition) and micro-batch execution over the same partition
-  * readers. */
+/** Micro-batch scan; the bus has no batch read. */
 final class BusScan(
     root: String, subscribe: Option[String], pattern: Option[String],
     startingOffsets: Option[String], endingOffsets: Option[String])
@@ -143,9 +145,6 @@ final class BusScan(
 
   override def readSchema(): StructType = BusDataSource.SCHEMA
   override def description(): String = s"graft-bus root=$root"
-
-  override def toBatch: Batch = new BusBatch(root, subscribe, pattern,
-    startingOffsets, endingOffsets)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : MicroBatchStream = {
@@ -158,11 +157,10 @@ final class BusScan(
   }
 }
 
-/** Topic selection and offset-spec resolution shared by the batch and
-  * micro-batch readers: `subscribe` (comma list) or `subscribePattern`
-  * (regex), else all; offset specs follow Kafka's contract
-  * (`earliest`, `latest`, or a per-partition JSON map with -2/-1
-  * sentinels, which must cover every matched topic-partition). */
+/** Topic selection and `startingOffsets` map resolution:
+  * `subscribe` (comma list) or `subscribePattern` (regex), else all;
+  * a per-partition JSON map follows Kafka's contract (-2/-1 sentinels,
+  * and it must cover every matched topic-partition). */
 private[bus] object BusTopics {
   def matched(
       root: String, subscribe: Option[String],
@@ -179,99 +177,43 @@ private[bus] object BusTopics {
     }
   }
 
-  private def earliestAll(
-      root: String, topics: Seq[String]): Map[String, Map[Int, Long]] =
-    topics.map(t =>
-      t -> GraftBus.partitions(root, t).map(p => p -> 0L).toMap).toMap
-
-  private def latestAll(
-      root: String, topics: Seq[String]): Map[String, Map[Int, Long]] =
-    topics.map(t => t -> GraftBus.partitions(root, t)
-      .map(p => p -> GraftBus.nextOffset(root, t, p)).toMap).toMap
-
-  /** Resolve an offsets option to a concrete per-partition map over
-    * `topics`. `what` names the option in errors; `defaultLatest`
-    * selects the absent-option default (Kafka: batch starting =
-    * earliest, batch ending = latest). */
-  def resolveOffsets(
-      root: String, topics: Seq[String], spec: Option[String],
-      what: String, defaultLatest: Boolean): Map[String, Map[Int, Long]] =
-    spec.map(_.trim).filter(_.nonEmpty) match {
-      case None =>
-        if (defaultLatest) latestAll(root, topics)
-        else earliestAll(root, topics)
-      case Some(s) if s.equalsIgnoreCase("earliest") =>
-        earliestAll(root, topics)
-      case Some(s) if s.equalsIgnoreCase("latest") =>
-        latestAll(root, topics)
-      case Some(json) if json.startsWith("{") =>
-        val requested = BusDataSource.parseOffsets(json)
-        // Kafka's contract: a specific-offsets map must cover every
-        // subscribed TopicPartition — a missing entry (or a typo'd
-        // topic, which is an entry for an unsubscribed topic) is an
-        // ERROR, never a silent fall-back.
-        val unknown = requested.keySet -- topics.toSet
-        if (unknown.nonEmpty)
-          throw new IllegalArgumentException(
-            s"$what names topics not matched by this source: " +
-              s"${unknown.toSeq.sorted.mkString(", ")} (matched: " +
-              s"${topics.sorted.mkString(", ")})")
-        val missing = topics.flatMap { t =>
-          val have = requested.getOrElse(t, Map.empty[Int, Long]).keySet
-          GraftBus.partitions(root, t).filterNot(have.contains)
-            .map(p => s"$t-$p")
-        }
-        if (missing.nonEmpty)
-          throw new IllegalArgumentException(
-            s"$what must cover all matched topic-partitions; " +
-              s"missing: ${missing.sorted.mkString(", ")}")
-        requested.map { case (t, ps) =>
-          t -> ps.map { case (p, o) =>
-            p -> (o match {
-              case -2L => 0L
-              case -1L => GraftBus.nextOffset(root, t, p)
-              case n if n >= 0 => n
-              case bad => throw new IllegalArgumentException(
-                s"$what: invalid offset $bad for $t-$p")
-            })
-          }
-        }
-      case Some(bad) => throw new IllegalArgumentException(
-        s"$what must be 'earliest', 'latest', or an offset JSON map, " +
-          s"got: $bad")
+  /** Resolve a `startingOffsets` JSON map to concrete offsets over
+    * `topics`. */
+  def specificOffsets(
+      root: String, topics: Seq[String], json: String)
+      : Map[String, Map[Int, Long]] = {
+    val requested = BusDataSource.parseOffsets(json)
+    // Kafka's contract: a specific-offsets map must cover every
+    // subscribed TopicPartition — a missing entry (or a typo'd
+    // topic, which is an entry for an unsubscribed topic) is an
+    // ERROR, never a silent fall-back.
+    val unknown = requested.keySet -- topics.toSet
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(
+        s"startingOffsets names topics not matched by this source: " +
+          s"${unknown.toSeq.sorted.mkString(", ")} (matched: " +
+          s"${topics.sorted.mkString(", ")})")
+    val missing = topics.flatMap { t =>
+      val have = requested.getOrElse(t, Map.empty[Int, Long]).keySet
+      GraftBus.partitions(root, t).filterNot(have.contains)
+        .map(p => s"$t-$p")
     }
-}
-
-/** Distributed batch read of the bus log: one input partition per
-  * (topic, partition), each read executor-side (a driver-side loop
-  * over `GraftBus.read` would be O(all records) driver I/O). Honors
-  * Kafka's batch options: `startingOffsets` (default earliest) and
-  * `endingOffsets` (default latest), each `earliest`/`latest`/
-  * per-partition JSON with -2/-1 sentinels. */
-final class BusBatch(
-    root: String, subscribe: Option[String], pattern: Option[String],
-    startingOffsets: Option[String], endingOffsets: Option[String])
-    extends Batch {
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    val topics = BusTopics.matched(root, subscribe, pattern)
-    val from = BusTopics.resolveOffsets(
-      root, topics, startingOffsets, "startingOffsets",
-      defaultLatest = false)
-    val until = BusTopics.resolveOffsets(
-      root, topics, endingOffsets, "endingOffsets", defaultLatest = true)
-    (for {
-      t <- topics
-      p <- GraftBus.partitions(root, t)
-      lo = from.getOrElse(t, Map.empty[Int, Long]).getOrElse(p, 0L)
-      hi = until.getOrElse(t, Map.empty[Int, Long])
-        .getOrElse(p, GraftBus.nextOffset(root, t, p))
-      if hi > lo
-    } yield BusInputPartition(root, t, p, lo, hi): InputPartition).toArray
+    if (missing.nonEmpty)
+      throw new IllegalArgumentException(
+        s"startingOffsets must cover all matched topic-partitions; " +
+          s"missing: ${missing.sorted.mkString(", ")}")
+    requested.map { case (t, ps) =>
+      t -> ps.map { case (p, o) =>
+        p -> (o match {
+          case -2L => 0L
+          case -1L => GraftBus.nextOffset(root, t, p)
+          case n if n >= 0 => n
+          case bad => throw new IllegalArgumentException(
+            s"startingOffsets: invalid offset $bad for $t-$p")
+        })
+      }
+    }
   }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    new BusPartitionReaderFactory
 }
 
 /** Micro-batch reader: latestOffset scans the bus directories (the
@@ -300,9 +242,12 @@ final class BusMicroBatchStream(
       // topic set at first start
       case None => BusOffset(Map.empty)
       case Some(s) if s.equalsIgnoreCase("earliest") => BusOffset(Map.empty)
-      case Some(spec) => BusOffset(BusTopics.resolveOffsets(
-        root, matchedTopics, Some(spec), "startingOffsets",
-        defaultLatest = false))
+      case Some(s) if s.equalsIgnoreCase("latest") => latestOffset()
+      case Some(json) if json.startsWith("{") =>
+        BusOffset(BusTopics.specificOffsets(root, matchedTopics, json))
+      case Some(bad) => throw new IllegalArgumentException(
+        s"startingOffsets must be 'earliest', 'latest', or an offset " +
+          s"JSON map, got: $bad")
     }
 
   override def latestOffset(): Offset =
@@ -362,43 +307,23 @@ final class BusPartitionReaderFactory extends PartitionReaderFactory {
   }
 }
 
-/** At-least-once streaming sink with per-row dynamic topic routing —
-  * the Kafka sink contract: rows carry (topic, key, value); epoch
-  * commit is a no-op, so a replayed batch re-appends (redelivery), and
-  * downstream consumers own deduplication. */
-final class BusStreamingWrite(
-    root: String, schema: StructType, defaultTopic: Option[String])
-    extends StreamingWrite {
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    val topicIdx = schema.fieldNames.indexOf("topic")
-    val keyIdx = schema.fieldNames.indexOf("key")
-    val valueIdx = schema.fieldNames.indexOf("value")
-    require(valueIdx >= 0, "graft-bus sink needs a `value` column")
-    require(topicIdx >= 0 || defaultTopic.isDefined,
-      "graft-bus sink needs a `topic` column or option")
-    // standalone case class: the factory ships to executors, so it
-    // must not capture this (non-serializable) Write instance
-    BusWriterFactory(root, schema, topicIdx, keyIdx, valueIdx, defaultTopic)
-  }
-
-  override def commit(
-      epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-  override def abort(
-      epochId: Long, messages: Array[WriterCommitMessage]): Unit = ()
-}
-
 final case class BusCommitMessage() extends WriterCommitMessage
 
-final case class BusWriterFactory(
-    root: String, schema: StructType, topicIdx: Int, keyIdx: Int,
-    valueIdx: Int, defaultTopic: Option[String])
-    extends StreamingDataWriterFactory {
+/** Per-row dynamic topic routing — the Kafka sink contract: rows carry
+  * (topic, key, value); `key` is optional. A standalone case class: the
+  * factory ships to executors, so it must not capture the
+  * (non-serializable) Write. */
+final case class BusWriterFactory(root: String, schema: StructType)
+    extends DataWriterFactory {
+
+  private val topicIdx = schema.fieldNames.indexOf("topic")
+  private val keyIdx = schema.fieldNames.indexOf("key")
+  private val valueIdx = schema.fieldNames.indexOf("value")
+  require(topicIdx >= 0, "graft-bus write needs a `topic` column")
+  require(valueIdx >= 0, "graft-bus write needs a `value` column")
 
   override def createWriter(
-      partitionId: Int, taskId: Long, epochId: Long)
-      : DataWriter[InternalRow] =
+      partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
       private def asString(row: InternalRow, idx: Int): String =
         schema.fields(idx).dataType match {
@@ -406,13 +331,12 @@ final case class BusWriterFactory(
           case StringType => row.getUTF8String(idx).toString
           case other =>
             throw new IllegalArgumentException(
-              s"graft-bus sink column ${schema.fieldNames(idx)} has " +
+              s"graft-bus write column ${schema.fieldNames(idx)} has " +
                 s"unsupported type $other (binary/string only)")
         }
       override def write(row: InternalRow): Unit = {
-        val topic =
-          if (topicIdx >= 0 && !row.isNullAt(topicIdx)) asString(row, topicIdx)
-          else defaultTopic.get
+        require(!row.isNullAt(topicIdx), "graft-bus write: a row has no topic")
+        val topic = asString(row, topicIdx)
         val key =
           if (keyIdx >= 0 && !row.isNullAt(keyIdx)) asString(row, keyIdx)
           else ""

@@ -97,7 +97,7 @@ class CtlSpec extends AnyFunSuite {
       await("a published compaction")(() => state.version >= 1L)
       assert(Files.exists(Paths.get(root, "state", "_format")))
       assert(!graft.streaming.bus.GraftBus.topics(s"$root/bus")
-        .exists(_.startsWith(graft.streaming.Scheduler.STATE_TOPIC_PREFIX)))
+        .exists(_.startsWith("wfRunState__")))
 
       // -- search (variable index; no runs carry this alias yet) and
       // search-alias (metadata name lookup) --

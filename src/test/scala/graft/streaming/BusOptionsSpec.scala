@@ -12,7 +12,8 @@ import graft.streaming.bus.GraftBus
   * multiple topics. Semantics pinned against the Kafka source docs:
   * startingOffsets applies only to a query's FIRST start; checkpoint
   * restarts resume from committed offsets regardless (covered by
-  * BusSchedulerSpec's resume test).
+  * BusSchedulerSpec's resume test). Also the batch write the store
+  * sink sends TSRs through: rows fan out by their `topic` column.
   */
 class BusOptionsSpec extends AnyFunSuite {
 
@@ -130,48 +131,28 @@ class BusOptionsSpec extends AnyFunSuite {
       || Option(ex.getCause).exists(_.getMessage.contains("startingOffsets")))
   }
 
-  // ===== BATCH read (spark.read, not readStream) — the Kafka batch
-  // surface: full log by default, starting/endingOffsets honored, and
-  // a key = <bytes> equality filter pushes into the scan =====
-
-  private def batchRead(
-      root: String, extra: Map[String, String]) = {
-    var reader = spark.read.format("graft-bus").option("path", root)
-    extra.foreach { case (k, v) => reader = reader.option(k, v) }
-    reader.load()
-  }
-
-  test("batch read: full log, distributed, subscribePattern filters") {
+  test("batch write fans rows out by their topic column") {
     import spark.implicits._
-    val root = graft.util.Dirs.scratch("graft-bus-batch").toString
-    (1 to 5).foreach(i => GraftBus.send(root, "bat__a", s"k$i", s"a$i"))
-    (1 to 3).foreach(i => GraftBus.send(root, "bat__b", s"k$i", s"b$i"))
-    GraftBus.send(root, "other", "k", "x")
-    val rows = batchRead(root, Map("subscribePattern" -> "bat__.*"))
-      .selectExpr("topic", "CAST(value AS STRING) AS v")
-      .as[(String, String)].collect().sorted
-    assert(rows.length == 8)
-    assert(rows.count(_._1 == "bat__a") == 5)
-    assert(rows.count(_._1 == "bat__b") == 3)
-  }
+    val root = graft.util.Dirs.scratch("graft-bus-write").toString
+    Seq(("wr__a", "k1", "a1"), ("wr__b", "k2", "b1"), ("wr__a", "k3", "a2"))
+      .toDF("topic", "key", "value")
+      .write.format("graft-bus").option("path", root).mode("append").save()
+    def records(topic: String) = GraftBus.partitions(root, topic)
+      .flatMap(p => GraftBus.read(root, topic, p, 0,
+        GraftBus.nextOffset(root, topic, p)))
+      .map(r => (r.key, r.value)).sorted
+    assert(GraftBus.topics(root) == Seq("wr__a", "wr__b"))
+    assert(records("wr__a") == Seq(("k1", "a1"), ("k3", "a2")))
+    assert(records("wr__b") == Seq(("k2", "b1")))
 
-  test("batch read: starting/endingOffsets bound the range per Kafka") {
-    import spark.implicits._
-    val root = graft.util.Dirs.scratch("graft-bus-batch").toString
-    (0 until 6).foreach(i => GraftBus.send(root, "rng__t", "k", s"v$i"))
-    def vals(extra: Map[String, String]) =
-      batchRead(root, extra ++ Map("subscribe" -> "rng__t"))
-        .selectExpr("CAST(value AS STRING) AS v").as[String].collect().sorted
-    assert(vals(Map.empty).toSeq == (0 until 6).map(i => s"v$i"))
-    assert(vals(Map("startingOffsets" -> """{"rng__t":{"0":2}}""")).toSeq
-      == (2 until 6).map(i => s"v$i"))
-    assert(vals(Map(
-      "startingOffsets" -> """{"rng__t":{"0":1}}""",
-      "endingOffsets" -> """{"rng__t":{"0":4}}""")).toSeq
-      == (1 until 4).map(i => s"v$i"))
-    // sentinels: -2 = earliest, -1 = latest
-    assert(vals(Map("endingOffsets" -> """{"rng__t":{"0":-1}}""")).length == 6)
-    assert(vals(Map("startingOffsets" -> "latest")).isEmpty)
+    val noValue = intercept[Exception] {
+      Seq(("wr__a", "k")).toDF("topic", "key")
+        .write.format("graft-bus").option("path", root).mode("append").save()
+    }
+    val msg = Iterator.iterate[Throwable](noValue)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+    assert(msg.contains("`value` column"), msg)
+    assert(records("wr__a").length == 2, "a rejected frame writes nothing")
   }
 
   test("endingOffsets on a streaming query is rejected (batch-only)") {

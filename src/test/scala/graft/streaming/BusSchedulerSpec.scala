@@ -11,11 +11,12 @@ import graft.streaming.bus.GraftBus
 /** End-to-end S1/S2/S3 over a REAL by-name-resolved transport: events
   * are produced to bus topics, the scheduler consumes them through
   * `format("graft-bus")` (resolved via DataSourceRegister — the same
-  * service-loader path that resolves `format("kafka")`), TSRs land on
-  * per-TaskDef topics through the dynamic-topic sink, a loopback
-  * worker polls the task topic like the reference TaskWorker polls
-  * Kafka (TaskWorker.java:102-145) and produces TASK_EVENTs back, and
-  * run-state snapshots land on the per-spec state topic. Offsets flow
+  * service-loader path that resolves `format("kafka")`), the store sink
+  * ([[Scheduler.busStoreSink]]) writes TSRs to per-TaskDef topics
+  * through the same connector, a loopback worker polls the task topic
+  * like the reference TaskWorker polls Kafka (TaskWorker.java:102-145)
+  * and produces TASK_EVENTs back, and run-state snapshots land in the
+  * [[CompactedStateStore]] that GraftApi and Ctl read. Offsets flow
   * through checkpoint + progress in Kafka's exact JSON shape, which the
   * ReadYourWrites barrier parses per-partition.
   *
@@ -40,18 +41,28 @@ class BusSchedulerSpec extends AnyFunSuite {
       edges = Seq(edge("n0", "n1"), edge("n1", "n2"))))
 
   private def eventsTopic = s"wfEvents__${spec.name}"
-  private def stateTopic = s"${Scheduler.STATE_TOPIC_PREFIX}${spec.name}"
 
   private def now() = System.currentTimeMillis()
+
+  /** The latest snapshot of `id` in the store, if one has landed. */
+  private def storedState(
+      store: CompactedStateStore, id: String): Option[WFRunState] = {
+    import spark.implicits._
+    if (store.readFootprint.isEmpty) None
+    else StateTable.byId(store.read(spark), id).select("json").as[String]
+      .collect().headOption.map(StateCodec.decode)
+  }
 
   test("basic run end-to-end over bus topics, duplicates deduped by guid") {
     val root = graft.util.Dirs.scratch("graft-bus").toString
     val ckpt = graft.util.Dirs.scratch("graft-bus-ckpt").toString
+    val store = new CompactedStateStore(
+      graft.util.Dirs.scratch("graft-bus-state").toString)
 
     // S1 → fold → S2+S3: the production topology, by-name connector
     val events = Scheduler.busEventSource(spark, root, "wfEvents__.*")
     val outputs = Scheduler(events, Map(spec.name -> spec))
-    val query = Scheduler.busWireSink(outputs, root, ckpt)
+    val query = Scheduler.busStoreSink(outputs, root, store, ckpt)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
 
@@ -108,24 +119,25 @@ class BusSchedulerSpec extends AnyFunSuite {
         EventCodec.encodeWFEvent(startEvent))
 
       // read-your-writes over Kafka-shaped per-partition offsets: once
-      // the barrier returns, the first snapshot MUST already be on the
-      // state topic
+      // the barrier returns, both writes of the batch that folded the
+      // start are visible — the first snapshot in the store and the
+      // first TSR on its task topic (the connector job inside
+      // foreachBatch finishes before the batch commits)
       ReadYourWrites.awaitProcessed(query, eventsTopic, part, off, 0, 30000L)
-      assert(GraftBus.nextOffset(root, stateTopic, 0) +
-        GraftBus.partitions(root, stateTopic)
-          .map(p => GraftBus.nextOffset(root, stateTopic, p)).sum > 0,
-        "barrier returned but no snapshot visible on the state topic")
+      assert(storedState(store, "bus-run-1").nonEmpty,
+        "barrier returned but no snapshot visible in the store")
+      val firstTsrs = GraftBus.partitions(root, "echo_task").flatMap(p =>
+        GraftBus.read(root, "echo_task", p, 0,
+          GraftBus.nextOffset(root, "echo_task", p)))
+      assert(firstTsrs.map(_.key) == Seq("bus-run-1"),
+        s"barrier returned but the first TSR is not on echo_task: $firstTsrs")
+      assert(EventCodec.decodeTsr(firstTsrs.head.value)
+        .variableSubstitutions.get("thing").contains("one"))
 
       worker.start()
 
-      // poll the state topic for the COMPLETED snapshot
-      def latestState(): Option[WFRunState] = {
-        val snaps = GraftBus.partitions(root, stateTopic).flatMap(p =>
-          GraftBus.read(root, stateTopic, p, 0,
-            GraftBus.nextOffset(root, stateTopic, p)))
-        if (snaps.isEmpty) None
-        else Some(StateCodec.decode(snaps.maxBy(_.offset).value))
-      }
+      // poll the store for the COMPLETED snapshot
+      def latestState(): Option[WFRunState] = storedState(store, "bus-run-1")
       val deadline = now() + 30000
       var done = false
       while (!done && now() < deadline) {
@@ -141,8 +153,9 @@ class BusSchedulerSpec extends AnyFunSuite {
       assert(thr.taskRuns.map(_.stdout).toSeq == Seq("one", "two", "three"))
       assert(thr.taskRuns.forall(_.status == Status.COMPLETED))
 
-      // the TSR topic really is the per-TaskDef fan-out topic
-      assert(GraftBus.topics(root).contains("echo_task"))
+      // events and TSRs are the only bus topics: the TSR topic is the
+      // per-TaskDef fan-out topic, and run state never reaches the bus
+      assert(GraftBus.topics(root) == Seq("echo_task", eventsTopic))
       // and the source's committed offsets are Kafka-shaped JSON
       val lastEnd = query.recentProgress.reverseIterator
         .flatMap(p => p.sources.headOption.flatMap(s => Option(s.endOffset)))
@@ -169,11 +182,14 @@ class BusSchedulerSpec extends AnyFunSuite {
     * run executes over real bus topics, the external event arrives as
     * the LITERAL fixture bytes (SDK envelope: ISO timestamps, payload
     * as a JSON string, threadId -1 broadcast), and the final state is
-    * read back through the Q1/Q2 snapshot query surface. */
+    * read back from the store through the Q1/Q2 snapshot query
+    * surface. */
   test("wire fixtures end-to-end: deploy basic_wf.json, fold over bus, query") {
     val root = graft.util.Dirs.scratch("graft-bus-wire").toString
     val ckpt = graft.util.Dirs.scratch("graft-bus-wire-ckpt").toString
     val metaRoot = graft.util.Dirs.scratch("graft-bus-wire-meta").toString
+    val state = new CompactedStateStore(
+      graft.util.Dirs.scratch("graft-bus-wire-state").toString)
 
     // deploy the SDK-compiled documents through the CRUD surface
     val store = new MetadataStore(spark, metaRoot)
@@ -184,11 +200,10 @@ class BusSchedulerSpec extends AnyFunSuite {
     assert(specs.keySet == Set("my_workflow"))
 
     val wireEventsTopic = s"wfEvents__${wfSpec.name}"
-    val wireStateTopic = s"${Scheduler.STATE_TOPIC_PREFIX}${wfSpec.name}"
 
     val events = Scheduler.busEventSource(spark, root, "wfEvents__.*")
     val outputs = Scheduler(events, specs)
-    val query = Scheduler.busWireSink(outputs, root, ckpt)
+    val query = Scheduler.busStoreSink(outputs, root, state, ckpt)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
 
@@ -232,13 +247,7 @@ class BusSchedulerSpec extends AnyFunSuite {
     })
     worker.setDaemon(true)
 
-    def latestState(): Option[WFRunState] = {
-      val snaps = GraftBus.partitions(root, wireStateTopic).flatMap(p =>
-        GraftBus.read(root, wireStateTopic, p, 0,
-          GraftBus.nextOffset(root, wireStateTopic, p)))
-      if (snaps.isEmpty) None
-      else Some(StateCodec.decode(snaps.maxBy(_.offset).value))
-    }
+    def latestState(): Option[WFRunState] = storedState(state, "wire-run-1")
     def awaitState(what: String)(pred: WFRunState => Boolean): Unit = {
       val deadline = now() + 30000
       while (!latestState().exists(pred) && now() < deadline)
@@ -276,14 +285,9 @@ class BusSchedulerSpec extends AnyFunSuite {
       assert(thr.variables("my_name_var") == "Obi-Wan")
       assert(thr.taskRuns.last.stdout == "Hello there, Obi-Wan!")
 
-      // snapshot query surface over the state topic (Q1 + Q2/Q9)
+      // snapshot query surface over the store (Q1 + Q2/Q9)
       import spark.implicits._
-      val snaps = GraftBus.partitions(root, wireStateTopic).flatMap(p =>
-        GraftBus.read(root, wireStateTopic, p, 0,
-          GraftBus.nextOffset(root, wireStateTopic, p)))
-        .map(r => (r.key, r.value, r.offset))
-        .toDF("wfRunId", "json", "seq")
-      val latest = StateTable.latest(snaps)
+      val latest = state.read(spark)
       assert(StateTable.byId(latest, "wire-run-1").count() == 1)
       assert(StateTable.searchByVariable(latest, "my_name_var", "Obi-Wan")
         .as[String].collect().toSeq == Seq("wire-run-1"))

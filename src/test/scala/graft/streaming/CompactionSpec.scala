@@ -107,7 +107,7 @@ class CompactionSpec extends AnyFunSuite {
 
     val input = MemoryStream[WFEvent]
     val outputs = Scheduler(input.toDS(), Map(spec.name -> spec))
-    val query = Scheduler.storeSink(outputs, busRoot, store, ckpt,
+    val query = Scheduler.busStoreSink(outputs, busRoot, store, ckpt,
       compactEvery = 1L)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
@@ -179,9 +179,10 @@ class CompactionSpec extends AnyFunSuite {
     val (st, _) = Simulator.run(spec, Map("who" -> "Obi-Wan"), runId = "raw-1")
     val dir = graft.util.Dirs.scratch("graft-compact-raw").toString
     val store = new CompactedStateStore(dir)
-    // the bus state-topic shape: a real snapshot, but no serving columns
+    // the old `wfRunState__*` topic record shape: a real snapshot, but no
+    // serving columns
     val raw = Seq(("raw-1", StateCodec.encode(st), 0L,
-      s"${Scheduler.STATE_TOPIC_PREFIX}${spec.name}"))
+      s"wfRunState__${spec.name}"))
       .toDF("wfRunId", "json", "seq", "topic")
     val e = intercept[IllegalArgumentException](store.append(raw))
     Seq("wfSpecName", "status", "aliases").foreach(c =>

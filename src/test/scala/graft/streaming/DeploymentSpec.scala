@@ -85,8 +85,9 @@ class DeploymentSpec extends AnyFunSuite {
       assert(st.threadRuns(0).taskRuns(0).stdout == "Hello there, Obi-Wan!")
 
       // the README search demo over materialized snapshots (Q2/Q9)
-      val snapDf = finals.toSeq.map { case (id, j) => (id, 1L, j) }
-        .toDF("wfRunId", "seq", "json")
+      val snapDf = finals.toSeq
+        .map { case (id, j) => (id, 1L, j, StateCodec.decode(j).aliasMap) }
+        .toDF("wfRunId", "seq", "json", "aliases")
       val hit = StateTable.searchByVariable(
         StateTable.latest(snapDf), "who", "Obi-Wan")
       assert(hit.collect().map(_.getString(0)).toSeq == Seq("deploy-run-1"))

@@ -10,7 +10,7 @@ import graft.streaming.bus.GraftBus
 /** The reference's API surface, exercised route-by-route through
   * [[GraftApi]] over the REAL bus topology (event and task topics on
   * the bus, run state in the [[CompactedStateStore]] the scheduler's
-  * [[Scheduler.storeSink]] writes): POST resources (incl. the
+  * [[Scheduler.busStoreSink]] writes): POST resources (incl. the
   * validation-rejection and not-found paths), POST /WFRun, the
   * external-event route, stop/resume, point GET in the SDK WFRunSchema
   * shape, and alias search — every response in the LHRPCResponse
@@ -73,7 +73,7 @@ class GraftApiSpec extends AnyFunSuite {
     // deploy = the streaming query picks up deployedSpecs (Q6)
     val events = Scheduler.busEventSource(spark, busRoot, "wfEvents__.*")
     val outputs = Scheduler(events, store.deployedSpecs())
-    val query = Scheduler.storeSink(outputs, busRoot, comp, ckpt)
+    val query = Scheduler.busStoreSink(outputs, busRoot, comp, ckpt)
       .trigger(Trigger.ProcessingTime("200 milliseconds"))
       .start()
 

@@ -142,7 +142,7 @@ class ServingCacheSpec extends AnyFunSuite {
     val (_, store) = newStore("graft-serving-stream")
     val cache = new ServingCache(store)
     val input = MemoryStream[SchedulerOut]
-    val query = Scheduler.storeSink(input.toDS(),
+    val query = Scheduler.busStoreSink(input.toDS(),
       graft.util.Dirs.scratch("graft-serving-bus").toString, store,
       graft.util.Dirs.scratch("graft-serving-ckpt").toString).start()
     try {

@@ -136,13 +136,17 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // README search demo over the materialized snapshot log (Q2/Q9)
     import spark.implicits._
-    val snapDf = Seq(("stream-run-1", 1L, StateCodec.encode(finalState)))
-      .toDF("wfRunId", "seq", "json")
+    val snapDf = Seq(("stream-run-1", 1L, StateCodec.encode(finalState),
+      finalState.aliasMap)).toDF("wfRunId", "seq", "json", "aliases")
     val latest = StateTable.latest(snapDf)
     val hit = StateTable.searchByVariable(latest, "my_name_var", "Obi-Wan")
     assert(hit.collect().map(_.getString(0)).toSeq == Seq("stream-run-1"))
     val miss = StateTable.searchByVariable(latest, "my_name_var", "Grievous")
     assert(miss.collect().isEmpty)
+    // search is columnar only: a frame without `aliases` is rejected
+    val noAliases = intercept[IllegalArgumentException](
+      StateTable.searchByVariable(latest.drop("aliases"), "my_name_var", "x"))
+    assert(noAliases.getMessage.contains("`aliases`"), noAliases.getMessage)
   }
 
   test("streaming: sleep timer fires via processing-time timeout") {
